@@ -70,7 +70,10 @@ def candidate_bound_check(
     ``rows_per_input=<bands>`` and the guard derives n inside the SAME
     aggregate instead of the caller paying a separate ``count()`` job
     (which was the job that materialized the persisted sig table; that
-    work now happens under this one job instead of two).
+    work now happens under this one job instead of two).  A Σ|bucket|
+    that is not a multiple of ``rows_per_input`` breaks that invariant
+    (a filtered banding, a wrong ``rows_per_input``) and raises
+    ValueError rather than guarding with an understated n.
     """
     agg = (
         bucketed.groupBy(*bucket_cols)
@@ -85,7 +88,14 @@ def candidate_bound_check(
     if n_rows is None:
         if rows_per_input is None:
             raise ValueError(f"{op}: n_rows=None requires rows_per_input")
-        n_rows = 0 if agg["t"] is None else int(agg["t"]) // int(rows_per_input)
+        total_rows = 0 if agg["t"] is None else int(agg["t"])
+        n_rows, rem = divmod(total_rows, int(rows_per_input))
+        if rem:
+            raise ValueError(
+                f"{op}: {total_rows:,} banded rows is not a multiple of "
+                f"rows_per_input={rows_per_input}; the banding must emit "
+                f"exactly rows_per_input rows per input row, or pass n_rows"
+            )
     bound = max(float(min_candidates), factor * float(n_rows))
     if total is not None and float(total) > bound:
         raise RuntimeError(

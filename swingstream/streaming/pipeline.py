@@ -134,24 +134,6 @@ def combine_partials(batch_df: DataFrame, params: SwingParams) -> DataFrame:
     )
 
 
-def watermark_dropped_rows(query) -> int:
-    """Sum of rows dropped as too-late across the query's progress events
-    (T7 observability).  recentProgress yields StreamingQueryProgress
-    objects in Spark 4.x — parse their json payload, same as
-    run_feature_query."""
-    import json as _json
-
-    total = 0
-    for p in query.recentProgress:
-        try:
-            j = _json.loads(p.json) if not isinstance(p, dict) else p
-        except Exception:
-            continue
-        for op in j.get("stateOperators", []):
-            total += op.get("numRowsDroppedByWatermark", 0)
-    return total
-
-
 def run_feature_query(
     spark: SparkSession,
     pages_path: str,

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 
@@ -165,6 +167,22 @@ def test_lsh_candidate_guard_trips_on_degenerate_corpus(spark):
     # because a 400-doc corpus can't reach the 10M absolute floor
     import swingstream.operators.dedup as dd
     assert dd.candidate_bound_check.__defaults__[0] == 50.0
+
+
+@pytest.mark.parametrize("banded_rows, raises", [(12, False), (13, True)])
+def test_candidate_guard_derived_n_needs_whole_inputs(spark, banded_rows,
+                                                      raises):
+    """With n_rows=None the guard derives n = Σ|bucket| / rows_per_input;
+    a total that is not a multiple means the banding did not emit exactly
+    rows_per_input rows per input, so the guard refuses to floor it."""
+    import swingstream.operators.dedup as dd
+
+    bucketed = spark.createDataFrame(
+        [(i % 5,) for i in range(banded_rows)], "band int")
+    with (pytest.raises(ValueError, match="not a multiple of rows_per_input")
+          if raises else contextlib.nullcontext()):
+        dd.candidate_bound_check(bucketed, ["band"], None, "probe",
+                                 rows_per_input=4)
 
 
 @pytest.fixture(autouse=True)

@@ -14,13 +14,11 @@ import swingstream
 
 JOB = """
 import json
-from pyspark.sql import SparkSession
 
-spark = (SparkSession.builder.appName("swingstream-submit-smoke")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.shuffle.partitions", "16")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .getOrCreate())
+from swingstream.session import get_spark
+
+spark = get_spark(master="local[4]", app_name="swingstream-submit-smoke",
+                  shuffle_partitions=16)
 
 from swingstream.config import SwingParams
 from swingstream.fixtures import PagesSpec, gen_pages
@@ -33,8 +31,11 @@ pages = pages_from_pandas(
 params = SwingParams(window_width=6, step_size=1, min_lag=1, max_lag=2,
                      method="lasso", alpha=0.05)
 out = pages_pipeline(pages, params, salted=True).collect()
-print("RESULT " + json.dumps({"rows": len(out),
-                              "cols": sorted(out[0].asDict().keys())}))
+conf = spark.sparkContext.getConf()
+print("RESULT " + json.dumps({
+    "rows": len(out), "cols": sorted(out[0].asDict().keys()),
+    "daemon": conf.get("spark.python.daemon.module"),
+    "worker_path": conf.get("spark.executorEnv.PYTHONPATH")}))
 """
 
 
@@ -60,7 +61,7 @@ def test_spark_submit_py_files(tmp_path):
     proc = subprocess.run(
         ["spark-submit", "--master", "local[4]", "--driver-memory", "3g",
          "--py-files", str(zip_path), str(job)],
-        capture_output=True, text=True, timeout=600, env=env,
+        capture_output=True, text=True, timeout=600, env=env, cwd=tmp_path,
     )
     result_lines = [ln for ln in proc.stdout.splitlines()
                     if ln.startswith("RESULT ")]
@@ -70,3 +71,7 @@ def test_spark_submit_py_files(tmp_path):
     res = json.loads(result_lines[0][len("RESULT "):])
     assert res["rows"] > 0
     assert {"parent", "child", "mean_rank"} <= set(res["cols"])
+    # the workers came from the package's daemon, imported from the
+    # shipped zip: the job runs in tmp_path, outside any checkout
+    assert res["daemon"] == "swingstream.pydaemon"
+    assert str(zip_path) in res["worker_path"].split(os.pathsep)
