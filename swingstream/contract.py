@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from swingstream.config import SwingParams
 from swingstream.functions import textfns as T
+from swingstream.operators.dedup import _fr6
 
 STOP_EN = T.STOPWORDS["en"]
 
@@ -74,13 +75,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _sql_list(words: list[str]) -> str:
     return "[" + ", ".join(f"'{w}'" for w in words) + "]"
-
-
-def _fr6(c):
-    """floor-based half-up rounding to 6 dp — identical double arithmetic
-    in Spark and DuckDB (plain ROUND disagrees at half-boundaries:
-    Spark rounds the shortest decimal repr, DuckDB the exact double)."""
-    return F.floor(c * 1000000.0 + 0.5) / 1000000.0
 
 
 # Staged-intermediate oracles: operators whose FIRST stage is xxhash64

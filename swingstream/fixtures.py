@@ -151,17 +151,6 @@ def gen_series(
     return pd.concat(frames, ignore_index=True), net
 
 
-def series_long(wide: pd.DataFrame) -> pd.DataFrame:
-    """Long-form variant (series_key, ts, feature, value) per FIXTURES.md B."""
-    gcols = [c for c in wide.columns if c.startswith("g")]
-    return wide.melt(
-        id_vars=["series_key", "bucket_idx", "ts"],
-        value_vars=gcols,
-        var_name="feature",
-        value_name="value",
-    )
-
-
 # ----------------------------------------------------------------------------
 # Fixture A: pages stream table
 # ----------------------------------------------------------------------------

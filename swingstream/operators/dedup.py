@@ -36,7 +36,9 @@ from pyspark.sql import functions as F
 
 
 def _fr6(c: Column) -> Column:
-    """floor-based half-up 6dp rounding (cross-engine identical doubles)."""
+    """floor-based half-up rounding to 6 dp — identical double arithmetic
+    in Spark and DuckDB (plain ROUND disagrees at half-boundaries:
+    Spark rounds the shortest decimal repr, DuckDB the exact double)."""
     return F.floor(c * 1000000.0 + 0.5) / 1000000.0
 
 _MERSENNE31 = 2_147_483_647  # 2^31 - 1

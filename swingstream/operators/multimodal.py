@@ -54,18 +54,6 @@ MEDIA_FEATURES_SCHEMA = StructType(
 )
 
 
-def decode_media(payload: bytes, kind: str):  # pragma: no cover - stub
-    """Real codec entry point — deliberately unimplemented in-sandbox.
-
-    A deployment drops in PIL / torchaudio / pyav here; the Spark-side
-    plumbing (schema, batching, partitioning) is identical either way.
-    """
-    raise NotImplementedError(
-        f"no {kind} codec in this environment; use fake_features for the "
-        "deterministic test double"
-    )
-
-
 def fake_features(payload: bytes, dim: int = 8) -> np.ndarray:
     """Deterministic fake 'decoded' feature vector from payload bytes."""
     h = hashlib.blake2b(payload, digest_size=dim * 8).digest()

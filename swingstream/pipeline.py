@@ -13,7 +13,7 @@ final small rank aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from swingstream.config import SwingParams
@@ -188,9 +188,3 @@ def session_series_batch(pages: DataFrame, params: SwingParams) -> DataFrame:
 def swing_sessions_batch(pages: DataFrame, params: SwingParams) -> DataFrame:
     """Session-variant batch pipeline: pages -> per-session edge table."""
     return swing_edges(session_series_batch(pages, params), params)
-
-
-def load_pages(spark: SparkSession, path: str) -> DataFrame:
-    from swingstream.sources.pages import PAGES_SCHEMA
-
-    return spark.read.schema(PAGES_SCHEMA).parquet(path)

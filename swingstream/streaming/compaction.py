@@ -76,12 +76,6 @@ from swingstream.operators.dedup import (
 from swingstream.sources.catalog import IcebergLiteTable
 
 
-def _commit_dir_label(batch_id) -> str:
-    """Data-dir name for a commit — must mirror catalog.commit()."""
-    b = str(batch_id)
-    return f"batch-{int(b):010d}" if b.isdigit() else f"batch-{b}"
-
-
 def _guard_and_record_intent(
     table: IcebergLiteTable, cid, replaces: list, active_ids: list,
     scope: str, targeted: bool,
@@ -98,7 +92,7 @@ def _guard_and_record_intent(
     (r5 advice: a crashed targeted pass retried as full-history that
     happens to hit the same replaces set would adopt the stale rows)."""
     intent_path = table._manifest_path(cid) + ".intent"
-    orphan_dir = os.path.join(table.data_dir, _commit_dir_label(cid))
+    orphan_dir = os.path.join(table.data_dir, table.batch_dir(cid))
     if os.path.isdir(orphan_dir):
         if not os.path.exists(intent_path):
             raise RuntimeError(
@@ -232,7 +226,7 @@ def compact_dedup(
         # re-keyed; the loser set is localCheckpoint'ed because it
         # drives two actions (the affected-commit probe and the
         # rewrite) and is tiny (dup-cluster members only, ≪ corpus).
-        by_dir = {_commit_dir_label(m["batch_id"]): m for m in active}
+        by_dir = {table.batch_dir(m["batch_id"]): m for m in active}
         labels = dedup_clusters(pairs)
         losers = (
             labels.where(F.col("id") != F.col("cluster_id"))
@@ -337,7 +331,7 @@ def compact_strip_lines(
     ).localCheckpoint(eager=True)  # drives the affected-doc probe AND the
     # rewrite; small (only > max_docs_per_line digests survive)
 
-    by_dir = {_commit_dir_label(m["batch_id"]): m for m in active}
+    by_dir = {table.batch_dir(m["batch_id"]): m for m in active}
     tagged = docs.select(
         "*",
         F.element_at(
@@ -428,7 +422,7 @@ def compact_window_dedup(
     ).localCheckpoint(eager=True)  # drives the affected probe AND the
     # rewrite; small (only repeated-span positions survive)
 
-    by_dir = {_commit_dir_label(m["batch_id"]): m for m in active}
+    by_dir = {table.batch_dir(m["batch_id"]): m for m in active}
     tagged = docs.select(
         "*",
         F.element_at(

@@ -132,33 +132,6 @@ def session_features_stream(pages: DataFrame, params: SwingParams) -> DataFrame:
     )
 
 
-def run_session_feature_query(
-    spark,
-    pages_path: str,
-    table_root: str,
-    checkpoint: str,
-    params: SwingParams,
-    max_files_per_trigger: int = 4,
-) -> IcebergLiteTable:
-    """Query 1 (session variant) to completion with exactly-once commits."""
-    table = IcebergLiteTable(table_root)
-    pages = read_pages_stream(spark, pages_path, max_files_per_trigger)
-    feats = session_features_stream(pages, params)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit(batch_id, batch_df, "session_start", n_files=1)
-
-    q = (
-        feats.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return table
-
-
 def make_session_state_fn(params: SwingParams, names: list[str]):
     """Per-host scoring over the session SEQUENCE: arriving finalized
     sessions (start-ordered within a batch after an explicit sort, and
@@ -238,22 +211,6 @@ def start_session_scoring_query(
     else:
         writer = writer.trigger(processingTime="250 milliseconds")
     return writer.start(), table
-
-
-def run_session_scoring_query(
-    spark,
-    staging_data_dir: str,
-    out_root: str,
-    checkpoint: str,
-    params: SwingParams,
-    names: list[str],
-) -> IcebergLiteTable:
-    """Query 2 (session variant) to completion over staged session rows."""
-    q, table = start_session_scoring_query(
-        spark, staging_data_dir, out_root, checkpoint, params, names
-    )
-    q.awaitTermination()
-    return table
 
 
 def run_session_pipeline(
