@@ -675,34 +675,13 @@ FROM events ORDER BY event_id
 """
 
 
-def q_range_window(spark, sf):
-    _prep(spark)
-    e = _t(spark, sf, "events").withColumn(
-        "epoch_s", F.unix_timestamp("ts").cast("long")
-    )
-    w = Window.partitionBy("user_id").orderBy("epoch_s").rangeBetween(-600, 0)
-    return (
-        e.withColumn("sum_10min", F.round(F.sum("value").over(w), 6))
-        .select("event_id", "user_id", "sum_10min")
-        .orderBy("event_id")
-    )
-
-
-SQL_RANGE_WINDOW = """
-SELECT event_id, user_id,
-       ROUND(SUM(value) OVER (PARTITION BY user_id ORDER BY epoch_s
-             RANGE BETWEEN 600 PRECEDING AND CURRENT ROW), 6) AS sum_10min
-FROM (SELECT *, CAST(FLOOR(epoch(ts)) AS BIGINT) AS epoch_s FROM events)
-ORDER BY event_id
-"""
-
-
 def q_window_frames(spark, sf):
     """r6 merge of the former q_moving_avg + q_range_window (one window
     slot, same hash coverage of BOTH frame types): the ROWS-frame moving
     average and the RANGE-frame 10-minute sum side by side over events.
-    The standalone functions stay defined (unregistered) so the frozen
-    bench headline set keeps its round-comparable per-query walls."""
+    The standalone q_moving_avg stays defined (unregistered) so the
+    frozen bench headline set keeps its round-comparable per-query
+    walls."""
     _prep(spark)
     e = _t(spark, sf, "events").withColumn(
         "epoch_s", F.unix_timestamp("ts").cast("long")
@@ -754,74 +733,14 @@ ORDER BY event_id
 """
 
 
-def q_latest_event_per_user(spark, sf):
-    _prep(spark)
-    from swingstream.operators.asof import latest_version
-
-    e = _t(spark, sf, "events").withColumn(
-        "_ord", F.struct(F.col("ts"), F.col("event_id"))
-    )
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "event_id", "value")
-        .orderBy("user_id")
-    )
-
-
-SQL_LATEST_EVENT = """
-SELECT user_id, event_id, value FROM (
-  SELECT user_id, event_id, value,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events)
-WHERE rn = 1 ORDER BY user_id
-"""
-
-
-def q_asof_last_purchase(spark, sf):
-    _prep(spark)
-    from swingstream.operators.asof import asof_last_before
-
-    e = _t(spark, sf, "events")
-    out = asof_last_before(
-        e.orderBy("ts", "event_id"),
-        "user_id",
-        "ts",
-        "value",
-        mark_expr=F.col("event_type") == "purchase",
-    )
-    # deterministic window order: redo with explicit (ts, event_id) order
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = F.when(F.col("event_type") == "purchase", F.col("value"))
-    return (
-        e.withColumn("last_purchase", F.last(marked, ignorenulls=True).over(w))
-        .select("event_id", "user_id", "last_purchase")
-        .orderBy("event_id")
-    )
-
-
-SQL_ASOF = """
-SELECT event_id, user_id,
-       LAST_VALUE(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
-         OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_purchase
-FROM events ORDER BY event_id
-"""
-
-
 def q_asof_latest(spark, sf):
     """r6 merge of the former q_asof_last_purchase + q_latest_event_per_user
     (one window slot, both as-of shapes in one hash-checked plan): every
     event's as-of last-purchase value JOINED with its user's
     latest-version event (broadcast — ≤ |users| rows).  Both window
     operators (ignore-nulls last over an open frame; row_number
-    latest-version) stay in the plan; the standalone fns remain defined.
-    Slot spent on the oracle-backed q_docs_pack_blocks."""
+    latest-version) stay in the plan.  Slot spent on the oracle-backed
+    q_docs_pack_blocks."""
     _prep(spark)
     e = _t(spark, sf, "events")
     w_asof = (
@@ -976,22 +895,6 @@ ORDER BY win_kind, win_start, event_type
 """
 
 
-def q_session_window_events(spark, sf):
-    _prep(spark)
-    e = _t(spark, sf, "events")
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("win"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-        )
-        .orderBy("user_id", "session_start")
-    )
-
-
 SQL_SESSION_WINDOW = """
 SELECT user_id, MIN(ts) AS session_start,
        MAX(ts) + INTERVAL 30 MINUTE AS session_end,
@@ -1022,8 +925,8 @@ def q_session_shapes(spark, sf):
     gap-sessionizer (asof.session_stats, '>' gap, end = last event) and
     Spark's native session_window aggregation ('>=' gap, end = last
     event + gap) tagged into one aligned schema — both physical plans
-    survive in the union; the standalone fns stay for the frozen bench
-    headline.  Slot freed for the oracle-backed q_docs_pii."""
+    survive in the union; the standalone q_sessions stays for the frozen
+    bench headline.  Slot freed for the oracle-backed q_docs_pii."""
     _prep(spark)
     from pyspark.sql.window import Window
 
@@ -1318,26 +1221,6 @@ ORDER BY d.doc_id
 """
 
 
-def q_docs_digest_map(spark, sf):
-    _prep(spark)
-    d = _t(spark, sf, "documents")
-    return (
-        d.groupBy(F.md5("text").alias("digest"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_copies"),
-            F.min("doc_id").alias("keep_id"),
-        )
-        .orderBy("digest")
-    )
-
-
-SQL_DIGEST_MAP = """
-SELECT md5(text) AS digest, CAST(COUNT(*) AS BIGINT) AS n_copies,
-       MIN(doc_id) AS keep_id
-FROM documents GROUP BY 1 ORDER BY digest
-"""
-
-
 def q_docs_ngram_jaccard(spark, sf):
     _prep(spark)
     from swingstream.operators.dedup import ngram_jaccard_pairs
@@ -1362,38 +1245,11 @@ ORDER BY id_a, id_b
 """
 
 
-def q_docs_fingerprint(spark, sf):
-    """Document fingerprinting (rolling n-gram digest): per doc, the
-    distinct-shingle count and the min-digest fingerprint."""
-    _prep(spark)
-    d = _t(spark, sf, "documents")
-    sh = T.shingle_digests(F.col("text"), 3)
-    return d.select(
-        "doc_id",
-        F.size(F.array_distinct(sh)).cast("long").alias("n_shingles"),
-        T.doc_fingerprint(F.col("text"), 3).alias("fingerprint"),
-    ).orderBy("doc_id")
-
-
-SQL_DOCS_FINGERPRINT = """
-SELECT doc_id,
-       CAST(len(list_distinct(sh)) AS BIGINT) AS n_shingles,
-       list_min(sh) AS fingerprint
-FROM (
-  SELECT doc_id,
-         list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-                        i -> md5(concat_ws(' ', t[i], t[i+1], t[i+2]))) AS sh
-  FROM (SELECT doc_id, string_split_regex(TRIM(LOWER(text)), '\\s+') AS t
-        FROM documents))
-ORDER BY doc_id
-"""
-
-
 def q_docs_content_ids(spark, sf):
     """r7 merge of q_docs_digest_map + q_docs_fingerprint (identical
     operator coverage — md5 content-identity grouping AND shingle
-    fingerprinting — in one hash-checked per-doc result; the standalone
-    fns stay defined).  Slot freed for the oracle-backed q_docs_dsir."""
+    fingerprinting — in one hash-checked per-doc result).  Slot freed
+    for the oracle-backed q_docs_dsir."""
     _prep(spark)
     d = _t(spark, sf, "documents")
     dm = d.groupBy(F.md5("text").alias("digest")).agg(
@@ -1884,14 +1740,6 @@ WHERE rk <= 5 ORDER BY query_id, rk
 """
 
 
-def q_emb_neardup(spark, sf):
-    _prep(spark)
-    from swingstream.operators.similarity import neardup_pairs_cosine
-
-    v = _fan(spark, _t(spark, sf, "embeddings"))  # r8: pair scan off 1 task
-    return neardup_pairs_cosine(v, threshold=0.3)
-
-
 SQL_EMB_NEARDUP = """
 WITH base AS (
   SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
@@ -1915,8 +1763,8 @@ def q_emb_cosine(spark, sf):
     all-pairs near-dup threshold scan tagged into one aligned schema —
     both physical plans survive in the union (rk=0 marks neardup rows:
     a NULL BIGINT would float-coerce in pandas and break the dtype-
-    exact hash).  Standalone fns stay for the frozen bench headline.
-    Slot freed for the oracle-backed q_docs_lm_ppl."""
+    exact hash).  The standalone q_emb_topk stays for the frozen bench
+    headline.  Slot freed for the oracle-backed q_docs_lm_ppl."""
     _prep(spark)
     from swingstream.operators.similarity import (
         brute_force_topk,
@@ -2045,9 +1893,8 @@ def q_docs_jaccard_pairs(spark, sf):
     """r7 merge of q_docs_ngram_jaccard + q_docs_ngram_jaccard_lsh
     (identical operator coverage — exact lang-blocked token-Jaccard AND
     its MinHash-band scale path — in one hash-checked result with a
-    ``mode`` discriminator; the standalone fns stay defined for the
-    frozen bench headline).  Slot freed for the oracle-backed
-    q_docs_window_dedup."""
+    ``mode`` discriminator; it runs the two standalone fns).  Slot freed
+    for the oracle-backed q_docs_window_dedup."""
     merged = q_docs_ngram_jaccard(spark, sf).withColumn(
         "mode", F.lit("exact")
     ).unionByName(
@@ -3003,8 +2850,9 @@ ORDER BY e.doc_id
 # q_moving_avg+q_range_window -> q_window_frames, and
 # q_tumbling_events+q_sliding_events -> q_event_time_windows (each merge
 # keeps both physical operators/frame/window shapes in one hash-checked
-# plan; every merged-out standalone fn stays DEFINED because bench.py's
-# frozen headline set resolves registry-or-module).  The freed slots
+# plan; a merged-out standalone fn stays defined only where a merged
+# query runs it or bench.py's frozen headline set, which resolves
+# registry-or-module, names it).  The freed slots
 # went to q_docs_decontam, q_docs_sample, q_docs_pack, and the PROMOTED
 # q_docs_line_dedup (md5 is DuckDB-expressible, so its oracle needs no
 # staging).  r7 merges: q_docs_quality+q_docs_langid ->
@@ -3043,18 +2891,17 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_orders_by_month": q_orders_by_month,
     "q_distinct_users": q_distinct_users,
     # r6: q_moving_avg+q_range_window merged (ROWS + RANGE frames in one
-    # hash-checked plan; the standalone fns stay for the frozen bench
-    # headline) — slot freed for the oracle-backed q_docs_pack below
+    # hash-checked plan; the standalone q_moving_avg stays for the frozen
+    # bench headline) — slot freed for the oracle-backed q_docs_pack below
     "q_window_frames": q_window_frames,
     "q_lag_lead": q_lag_lead,
     # r6: q_latest_event_per_user+q_asof_last_purchase merged (both
-    # as-of shapes in one plan; standalone fns kept for any external
-    # callers) — slot spent on the oracle-backed q_docs_pack_blocks
+    # as-of shapes in one plan) — slot spent on the oracle-backed q_docs_pack_blocks
     "q_asof_latest": q_asof_latest,
     # r7: q_sessions+q_session_window_events merged (batch gap-
     # sessionizer AND native session_window agg in one tagged plan;
-    # standalone fns kept for the frozen bench headline) — slot spent
-    # on the oracle-backed q_docs_pii below
+    # standalone q_sessions kept for the frozen bench headline) — slot
+    # spent on the oracle-backed q_docs_pii below
     "q_session_shapes": q_session_shapes,
     # r6: q_tumbling_events+q_sliding_events merged (both event-time
     # window shapes in one hash-checked plan; standalone fns kept for
@@ -3070,20 +2917,20 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_docs_quality_clf": q_docs_quality_clf,
     # r7: q_docs_digest_map+q_docs_fingerprint merged into
     # q_docs_content_ids (same md5-grouping + shingle-fingerprint
-    # coverage in one hash; standalone fns stay defined) — slot spent
+    # coverage in one hash) — slot spent
     # on the oracle-backed q_docs_dsir below
     "q_docs_content_ids": q_docs_content_ids,
     "q_docs_dsir": q_docs_dsir,
     # r7: q_docs_ngram_jaccard+q_docs_ngram_jaccard_lsh merged (exact
     # and LSH-blocked token-Jaccard pair tables share one schema; a
-    # mode column keeps both hash-checked; standalone fns stay for the
-    # frozen bench headline) — slot spent promoting the oracle-backed
+    # mode column keeps both hash-checked; the merge runs the standalone
+    # fns) — slot spent promoting the oracle-backed
     # ExactSubstr-style q_docs_window_dedup
     "q_docs_jaccard_pairs": q_docs_jaccard_pairs,
     # r7: q_emb_topk+q_emb_neardup merged (query-anchored top-k AND
     # all-pairs threshold scan, both brute-force cosine forms, in one
-    # tagged plan; standalone fns kept for the frozen bench headline)
-    # — slot spent on the oracle-backed q_docs_lm_ppl below
+    # tagged plan; standalone q_emb_topk kept for the frozen bench
+    # headline) — slot spent on the oracle-backed q_docs_lm_ppl below
     "q_emb_cosine": q_emb_cosine,
     "q_docs_minhash_lsh": q_docs_minhash_lsh,
     "q_docs_window_dedup": q_docs_window_dedup,

@@ -177,25 +177,17 @@ class PagesSpec:
         ]
 
 
-def _make_text(rng: np.random.Generator, lang: str, n_words: int, digit_p: float) -> str:
-    vocab = _VOCAB[lang]
-    words = [vocab[int(rng.integers(0, len(vocab)))] for _ in range(max(n_words, 1))]
-    for i in range(len(words)):
-        if rng.random() < digit_p:
-            words[i] = str(int(rng.integers(0, 10_000)))
-    return " ".join(words)
-
-
 def _make_texts_vectorized(
     rng: np.random.Generator,
     lang_rows: np.ndarray,
     n_words: np.ndarray,
     digit_p: np.ndarray,
 ) -> list[str]:
-    """Batch text synthesis — same statistical shape as _make_text but
-    one numpy draw per column instead of one Python call per word
-    (the generator is the bench-fixture bottleneck otherwise).
-    ``lang_rows`` indexes into _LANGS."""
+    """Batch text synthesis: per row, ``n_words`` words drawn from the
+    row's language vocabulary, each replaced by a random integer with
+    probability ``digit_p`` — one numpy draw per column, not one Python
+    call per word (the generator is the bench-fixture bottleneck
+    otherwise).  ``lang_rows`` indexes into _LANGS."""
     n = len(lang_rows)
     max_w = int(n_words.max())
     # word table: one row per lang, vocab cycled to a common width

@@ -1,7 +1,6 @@
-"""As-of / latest-version / sessionization operators (SURVEY.md §2.3 J5/J6,
-§2.5 W4, and the T4 session-window batch twin).
+"""Sessionization operators (the T4 session-window batch twin).
 
-All are window-function formulations — one shuffle on the partition key,
+Both are window-function formulations — one shuffle on the partition key,
 then ordered evaluation; no Python.
 """
 
@@ -9,37 +8,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def latest_version(df: DataFrame, key: str, ts: str) -> DataFrame:
-    """W4: pick the most recent row per key (as-of enrichment)."""
-    w = Window.partitionBy(key).orderBy(F.desc(ts))
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-def asof_last_before(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    value: str,
-    *,
-    mark_expr,
-) -> DataFrame:
-    """J5: for each row, the last prior row's ``value`` where mark_expr
-    held, per key, ordered by ts.  (e.g., last 'purchase' value before
-    each event.)  last_value(ignoreNulls) over an unbounded-preceding
-    frame excluding the current row."""
-    w = (
-        Window.partitionBy(key)
-        .orderBy(ts)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = F.when(mark_expr, F.col(value))
-    return df.withColumn("asof_value", F.last(marked, ignorenulls=True).over(w))
 
 
 def sessionize(

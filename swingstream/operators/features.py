@@ -20,7 +20,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from swingstream.config import SwingParams
-from swingstream.functions.textfns import digit_ratio, host_of, token_count
+from swingstream.functions.textfns import (
+    canonical_url,
+    digit_ratio,
+    host_of,
+    token_count,
+)
 
 # Per-row scalar features, computed BEFORE any shuffle: §4.3 pin #4
 # extended from `html` to `text` — the string payload is reduced to ~10
@@ -80,6 +85,13 @@ def content_digest() -> Column:
     return F.md5(F.concat_ws("\x00", F.col("lang"), F.col("text")))
 
 
+def url_key(params: SwingParams) -> Column:
+    """The url identity the streaming dedup key, host and salt read: its
+    canonical form when ``params.canonical_urls`` is on (pin in
+    SwingParams.canonical_urls), else the raw column."""
+    return canonical_url(F.col("url")) if params.canonical_urls else F.col("url")
+
+
 def pages_to_bucketed(
     pages: DataFrame, params: SwingParams, *, with_digest: bool = False
 ) -> DataFrame:
@@ -99,9 +111,9 @@ def pages_to_bucketed(
     )
 
 
-def _finalize(partials: DataFrame, params: SwingParams) -> DataFrame:
-    """Partials -> G-wide feature array + bucket timestamp."""
-    d = params.delta_seconds
+def feature_vector() -> Column:
+    """The G-wide per-unit feature array over the _partials() sums —
+    the one definition both series units (Δ-bucket and session) pack."""
     n = F.col("n_docs").cast("double")
     feats = [
         n,
@@ -115,11 +127,17 @@ def _finalize(partials: DataFrame, params: SwingParams) -> DataFrame:
         F.col("sum_digit_ratio") / n,
         F.col("n_long") / n,
     ]
+    return F.array(*[f.cast("double") for f in feats])
+
+
+def _finalize(partials: DataFrame, params: SwingParams) -> DataFrame:
+    """Partials -> G-wide feature array + bucket timestamp."""
+    d = params.delta_seconds
     return partials.select(
         "host",
         "bucket_idx",
         F.timestamp_seconds(F.col("bucket_idx") * d).alias("bucket_ts"),
-        F.array(*[f.cast("double") for f in feats]).alias("features"),
+        feature_vector().alias("features"),
     )
 
 

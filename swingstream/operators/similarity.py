@@ -144,21 +144,6 @@ def lsh_ann_topk_from_sigs(
     )
 
 
-def lsh_ann_topk(
-    vectors: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k: candidates share the query's LSH bucket (equi-join on
-    signature), then exact cosine rank within the bucket."""
-    return lsh_ann_topk_from_sigs(
-        hyperplane_sig_table(vectors, n_bits, id_col, vec_col), query_ids, k
-    )
-
-
 _PAIR_SCHEMA_DDL = "id_a long, id_b long, cos double"
 
 
@@ -438,7 +423,8 @@ def ivf_ann_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN top-k: k-means coarse quantizer buckets + multi-probe —
-    the clustered-corpus complement to hyperplane LSH (lsh_ann_topk).
+    the clustered-corpus complement to hyperplane LSH
+    (lsh_ann_topk_from_sigs).
     At 10^9-vector scale: centroids train on a sample, assignment is one
     broadcast join, and each query touches n_probe/n_centroids of the
     corpus."""
@@ -455,7 +441,8 @@ def neardup_pairs_cosine(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos >= θ).
 
     Brute-force O(n^2) verification form; the discovery path at scale is
-    ``lsh_ann_topk``'s bucketing.  Cosine rounded to 9 dp for stability.
+    ``lsh_ann_topk_from_sigs``' bucketing.  Cosine rounded to 9 dp for
+    stability.
     """
     # r8: norms precomputed per row (see brute_force_topk) — on the
     # O(n^2) pair join this removes two of the three interpreted dots

@@ -136,20 +136,18 @@ def session_series_batch(pages: DataFrame, params: SwingParams) -> DataFrame:
         _partials,
         _row_features,
         deduplicate_pages,
+        feature_vector,
+        url_key,
     )
 
     base = drop_incomplete(pages, subset=["url", "warc_ts", "text"])
-    url_expr = F.col("url")
-    if params.canonical_urls:  # same rewrite as session_features_stream
-        from swingstream.functions.textfns import canonical_url
-
-        url_expr = canonical_url(url_expr)
+    url = url_key(params)  # the streaming narrow_pages' url identity
     # per-row numerics before the dedup shuffle (pin #4: text never
     # crosses an exchange)
     rows = deduplicate_pages(
         base.select(
-            host_of(url_expr).alias("host"),
-            url_expr.alias("url"),
+            host_of(url).alias("host"),
+            url.alias("url"),
             "warc_ts",
             *[c.alias(k) for k, c in _row_features().items()],
         )
@@ -162,26 +160,13 @@ def session_series_batch(pages: DataFrame, params: SwingParams) -> DataFrame:
         *[a.alias(k) for k, a in _partials().items()],
         F.min("warc_ts").alias("session_start"),
     )
-    n = F.col("n_docs").cast("double")
-    feats = [
-        n,
-        F.col("sum_len") / n,
-        F.col("n_en") / n,
-        F.col("n_de") / n,
-        F.col("n_fr") / n,
-        F.col("n_es") / n,
-        F.col("n_zz") / n,
-        F.col("sum_tokens") / n,
-        F.col("sum_digit_ratio") / n,
-        F.col("n_long") / n,
-    ]
     d = params.delta_seconds
     return agg.select(
         F.col("host").alias("group_key"),
         F.lit("").alias("replicate"),
         (F.col("session_id") - 1).cast("long").alias("bucket_idx"),
         F.timestamp_seconds((F.col("session_id") - 1) * d).alias("bucket_ts"),
-        F.array(*[f.cast("double") for f in feats]).alias("features"),
+        feature_vector().alias("features"),
     )
 
 

@@ -61,8 +61,7 @@ def get_spark(
             "InferFiltersFromGenerate",
         )
         # RocksDB state store (prod pin): large per-host state spills off
-        # heap, changelog checkpointing bounds commit latency — and
-        # transformWithStateInPandas (T5 modern form) REQUIRES RocksDB
+        # heap, changelog checkpointing bounds commit latency
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."

@@ -1,4 +1,7 @@
-"""Streaming query 1: pages stream → features staging table.
+"""Streaming query 1: pages stream → features staging table, plus the
+pieces every streaming query of both series units shares: the narrow
+scan-side projection, the exactly-once ledger writer and the
+observed-metrics sidecars.
 
 The aggregation state is keyed by (host, window, salt) — the explicit
 hot-domain skew handling (T11): a hot host's bucket fans over
@@ -10,8 +13,13 @@ together).  The combine itself is algebraic (sums of sums).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -23,8 +31,14 @@ from pyspark.sql.types import (
 )
 
 from swingstream.config import SwingParams
-from swingstream.functions.textfns import canonical_url, host_of
-from swingstream.operators.features import _finalize, _partials
+from swingstream.functions.textfns import host_of
+from swingstream.operators.features import (
+    _finalize,
+    _partials,
+    _row_features,
+    content_digest,
+    url_key,
+)
 from swingstream.sources.catalog import IcebergLiteTable
 from swingstream.sources.pages import read_pages_stream
 
@@ -38,19 +52,23 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def feature_partials_stream(pages: DataFrame, params: SwingParams) -> DataFrame:
-    """extract (P6) → watermark → dedup-within-watermark → salted
-    windowed partial agg.
+def narrow_pages(pages: DataFrame, params: SwingParams, *extra: Column) -> DataFrame:
+    """extract (P6) → observe("pages_in") → narrow projection
+    (url, warc_ts, host, *extra, per-row features).
 
-    The html→text extraction (the per-row invariant operator) runs as an
-    Arrow-vectorized UDF NARROW on the scan side, and the html binary is
-    dropped before the first shuffle — §4.3 pin #4: the heavy payload
-    column must never enter a stateful operator's exchange.
+    The html→text extraction (the per-row invariant operator) runs
+    NARROW on the scan side, and the html binary is dropped before the
+    first shuffle — §4.3 pin #4: the heavy payload column must never
+    enter a stateful operator's exchange.  Text is reduced to per-row
+    numerics here too, so no string payload crosses an exchange either
+    (``extra`` may add the 32-char content digest when content dedup is
+    on).  With canonical_urls the url column is rewritten ONCE here:
+    dedup key, host and salt all read the canonical identity, so
+    campaign-link duplicates collapse and the survivor's host/salt don't
+    depend on which raw url won.
     """
     from swingstream.extract import extract_col
-    from swingstream.operators.features import _row_features
 
-    d = params.delta_seconds
     extracted = pages.select(
         "url",
         "warc_ts",
@@ -62,37 +80,28 @@ def feature_partials_stream(pages: DataFrame, params: SwingParams) -> DataFrame:
         F.min("warc_ts").alias("min_ts"),
         F.max("warc_ts").alias("max_ts"),
     )
-    # reduce text to per-row numerics BEFORE the dedup state shuffle —
-    # §4.3 pin #4 extended to text: no string payload ever crosses an
-    # exchange (dedup previously shuffled the full extracted text; the
-    # 32-char content digest is the one small string allowed through
-    # when content dedup is on)
-    from swingstream.operators.features import content_digest
+    url = url_key(params)
+    return extracted.select(
+        url.alias("url"),
+        "warc_ts",
+        host_of(url).alias("host"),
+        *extra,
+        *[c.alias(k) for k, c in _row_features().items()],
+    )
 
-    extra = []
+
+def feature_partials_stream(pages: DataFrame, params: SwingParams) -> DataFrame:
+    """narrow_pages → watermark → dedup-within-watermark → salted
+    windowed partial agg."""
+    d = params.delta_seconds
+    extra = [F.pmod(F.xxhash64(url_key(params)), F.lit(params.n_salts)).alias("salt")]
     if params.dedup_content:
-        extra = [
+        extra += [
             content_digest().alias("digest"),
             F.floor(F.unix_timestamp("warc_ts") / d).cast("long").alias(
                 "bucket_key"
             ),
         ]
-    # canonical_urls: rewrite the url column ONCE at the narrow
-    # projection — dedup key, host, and salt below all read the
-    # canonical identity, so campaign-link duplicates collapse and the
-    # survivor's host/salt don't depend on which raw url won (pin in
-    # SwingParams.canonical_urls)
-    url_expr = (
-        canonical_url(F.col("url")) if params.canonical_urls else F.col("url")
-    )
-    narrow = extracted.select(
-        url_expr.alias("url"),
-        "warc_ts",
-        host_of(url_expr).alias("host"),
-        F.pmod(F.xxhash64(url_expr), F.lit(params.n_salts)).alias("salt"),
-        *extra,
-        *[c.alias(k) for k, c in _row_features().items()],
-    )
     # T8 exactly-once rows.  Content mode drops same-(host, bucket)
     # content republications as well — one state op covers both, since
     # (url, warc_ts) redeliveries share (host, digest, bucket) by
@@ -103,7 +112,8 @@ def feature_partials_stream(pages: DataFrame, params: SwingParams) -> DataFrame:
         else ["url", "warc_ts"]
     )
     deduped = (
-        narrow.withWatermark("warc_ts", params.watermark)
+        narrow_pages(pages, params, *extra)
+        .withWatermark("warc_ts", params.watermark)
         .dropDuplicatesWithinWatermark(dedup_key)
     )
     # every partial is a plain sum/count => exact algebraic combine
@@ -134,6 +144,92 @@ def combine_partials(batch_df: DataFrame, params: SwingParams) -> DataFrame:
     )
 
 
+def start_ledger_query(
+    df: DataFrame,
+    table: IcebergLiteTable,
+    checkpoint: str,
+    ts_col: str,
+    *,
+    prepare: Callable[[DataFrame], DataFrame] | None = None,
+    n_files: int | None = None,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """Start ``df``'s append-mode foreachBatch writer: each micro-batch
+    (through ``prepare``, when given) is one idempotent
+    ``table.commit`` — the exactly-once sink of every streaming query.
+
+    available_now=False starts a continuous micro-batch trigger, the
+    production form where query 2 tails query 1's commits live.
+    """
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        out = batch_df if prepare is None else prepare(batch_df)
+        table.commit(batch_id, out, ts_col, n_files=n_files)
+
+    writer = (
+        df.writeStream.foreachBatch(sink)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        # short poll: query 2 tails query 1's commits — a 1 s trigger
+        # adds up to 1 s of dead alignment time per upstream commit,
+        # which is pure fixed cost in the N-vs-4N scaling measurement
+        writer = writer.trigger(processingTime="250 milliseconds")
+    return writer.start()
+
+
+def start_feature_query(
+    spark: SparkSession,
+    pages_path: str,
+    table: IcebergLiteTable,
+    checkpoint: str,
+    params: SwingParams,
+    max_files_per_trigger: int,
+) -> StreamingQuery:
+    """Start query 1 (availableNow) over the pages stream into ``table``."""
+    pages = read_pages_stream(spark, pages_path, max_files_per_trigger)
+    # n_files=1: one file per commit so the downstream scoring query
+    # consumes whole commits per trigger (bucket order per host is then
+    # monotone — the invariant state.py's emission relies on)
+    return start_ledger_query(
+        feature_partials_stream(pages, params), table, checkpoint, "bucket_ts",
+        prepare=lambda b: combine_partials(b, params), n_files=1,
+    )
+
+
+def write_observed(q: StreamingQuery, table: IcebergLiteTable) -> int:
+    """T7 observability sidecars: one ``observed-<batch>.json`` per
+    progress entry of ``q``, next to ``table``'s commit manifests —
+    the batch's input rows, its observed "pages_in" metrics and its
+    watermark drops (observe() reports at batch completion, after the
+    sink commit — a sidecar keeps manifests immutable).  Returns the
+    total rows dropped by watermark.  Reads the query's 100-entry
+    ``recentProgress`` ring: a longer stream's record is incomplete."""
+    dropped = 0
+    for p in q.recentProgress:
+        j = json.loads(p.json)
+        n = sum(
+            op.get("numRowsDroppedByWatermark", 0)
+            for op in j.get("stateOperators", [])
+        )
+        dropped += n
+        sp = os.path.join(table.manifest_dir, f"observed-{j['batchId']}.json")
+        if not os.path.exists(sp):
+            side = {
+                "batch_id": j["batchId"],
+                "input_rows": j.get("numInputRows"),
+                "observed": j.get("observedMetrics", {}).get("pages_in"),
+                "rows_dropped_by_watermark": n,
+            }
+            with open(sp + ".tmp", "w") as fh:
+                json.dump(side, fh, indent=1)
+            os.replace(sp + ".tmp", sp)
+    return dropped
+
+
 def run_feature_query(
     spark: SparkSession,
     pages_path: str,
@@ -146,53 +242,9 @@ def run_feature_query(
 
     Returns (IcebergLiteTable, total rows dropped by watermark).
     """
-    import json as _json
-    import os as _os
-
     table = IcebergLiteTable(table_root)
-    pages = read_pages_stream(spark, pages_path, max_files_per_trigger)
-    partials = feature_partials_stream(pages, params)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # n_files=1: one file per commit so the downstream scoring query
-        # consumes whole commits per trigger (bucket order per host is
-        # then monotone — the invariant state.py's emission relies on)
-        table.commit(batch_id, combine_partials(batch_df, params), "bucket_ts",
-                     n_files=1)
-
-    dropped = 0
-    q = (
-        partials.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    q = start_feature_query(
+        spark, pages_path, table, checkpoint, params, max_files_per_trigger
     )
     q.awaitTermination()
-    # T7 observability sidecars: per-batch observed input metrics +
-    # watermark-drop counts, written next to the commit manifests
-    # (observe() reports at batch completion, after the sink commit —
-    # a sidecar keeps manifests immutable)
-    for p in q.recentProgress:
-        try:
-            j = _json.loads(p.json)
-        except Exception:
-            continue
-        for op in j.get("stateOperators", []):
-            dropped += op.get("numRowsDroppedByWatermark", 0)
-        om = j.get("observedMetrics", {}).get("pages_in")
-        side = {
-            "batch_id": j["batchId"],
-            "input_rows": j.get("numInputRows"),
-            "observed": om,
-            "rows_dropped_by_watermark": sum(
-                op.get("numRowsDroppedByWatermark", 0)
-                for op in j.get("stateOperators", [])
-            ),
-        }
-        sp = _os.path.join(table.manifest_dir, f"observed-{j['batchId']}.json")
-        if not _os.path.exists(sp):
-            with open(sp + ".tmp", "w") as fh:
-                _json.dump(side, fh, indent=1)
-            _os.replace(sp + ".tmp", sp)
-    return table, dropped
+    return table, write_observed(q, table)

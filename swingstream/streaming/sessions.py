@@ -28,11 +28,13 @@ the gap bound itself plus state TTL, documented as the T11 exception.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -43,15 +45,17 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pyspark.sql import functions as F
-
 from swingstream.config import SwingParams
-from swingstream.functions.textfns import canonical_url, host_of
-from swingstream.operators.features import _partials, _row_features
-from swingstream.operators.scoring import EDGE_SCHEMA
+from swingstream.operators.features import _partials, feature_vector
 from swingstream.sources.catalog import IcebergLiteTable
 from swingstream.sources.pages import read_pages_stream
-from swingstream.streaming.state import _advance
+from swingstream.streaming.pipeline import narrow_pages, start_ledger_query
+from swingstream.streaming.state import (
+    _advance,
+    _emit_frame,
+    drain_concurrent,
+    start_scoring_query,
+)
 
 SESSION_FEATURE_SCHEMA = StructType(
     [
@@ -73,62 +77,21 @@ SESS_STATE_SCHEMA = StructType(
 
 
 def session_features_stream(pages: DataFrame, params: SwingParams) -> DataFrame:
-    """extract (P6) → watermark → dedup → session-window feature agg."""
-    from swingstream.extract import extract_col
-
-    extracted = pages.select(
-        "url", "warc_ts", extract_col(F.col("html")).alias("text"), "lang"
-    ).observe(
-        "sess_pages_in",
-        F.count(F.lit(1)).alias("rows"),
-        F.min("warc_ts").alias("min_ts"),
-        F.max("warc_ts").alias("max_ts"),
-    )
-    # text reduced to numerics before the dedup shuffle (pin #4 — same
-    # as feature_partials_stream)
-    url_expr = (  # same canonical-identity rewrite as feature_partials_stream
-        canonical_url(F.col("url")) if params.canonical_urls else F.col("url")
-    )
-    narrow = extracted.select(
-        url_expr.alias("url"),
-        "warc_ts",
-        host_of(url_expr).alias("host"),
-        *[c.alias(k) for k, c in _row_features().items()],
-    )
+    """narrow_pages → watermark → dedup → session-window feature agg."""
     deduped = (
-        narrow.withWatermark("warc_ts", params.watermark)
+        narrow_pages(pages, params)
+        .withWatermark("warc_ts", params.watermark)
         .dropDuplicatesWithinWatermark(["url", "warc_ts"])
     )
     agg = deduped.groupBy(
         "host", F.session_window("warc_ts", params.session_gap).alias("win")
     ).agg(*[a.alias(k) for k, a in _partials().items()])
-    # same 10 per-unit features as _finalize, with the session's real
-    # extent in place of bucket_ts
-    return (
-        agg.select(
-            F.col("host").alias("group_key"),
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            *[k for k in _partials()],
-        )
-        .withColumn("n", F.col("n_docs").cast("double"))
-        .select(
-            "group_key",
-            "session_start",
-            "session_end",
-            F.array(
-                F.col("n"),
-                F.col("sum_len") / F.col("n"),
-                F.col("n_en") / F.col("n"),
-                F.col("n_de") / F.col("n"),
-                F.col("n_fr") / F.col("n"),
-                F.col("n_es") / F.col("n"),
-                F.col("n_zz") / F.col("n"),
-                F.col("sum_tokens") / F.col("n"),
-                F.col("sum_digit_ratio") / F.col("n"),
-                F.col("n_long") / F.col("n"),
-            ).cast("array<double>").alias("features"),
-        )
+    # the session's real extent in place of bucket_ts
+    return agg.select(
+        F.col("host").alias("group_key"),
+        F.col("win.start").alias("session_start"),
+        F.col("win.end").alias("session_end"),
+        feature_vector().alias("features"),
     )
 
 
@@ -165,52 +128,13 @@ def make_session_state_fn(params: SwingParams, names: list[str]):
         )
         state.update((idx, feats, max_emitted, next_seq))
         if scored:
-            yield pd.concat([pd.DataFrame(r) for r in scored], ignore_index=True)
+            yield _emit_frame(scored)
 
     return fn
 
 
-def start_session_scoring_query(
-    spark,
-    staging_data_dir: str,
-    out_root: str,
-    checkpoint: str,
-    params: SwingParams,
-    names: list[str],
-    *,
-    available_now: bool = True,
-):
-    """Start query 2 (session variant) over staged session rows;
-    returns (query, table).  available_now=False = continuous trigger
-    (the concurrent production topology)."""
-    table = IcebergLiteTable(out_root)
-    feats = (
-        spark.readStream.schema(SESSION_FEATURE_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "4")
-        .parquet(staging_data_dir)
-    )
-    edges = feats.groupBy("group_key").applyInPandasWithState(
-        make_session_state_fn(params, names),
-        EDGE_SCHEMA,
-        SESS_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit(batch_id, batch_df, "win_start_ts")
-
-    writer = (
-        edges.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="250 milliseconds")
-    return writer.start(), table
+# The session series unit for state.start_scoring_query.
+SESSION_SERIES = (SESSION_FEATURE_SCHEMA, make_session_state_fn, SESS_STATE_SCHEMA)
 
 
 def run_session_pipeline(
@@ -218,25 +142,14 @@ def run_session_pipeline(
 ):
     """Production topology (session variant): query 1 and query 2 run
     CONCURRENTLY — query 2 tails query 1's session commits as they land,
-    mirroring state.run_pipeline_concurrent.  Returns (features, edges)."""
-    import json as _json
-    import os
-
+    the same topology and drain as state.run_pipeline_concurrent.
+    Returns (features, edges)."""
     feat_table = IcebergLiteTable(os.path.join(work_root, "sess_features"))
-    pages = read_pages_stream(spark, pages_path, 4)
-    feats = session_features_stream(pages, params)
-
-    def feat_sink(batch_df: DataFrame, batch_id: int) -> None:
-        feat_table.commit(batch_id, batch_df, "session_start", n_files=1)
-
-    q1 = (
-        feats.writeStream.foreachBatch(feat_sink)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work_root, "ck_sf"))
-        .trigger(availableNow=True)
-        .start()
+    q1 = start_ledger_query(
+        session_features_stream(read_pages_stream(spark, pages_path, 4), params),
+        feat_table, os.path.join(work_root, "ck_sf"), "session_start", n_files=1,
     )
-    q2, edges_table = start_session_scoring_query(
+    q2, edges_table = start_scoring_query(
         spark,
         feat_table.data_dir,
         os.path.join(work_root, "sess_edges"),
@@ -244,30 +157,7 @@ def run_session_pipeline(
         params,
         names,
         available_now=False,
+        series=SESSION_SERIES,
     )
-    q1.awaitTermination()
-    # T7 observability sidecars for the session query (same shape as
-    # run_feature_query's): per-batch observed inputs + watermark drops
-    for p in q1.recentProgress:
-        try:
-            j = _json.loads(p.json)
-        except Exception:
-            continue
-        side = {
-            "batch_id": j["batchId"],
-            "input_rows": j.get("numInputRows"),
-            "observed": j.get("observedMetrics", {}).get("sess_pages_in"),
-            "rows_dropped_by_watermark": sum(
-                op.get("numRowsDroppedByWatermark", 0)
-                for op in j.get("stateOperators", [])
-            ),
-        }
-        sp = os.path.join(feat_table.manifest_dir, f"observed-{j['batchId']}.json")
-        if not os.path.exists(sp):
-            with open(sp + ".tmp", "w") as fh:
-                _json.dump(side, fh, indent=1)
-            os.replace(sp + ".tmp", sp)
-    q2.processAllAvailable()  # drain everything query 1 committed
-    q2.stop()
-    q2.awaitTermination()
+    drain_concurrent(q1, feat_table, q2)
     return feat_table, edges_table

@@ -27,28 +27,10 @@ first checkpoint (§4.3 pin #2).
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-# transformWithStateInPandas' state IPC is protobuf-based; this sandbox
-# ships no google.protobuf (and no network to install it), so the modern
-# T5 form is implemented + tested-by-parity where available, with the
-# applyInPandasWithState twin as the in-sandbox default.  Same
-# environment-constraint class as the absent Iceberg jar (SURVEY.md §0).
-try:  # pragma: no cover - environment probe
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    TWS_AVAILABLE = True
-except ImportError:  # pragma: no cover
-    TWS_AVAILABLE = False
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -59,6 +41,13 @@ from pyspark.sql.types import (
 
 from swingstream.config import SwingParams
 from swingstream.operators.scoring import EDGE_SCHEMA, score_design
+from swingstream.sources.catalog import IcebergLiteTable
+from swingstream.streaming.pipeline import (
+    FEATURE_SCHEMA,
+    start_feature_query,
+    start_ledger_query,
+    write_observed,
+)
 
 STATE_SCHEMA = StructType(
     [
@@ -145,7 +134,7 @@ def _advance(
     params: SwingParams,
     names: list[str],
 ) -> tuple[list[dict[str, list]], tuple]:
-    """Shared state transition for BOTH stateful APIs: merge the batch's
+    """Shared state transition for BOTH series units: merge the batch's
     feature rows into the sparse buffer, score newly-complete eligible
     windows, prune the buffer tail.  Returns (scored row-dicts,
     new (idx, feats, max_emitted) state tuple) — plain-Python values
@@ -209,64 +198,10 @@ def make_state_fn(params: SwingParams, names: list[str]):
     return fn
 
 
-class SwingScoringProcessor(StatefulProcessor):
-    """T5 modern form: the same sparse-buffer scoring state machine as
-    make_state_fn, hosted in Spark 4's ``transformWithStateInPandas``
-    (SURVEY.md §2.8 T5 preferred API).  State lives in a ValueState of
-    STATE_SCHEMA; the legacy ``applyInPandasWithState`` path is kept as
-    a byte-parity twin (test_tws_matches_legacy_and_batch)."""
-
-    def __init__(self, params: SwingParams, names: list[str]):
-        self._params = params
-        self._names = names
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._buf = handle.getValueState("buf", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        prev = tuple(self._buf.get()) if self._buf.exists() else None
-        scored, new_state = _advance(
-            str(key[0]), prev, rows, self._params, self._names
-        )
-        self._buf.update(new_state)
-        if scored:
-            yield _emit_frame(scored)
-
-    def close(self) -> None:
-        pass
-
-
-def score_stream(
-    features: DataFrame,
-    params: SwingParams,
-    names: list[str],
-    api: str | None = None,
-) -> DataFrame:
-    """feature stream -> streaming edge rows (append mode).
-
-    api=None resolves to 'tws' (transformWithStateInPandas, the Spark-4
-    preferred form) when the protobuf runtime exists, else to the
-    'legacy' applyInPandasWithState twin — byte-identical output either
-    way (test_tws_matches_legacy_and_batch).
-    """
-    if api is None:
-        api = "tws" if TWS_AVAILABLE else "legacy"
-    if api == "legacy":
-        return features.groupBy("group_key").applyInPandasWithState(
-            make_state_fn(params, names),
-            EDGE_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    return features.groupBy("group_key").transformWithStateInPandas(
-        statefulProcessor=SwingScoringProcessor(params, names),
-        outputStructType=EDGE_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
+# The Δ-bucket series unit: (staged feature schema, state-fn factory,
+# state schema) — the default of start_scoring_query;
+# sessions.SESSION_SERIES is the other unit.
+BUCKET_SERIES = (FEATURE_SCHEMA, make_state_fn, STATE_SCHEMA)
 
 
 def start_scoring_query(
@@ -279,42 +214,34 @@ def start_scoring_query(
     *,
     available_now: bool = True,
     max_files_per_trigger: int = 4,
-    api: str | None = None,
+    series: tuple = BUCKET_SERIES,
 ):
     """Start query 2 over the staged feature files; returns (query, table).
 
+    feature stream -> per-host applyInPandasWithState scoring (append
+    mode) -> exactly-once edge commits.  ``series`` is the series unit
+    (staged schema, state-fn factory, state schema).
     available_now=False starts a continuous micro-batch trigger — the
     production topology where query 2 tails query 1's commits live.
-    api: None (auto) | 'tws' | 'legacy' — see score_stream.
     """
-    from swingstream.sources.catalog import IcebergLiteTable
-    from swingstream.streaming.pipeline import FEATURE_SCHEMA
-
+    schema, make_fn, state_schema = series
     table = IcebergLiteTable(out_root)
     feats = (
-        spark.readStream.schema(FEATURE_SCHEMA)
+        spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(staging_data_dir)
     )
-    edges = score_stream(feats, params, names, api=api)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit(batch_id, batch_df, "win_start_ts")
-
-    writer = (
-        edges.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    edges = feats.groupBy("group_key").applyInPandasWithState(
+        make_fn(params, names),
+        EDGE_SCHEMA,
+        state_schema,
+        "append",
+        GroupStateTimeout.NoTimeout,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        # short poll: query 2 tails query 1's commits — a 1 s trigger
-        # adds up to 1 s of dead alignment time per upstream commit,
-        # which is pure fixed cost in the N-vs-4N scaling measurement
-        writer = writer.trigger(processingTime="250 milliseconds")
-    return writer.start(), table
+    return start_ledger_query(
+        edges, table, checkpoint, "win_start_ts", available_now=available_now
+    ), table
 
 
 def run_scoring_query(
@@ -324,14 +251,27 @@ def run_scoring_query(
     checkpoint: str,
     params: SwingParams,
     names: list[str],
-    api: str | None = None,
+    *,
+    series: tuple = BUCKET_SERIES,
 ):
     """Run query 2 to completion over the staged feature files."""
     q, table = start_scoring_query(
-        spark, staging_data_dir, out_root, checkpoint, params, names, api=api
+        spark, staging_data_dir, out_root, checkpoint, params, names,
+        series=series,
     )
     q.awaitTermination()
     return table
+
+
+def drain_concurrent(q1, feat_table: IcebergLiteTable, q2) -> None:
+    """The concurrent topology's drain: wait for query 1 (availableNow),
+    write its observed-metrics sidecars, let query 2 score everything
+    query 1 committed, then stop query 2."""
+    q1.awaitTermination()
+    write_observed(q1, feat_table)
+    q2.processAllAvailable()
+    q2.stop()
+    q2.awaitTermination()
 
 
 def run_pipeline_concurrent(
@@ -357,27 +297,10 @@ def run_pipeline_concurrent(
     """
     import os
 
-    from swingstream.streaming.pipeline import (
-        combine_partials,
-        feature_partials_stream,
-    )
-    from swingstream.sources.catalog import IcebergLiteTable
-    from swingstream.sources.pages import read_pages_stream
-
     feat_table = IcebergLiteTable(os.path.join(work_root, "features"))
-    pages = read_pages_stream(spark, pages_path, feature_files_per_trigger)
-    partials = feature_partials_stream(pages, params)
-
-    def feat_sink(batch_df: DataFrame, batch_id: int) -> None:
-        feat_table.commit(batch_id, combine_partials(batch_df, params),
-                          "bucket_ts", n_files=1)
-
-    q1 = (
-        partials.writeStream.foreachBatch(feat_sink)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work_root, "ck_feat"))
-        .trigger(availableNow=True)
-        .start()
+    q1 = start_feature_query(
+        spark, pages_path, feat_table, os.path.join(work_root, "ck_feat"),
+        params, feature_files_per_trigger,
     )
     q2, edges_table = start_scoring_query(
         spark,
@@ -389,8 +312,5 @@ def run_pipeline_concurrent(
         available_now=False,
         max_files_per_trigger=q2_files_per_trigger,
     )
-    q1.awaitTermination()
-    q2.processAllAvailable()  # drain everything query 1 committed
-    q2.stop()
-    q2.awaitTermination()
+    drain_concurrent(q1, feat_table, q2)
     return feat_table, edges_table

@@ -117,28 +117,18 @@ def test_minhash_banding_is_equi_join(spark):
 def test_streaming_extract_path_has_no_python_nodes(spark, pages_df):
     """The html→text extraction hot path must stay JVM-side
     (extract_col, round 3): no ArrowEvalPython / BatchEvalPython node in
-    the streaming projection's plan — every html byte crossing Arrow to
-    a Python worker was ~25% of query-1 wall."""
-    from pyspark.sql import functions as F
-
-    from swingstream.extract import extract_col
-    from swingstream.functions.textfns import host_of
-    from swingstream.operators.features import _row_features
+    the plan of the streaming projection both series units read
+    (narrow_pages), with and without the canonical-url rewrite — every
+    html byte crossing Arrow to a Python worker was ~25% of query-1
+    wall."""
     from swingstream.sources.pages import pages_from_pandas
+    from swingstream.streaming.pipeline import narrow_pages
 
     pages = pages_from_pandas(spark, pages_df)
-    # the projection shape feature_partials_stream builds: extract, then
-    # per-row features over the extracted text
-    d = pages.select(
-        "url",
-        "warc_ts",
-        host_of(F.col("url")).alias("host"),
-        extract_col(F.col("html")).alias("text"),
-        "lang",
-    ).select("url", "warc_ts", "host",
-             *[c.alias(k) for k, c in _row_features().items()])
-    plan = d._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan, plan[:2000]
+    for canonical_urls in (False, True):
+        d = narrow_pages(pages, SwingParams(canonical_urls=canonical_urls))
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert "Python" not in plan, (canonical_urls, plan[:2000])
 
 
 def test_no_payload_columns_past_projection(spark, pages_df):

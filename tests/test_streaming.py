@@ -979,51 +979,6 @@ def test_dark_host_bounded_state_and_parity(spark, tmp_path):
     assert dark["win_start"].nunique() < 60
 
 
-def test_tws_matches_legacy_and_batch(spark, stream_dir, tmp_path):
-    """T5 modern form: transformWithStateInPandas scoring ==
-    applyInPandasWithState scoring == batch, byte-identical edges.
-
-    Skipped where the protobuf runtime is absent (this sandbox ships no
-    google.protobuf and has no network): TWS' state IPC is protobuf-
-    based, so the query cannot start — the implementation is complete
-    and this test is its gate wherever protobuf exists."""
-    from swingstream.streaming.state import TWS_AVAILABLE
-
-    if not TWS_AVAILABLE:
-        pytest.skip("google.protobuf not installed — transformWithState "
-                    "driver worker cannot start in this sandbox")
-    from swingstream.operators.features import densify_buckets
-    from swingstream.pipeline import series_from_features, swing_edges
-    from swingstream.streaming.pipeline import FEATURE_SCHEMA, run_feature_query
-    from swingstream.streaming.state import run_scoring_query
-
-    path, _ = stream_dir
-    feat_table, _ = run_feature_query(
-        spark, path, str(tmp_path / "featT"), str(tmp_path / "ckT"), PARAMS,
-        max_files_per_trigger=2,
-    )
-    tws = run_scoring_query(
-        spark, feat_table.data_dir, str(tmp_path / "edges_tws"),
-        str(tmp_path / "ck_tws"), PARAMS, list(PARAMS.feature_names), api="tws",
-    ).read(spark).toPandas()
-    legacy = run_scoring_query(
-        spark, feat_table.data_dir, str(tmp_path / "edges_leg"),
-        str(tmp_path / "ck_leg"), PARAMS, list(PARAMS.feature_names), api="legacy",
-    ).read(spark).toPandas()
-    feats = feat_table.read(spark, FEATURE_SCHEMA)
-    batch = swing_edges(
-        series_from_features(densify_buckets(feats, PARAMS)), PARAMS
-    ).toPandas()
-    key = ["group_key", "win_start", "parent", "child", "lag"]
-    cols = key + ["importance", "win_start_ts"]
-    a = tws.sort_values(key).reset_index(drop=True)
-    b = legacy.sort_values(key).reset_index(drop=True)
-    c = batch.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b) == len(c) and len(a) > 0
-    pd.testing.assert_frame_equal(a[cols], b[cols])
-    pd.testing.assert_frame_equal(a[cols], c[cols])
-
-
 def test_session_pipeline_matches_batch(spark, tmp_path):
     """Session-window SWING variant: streaming (session_window agg +
     sequence-indexed stateful scoring) == batch twin
@@ -1085,11 +1040,60 @@ def test_session_pipeline_matches_batch(spark, tmp_path):
     pd.testing.assert_frame_equal(a[cols], b[cols])
 
 
-def test_scoring_query_checkpoint_resume(spark, tmp_path):
-    """T10 for query 2: kill the stateful scoring query mid-stream (after
-    a strict prefix of feature commits), resume from the same checkpoint
-    with the rest — final edge table byte-identical to a one-shot run."""
+def test_pipeline_concurrent_matches_batch(spark, stream_dir, tmp_path):
+    """The production topology (query 1 and query 2 running concurrently,
+    one drain — what bench.py and perfbench time) == the batch twin over
+    its staged features, byte-identical edges; and query 1's
+    observed-metrics sidecars account for every input row."""
+    import json
+
+    from swingstream.operators.features import densify_buckets
+    from swingstream.pipeline import series_from_features, swing_edges
+    from swingstream.streaming.pipeline import FEATURE_SCHEMA
+    from swingstream.streaming.state import run_pipeline_concurrent
+
+    path, df = stream_dir
+    feat_table, edges_table = run_pipeline_concurrent(
+        spark, path, str(tmp_path / "work"), PARAMS, list(PARAMS.feature_names),
+        feature_files_per_trigger=2, q2_files_per_trigger=2,
+    )
+    stream_edges = edges_table.read(spark).toPandas()
+    feats = feat_table.read(spark, FEATURE_SCHEMA)
+    batch_edges = swing_edges(
+        series_from_features(densify_buckets(feats, PARAMS)), PARAMS
+    ).toPandas()
+    key = ["group_key", "win_start", "parent", "child", "lag"]
+    cols = key + ["importance", "win_start_ts"]
+    a = stream_edges.sort_values(key).reset_index(drop=True)
+    b = batch_edges.sort_values(key).reset_index(drop=True)
+    assert len(a) == len(b) and len(a) > 0
+    pd.testing.assert_frame_equal(a[cols], b[cols])
+
+    sidecars = [f for f in os.listdir(feat_table.manifest_dir)
+                if f.startswith("observed-")]
+    assert sidecars, "query 1 must write observed-metrics sidecars"
+    input_rows = 0
+    for f in sidecars:
+        with open(os.path.join(feat_table.manifest_dir, f)) as fh:
+            input_rows += json.load(fh)["input_rows"]
+    assert input_rows == len(df)
+
+
+@pytest.mark.parametrize("unit", ["bucket", "session"])
+def test_scoring_query_checkpoint_resume(spark, tmp_path, unit):
+    """T10 for query 2, for both series units: kill the stateful scoring
+    query mid-stream (after a strict prefix of feature commits), resume
+    from the same checkpoint with the rest — final edge table
+    byte-identical to a one-shot run.  The session unit also carries its
+    per-host sequence counter (next_seq) across the restart."""
     import time
+
+    from swingstream.streaming.pipeline import FEATURE_SCHEMA
+    from swingstream.streaming.sessions import (
+        SESSION_FEATURE_SCHEMA,
+        SESSION_SERIES,
+    )
+    from swingstream.streaming.state import BUCKET_SERIES, run_scoring_query
 
     rng = np.random.default_rng(9)
     g = len(PARAMS.feature_names)
@@ -1100,15 +1104,25 @@ def test_scoring_query_checkpoint_resume(spark, tmp_path):
                          [float(x) for x in rng.normal(size=g)]))
     pdf = pd.DataFrame(rows, columns=["group_key", "bucket_idx", "bucket_ts",
                                       "features"])
-    from swingstream.streaming.pipeline import FEATURE_SCHEMA
-    from swingstream.streaming.state import run_scoring_query
+    order = pdf.sort_values(["bucket_idx", "group_key"]).reset_index(drop=True)
+    if unit == "bucket":
+        schema, ts_col, series = FEATURE_SCHEMA, "bucket_ts", BUCKET_SERIES
+    else:
+        # one finalized session per row: its sequence number is its
+        # per-host arrival rank, assigned by the scoring state
+        order = pd.DataFrame({
+            "group_key": order["group_key"],
+            "session_start": order["bucket_ts"],
+            "session_end": order["bucket_ts"] + pd.Timedelta(seconds=30),
+            "features": order["features"],
+        })
+        schema, ts_col, series = (SESSION_FEATURE_SCHEMA, "session_start",
+                                  SESSION_SERIES)
 
     feat_table = IcebergLiteTable(str(tmp_path / "feats"))
-    order = pdf.sort_values(["bucket_idx", "group_key"]).reset_index(drop=True)
     for i, chunk in enumerate(np.array_split(np.arange(len(order)), 6)):
-        feat_table.commit(i, spark.createDataFrame(order.iloc[chunk],
-                                                   FEATURE_SCHEMA), "bucket_ts",
-                          n_files=1)
+        feat_table.commit(i, spark.createDataFrame(order.iloc[chunk], schema),
+                          ts_col, n_files=1)
     batch_dirs = sorted(os.listdir(feat_table.data_dir))
     assert len(batch_dirs) == 6
 
@@ -1120,21 +1134,19 @@ def test_scoring_query_checkpoint_resume(spark, tmp_path):
             for f in os.listdir(dst):
                 os.utime(os.path.join(dst, f), (t0 + 2 * j, t0 + 2 * j))
 
+    def score(staged, out, ck):
+        return run_scoring_query(spark, staged, str(tmp_path / out),
+                                 str(tmp_path / ck), PARAMS,
+                                 list(PARAMS.feature_names), series=series)
+
     inc = str(tmp_path / "inc")
     os.makedirs(inc)
     t0 = time.time()
     copy_commits(batch_dirs[:3], inc, t0)
-    t1 = run_scoring_query(spark, inc, str(tmp_path / "e1"),
-                           str(tmp_path / "ck"), PARAMS,
-                           list(PARAMS.feature_names))
-    rows_phase1 = t1.total_rows()
+    rows_phase1 = score(inc, "e1", "ck").total_rows()
     copy_commits(batch_dirs[3:], inc, t0 + 100)
-    t1b = run_scoring_query(spark, inc, str(tmp_path / "e1"),
-                            str(tmp_path / "ck"), PARAMS,
-                            list(PARAMS.feature_names))
-    ref = run_scoring_query(spark, feat_table.data_dir, str(tmp_path / "ref"),
-                            str(tmp_path / "ckR"), PARAMS,
-                            list(PARAMS.feature_names))
+    t1b = score(inc, "e1", "ck")
+    ref = score(feat_table.data_dir, "ref", "ckR")
     key = ["group_key", "win_start", "parent", "child", "lag"]
     a = t1b.read(spark).toPandas().sort_values(key).reset_index(drop=True)
     b = ref.read(spark).toPandas().sort_values(key).reset_index(drop=True)
