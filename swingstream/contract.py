@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from swingstream.config import SwingParams
 from swingstream.functions import textfns as T
 from swingstream.operators.dedup import _fr6
+from swingstream.session import EXCLUDED_OPTIMIZER_RULES, max_partition_bytes
 
 STOP_EN = T.STOPWORDS["en"]
 
@@ -33,23 +34,12 @@ STOP_EN = T.STOPWORDS["en"]
 def _prep(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # driver-owned sessions don't go through swingstream.session — pin
-    # the same optimizer exclusion (see session.py: the inferred
-    # generate filter re-evaluates the whole n-gram build per row)
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
-    # r8 (guide §6): the driver tables are single parquet files with 1-6
-    # row groups; the default 128m split puts a whole CPU-heavy scan in
-    # 1-2 tasks.  16m keeps each row group in its own task (row groups
-    # cap parallelism, so smaller buys nothing).  Same env knob as
-    # session.py for production many-file corpora.
-    import os as _os
-
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        _os.environ.get("SWINGSTREAM_MAX_PARTITION_BYTES", "16m"),
-    )
+    # the same optimizer exclusion (the inferred generate filter
+    # re-evaluates the whole n-gram build per row) and scan split (the
+    # driver tables are single parquet files with 1-6 row groups; the
+    # default 128m split puts a whole CPU-heavy scan in 1-2 tasks)
+    spark.conf.set("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", max_partition_bytes())
 
 
 def _fan(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -17,6 +17,28 @@ from pyspark.sql import SparkSession
 # 1000-executor cluster would raise it via env before first deploy.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SWINGSTREAM_SHUFFLE_PARTITIONS", "64"))
 
+# InferFiltersFromGenerate re-evaluates a projected generator input
+# below the exchange (alias-substituted through the projection) — for
+# this engine's n-gram explodes the inferred size() filter costs a FULL
+# second tokenize+gram build per row and never prunes anything the
+# explode wouldn't (measured 6-30x on the gram operators, round 7).
+# contract._prep sets the same exclusion on the driver-owned session.
+EXCLUDED_OPTIMIZER_RULES = (
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+)
+
+
+def max_partition_bytes() -> str:
+    """Scan split size (r8, guide §6): the fixture tables are single
+    parquet files whose row groups cap scan parallelism; 16m keeps
+    every row group in its own task so CPU-heavy scans use the whole
+    core budget (q05 2.4x, q01 1.3x at sf1.0).  Production corpora of
+    many 128MB+ files want the guide's 512m-1g — override via
+    ``SWINGSTREAM_MAX_PARTITION_BYTES``; a too-small value there only
+    costs empty scheduler splits (tasks whose byte range holds no
+    row-group midpoint), never correctness."""
+    return os.environ.get("SWINGSTREAM_MAX_PARTITION_BYTES", "16m")
+
 
 def get_spark(
     master: str | None = None,
@@ -48,18 +70,7 @@ def get_spark(
         # the sink's per-partition event-time lineage reads footer stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-        # InferFiltersFromGenerate re-evaluates a projected generator
-        # input below the exchange (alias-substituted through the
-        # projection) — for this engine's n-gram explodes the inferred
-        # size() filter costs a FULL second tokenize+gram build per row
-        # and never prunes anything the explode wouldn't (measured 6-30x
-        # on the gram operators, round 7).  contract._prep sets the same
-        # exclusion on the driver-owned session.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromGenerate",
-        )
+        .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
         # RocksDB state store (prod pin): large per-host state spills off
         # heap, changelog checkpointing bounds commit latency
         .config(
@@ -81,18 +92,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SWINGSTREAM_DRIVER_MEM", "8g"))
-        # Scan split size (r8, guide §6): the fixture tables are single
-        # parquet files whose row groups cap scan parallelism; 16m keeps
-        # every row group in its own task so CPU-heavy scans use the
-        # whole core budget (q05 2.4x, q01 1.3x at sf1.0).  Production
-        # corpora of many 128MB+ files want the guide's 512m-1g —
-        # override via env; a too-small value there only costs empty
-        # scheduler splits (tasks whose byte range holds no row-group
-        # midpoint), never correctness.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SWINGSTREAM_MAX_PARTITION_BYTES", "16m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", max_partition_bytes())
         # r8: Spark 4.1 turned on checkpoint-file checksums by default
         # (spark.sql.streaming.checkpoint.fileChecksum.enabled).  Each
         # state-store commit then writes a .crc sidecar per changelog

@@ -21,17 +21,22 @@ background rewrite sharing one snapshot ledger):
     and manifest write is healed by the sink's adoption path — the
     same exactly-once machinery as appends (SURVEY.md §2.8 T9).
 
+Every maintenance pass — dedup, line strip, token-window dedup and
+bin-pack — is one Iceberg rewrite_data_files REPLACE committed through
+``_replace_commits``, the single intent-guarded commit path.  The three
+content passes share ``_rewrite_affected``: a snapshot-global statistic
+(loser ids, boilerplate-line profile, window cut set) is computed once,
+affected rows are attributed to their commit via the parquet scan's
+``_metadata.file_path``, and only the commits holding them are
+rewritten — so the steady-state maintenance loop costs O(data holding
+duplicates) per pass instead of rewriting the whole corpus every cycle,
+and a pass that finds nothing commits nothing.  Small-file
+consolidation is ``compact_small_files``'s job.
+
 Scale shape: each compaction is pair-discovery (banded LSH / digest
 join — never O(n²)) plus CC labels on the pair graph (≪ corpus) plus
 ONE left-anti join filtering the corpus; the corpus side is never
-collected or sorted.  The rewrite itself is TARGETED by default
-(round 5): loser rows are attributed to their commit via the parquet
-scan's ``_metadata.file_path``, and only commits containing losers are
-rewritten — Iceberg's rewrite_data_files granularity, so the
-steady-state maintenance loop costs O(data holding duplicates) per
-pass instead of rewriting the whole corpus every cycle, and a pass
-that finds no duplicates commits nothing.  ``targeted=False`` keeps
-the whole-snapshot rewrite for small-file bin-packing.
+collected or sorted.
 
 Incremental-vs-one-shot parity: an INCREMENTAL (``scope="active"``)
 pass keeps, per duplicate component, the min-id member seen so far;
@@ -43,7 +48,7 @@ cluster members are pairwise similar).  For chain-shaped similarity
 graphs (A~B~C, A≁C) — exactly what the near-dup ``pair_fn`` variants
 produce on template-drift corpora — an incrementally removed bridge
 can leave both endpoints alive.  The ``scope="full-history"`` pass
-(the DEFAULT for the drain-time final compaction) closes that gap
+(the drain-time final compaction) closes that gap
 exactly: pair discovery runs over the union of the ORIGINAL append
 commits (replaced manifests stay on disk as lineage, so the full
 history remains readable), and the anti-join filters the active
@@ -69,28 +74,44 @@ from pyspark.sql import functions as F
 from swingstream.operators.dedup import (
     boilerplate_line_digests,
     dedup_clusters,
-    dedup_survivors,
     exact_dup_pairs,
     line_dedup,
+    window_cut_positions,
+    window_dedup,
 )
 from swingstream.sources.catalog import IcebergLiteTable
 
 
-def _guard_and_record_intent(
-    table: IcebergLiteTable, cid, replaces: list, active_ids: list,
-    scope: str, targeted: bool,
-) -> None:
-    """Crash/retry intent sidecar, shared by every REPLACE-producing
-    maintenance pass: record what the pass will REPLACE — the full
-    active set its output was computed from, AND the parameters it was
-    computed under — BEFORE any data publish.  A retry that finds
-    crash-orphaned published data must see the sets unchanged, else
-    adopting would mark commits replaced without their rows existing in
-    the adopted files (silent row loss; r4 advice) — and must see the
-    SAME scope/targeted parameters, else content computed under the old
-    parameters would be silently committed under the retry's label
-    (r5 advice: a crashed targeted pass retried as full-history that
-    happens to hit the same replaces set would adopt the stale rows)."""
+def _replace_commits(
+    table: IcebergLiteTable, cid, rows: DataFrame, active: list,
+    replaced: list, operation: str, params: dict, **commit_kw,
+) -> dict:
+    """The one commit path of every maintenance pass: REPLACE the
+    ``replaced`` manifests with ``rows`` as commit ``cid``.
+
+    Crash/retry intent: BEFORE any data publish, an ``.intent`` sidecar
+    records the replaced ids, the full ``active`` set the rows were
+    computed from, and ``params``, the parameters they were computed
+    under.  A retry that finds crash-orphaned published data refuses to
+    adopt it — fails loudly, naming the dir to remove to recompute —
+    when the intent is missing, when the active set or the replaced set
+    changed (an append landing between crash and retry would be marked
+    replaced without its rows in the adopted files: silent row loss),
+    or when ``params`` changed (content computed under the old
+    parameters would be committed beneath the retry's).  An intent with
+    no ``params`` record is therefore never adopted.  A ``pair_fn``
+    callable cannot be recorded, so a retry under a different pair
+    function stays unguarded.
+
+    The manifest's metrics carry ``rows_in``, ``input_commits`` and the
+    same ``params``, so a manifest states what its rows were computed
+    under.
+    """
+    intent = {
+        "replaces": [str(m["batch_id"]) for m in replaced],
+        "active": [str(m["batch_id"]) for m in active],
+        "params": params,
+    }
     intent_path = table._manifest_path(cid) + ".intent"
     orphan_dir = os.path.join(table.data_dir, table.batch_dir(cid))
     if os.path.isdir(orphan_dir):
@@ -102,45 +123,95 @@ def _guard_and_record_intent(
             )
         with open(intent_path) as fh:
             recorded = json.load(fh)
-        rec_active = recorded.get("active", recorded["replaces"])
-        if [str(b) for b in rec_active] != active_ids or [
-            str(b) for b in recorded["replaces"]
-        ] != [str(b) for b in replaces]:
+        if any(
+            [str(b) for b in recorded.get(k, ())] != intent[k]
+            for k in ("active", "replaces")
+        ):
             raise RuntimeError(
                 f"compaction {cid} retry: active snapshot changed since "
                 f"the crashed attempt published its files (recorded "
-                f"{recorded['replaces']} of {rec_active}, now {replaces} "
-                f"of {active_ids}) — adopting would mark commits "
-                f"replaced without their rows; remove {orphan_dir} to "
-                f"recompute from the current snapshot"
+                f"{recorded.get('replaces')} of {recorded.get('active')}, "
+                f"now {intent['replaces']} of {intent['active']}) — "
+                f"adopting would mark commits replaced without their "
+                f"rows; remove {orphan_dir} to recompute from the "
+                f"current snapshot"
             )
-        rec_params = (recorded.get("scope"), recorded.get("targeted"))
-        if rec_params != (scope, targeted):
+        if recorded.get("params") != params:
             raise RuntimeError(
                 f"compaction {cid} retry: parameters changed since the "
                 f"crashed attempt published its files (recorded "
-                f"scope/targeted {rec_params}, now {(scope, targeted)}) "
-                f"— adopting would commit content computed under the "
-                f"old parameters beneath the retry's label; remove "
+                f"{recorded.get('params')}, now {params}) — adopting "
+                f"would commit content computed under the old "
+                f"parameters beneath the retry's label; remove "
                 f"{orphan_dir} to recompute with the current parameters"
             )
     else:
         tmp = intent_path + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump(
-                {"replaces": replaces, "active": active_ids,
-                 "scope": scope, "targeted": targeted},
-                fh,
-                default=str,
-            )
+            json.dump(intent, fh)
         os.replace(tmp, intent_path)
+    manifest = table.commit(
+        cid,
+        rows,
+        operation=operation,
+        replaces=[m["batch_id"] for m in replaced],
+        extra_metrics={
+            "rows_in": sum(m["metrics"]["rows"] for m in replaced),
+            "input_commits": len(replaced),
+            **params,
+        },
+        **commit_kw,
+    )
+    # commit() returns None only for an already-committed cid — every
+    # pass checks committed() first, and foreachBatch is serial.  An
+    # explicit raise (not assert: stripped under python -O, which would
+    # clear the intent of someone else's committed snapshot) keeps the
+    # race a deliberate error.
+    if manifest is None:
+        raise RuntimeError(f"{operation} {cid} raced a concurrent commit")
+    os.remove(intent_path)
+    return manifest
 
 
-def _clear_intent(table: IcebergLiteTable, cid) -> None:
-    try:
-        os.remove(table._manifest_path(cid) + ".intent")
-    except OSError:
-        pass
+def _rewrite_affected(
+    spark: SparkSession, table: IcebergLiteTable, cid, operation: str,
+    params: dict, plan: Callable,
+) -> dict | None:
+    """The one targeted pass (Iceberg rewrite_data_files granularity).
+
+    ``plan(docs)`` sees the full active snapshot, computes its
+    snapshot-global statistic once and returns ``(affected, rewrite)``:
+    ``affected(tagged)`` selects the rows the pass would change from the
+    snapshot tagged with each row's commit dir ``_cdir`` (attribution
+    rides the parquet scan's ``_metadata.file_path``, so the corpus is
+    never re-keyed), and ``rewrite(rows)`` maps the affected commits'
+    rows to their replacement.  Only commits holding an affected row are
+    rewritten; none affected, an empty table or an already-committed
+    ``cid`` return None without a commit.
+    """
+    active = table.active_manifests()
+    if not active or table.committed(cid):
+        return None
+    docs = table.read(spark)
+    affected, rewrite = plan(docs)
+    tagged = docs.select(
+        "*",
+        F.element_at(
+            F.split(F.col("_metadata.file_path"), "/"), -2
+        ).alias("_cdir"),
+    )
+    hit_dirs = sorted(
+        r["_cdir"]
+        for r in affected(tagged).select("_cdir").distinct().collect()
+    )
+    if not hit_dirs:
+        return None
+    by_dir = {table.batch_dir(m["batch_id"]): m for m in active}
+    rows = rewrite(tagged.where(F.col("_cdir").isin(hit_dirs)).drop("_cdir"))
+    return _replace_commits(
+        table, cid, rows, active, [by_dir[d] for d in hit_dirs],
+        operation, params,
+    )
 
 
 def compact_dedup(
@@ -150,7 +221,6 @@ def compact_dedup(
     id_col: str = "doc_id",
     compaction_id: str | None = None,
     scope: str = "active",
-    targeted: bool = True,
 ) -> dict | None:
     """One dedup-compaction pass over ``table``'s active snapshot.
 
@@ -161,27 +231,14 @@ def compact_dedup(
     discovers over every original append commit and so restores exact
     one-shot parity on chain-shaped duplicate graphs (module docstring).
     Returns the REPLACE manifest, or None when this compaction_id is
-    already in the ledger (replay no-op), the table is empty, or a
-    targeted pass finds no commit containing a loser (exact no-op).
+    already in the ledger (replay no-op), the table is empty, or no
+    commit contains a loser (exact no-op).
 
-    ``targeted=True`` (default) rewrites ONLY the commits that contain
-    loser rows — Iceberg's rewrite_data_files granularity: commits
-    free of duplicates keep their manifests active untouched, so each
-    periodic pass costs O(affected data), not O(corpus), and the
-    steady-state maintenance loop stops re-writing clean history every
-    cycle.  ``targeted=False`` restores the whole-snapshot rewrite,
-    which additionally BIN-PACKS the corpus into one commit — use it
-    when small-file consolidation is the goal, not just dedup.  Both
-    modes produce the identical surviving row set (the loser set is
-    the same; only the rewrite extent differs).
-
-    Crash/retry safety: the batch_ids this pass will REPLACE are
-    recorded in an ``.intent`` sidecar BEFORE any data is published.  A
-    retry that finds a crash-orphaned published dir verifies the
-    CURRENT active set still equals the recorded one and fails loudly
-    otherwise — an append landing between crash and retry would
-    otherwise be marked replaced without its rows existing in the
-    adopted files (silent row loss; r4 advice).
+    Only the commits that contain loser rows are rewritten: commits
+    free of duplicates keep their manifests active untouched.  The
+    loser set depends on pair discovery over the WHOLE snapshot, so the
+    crash-retry intent pins the full active set (``_replace_commits``)
+    along with ``scope`` and ``id_col``.
 
     Survivor rule: PINNED to min-id (every stream==batch parity test
     keys on it).  The quality-aware best-member policy
@@ -197,11 +254,6 @@ def compact_dedup(
             f"drain pass to the incremental approximation)"
         )
     active = table.active_manifests()
-    if not active:
-        return None
-    cid = compaction_id or f"compact-adhoc-{len(table.manifests())}"
-    if table.committed(cid):
-        return None
     if len(active) == 1 and active[0].get("operation") == "dedup-compaction":
         # already a single compacted rewrite: an "active"-scope pass has
         # nothing to merge, and a full-history pass over a snapshot that
@@ -211,85 +263,25 @@ def compact_dedup(
         if scope == "active" or active[0]["metrics"].get("scope") == "full-history":
             return None
 
-    docs = table.read(spark)
-    basis = table.read_history(spark) if scope == "full-history" else docs
-    pairs = pair_fn(basis).select("id_a", "id_b")
-
-    if targeted:
-        # rewrite ONLY the commits that contain loser rows — the
-        # rewrite_data_files granularity the module docstring promises:
-        # compaction cost is proportional to the data holding
-        # duplicates, not to the corpus, and a pass that discovers no
-        # losers rewrites NOTHING (exact no-op, no REPLACE commit).
-        # Commit attribution rides the parquet scan's _metadata column
-        # (file path → commit dir → manifest), so the corpus is never
-        # re-keyed; the loser set is localCheckpoint'ed because it
-        # drives two actions (the affected-commit probe and the
-        # rewrite) and is tiny (dup-cluster members only, ≪ corpus).
-        by_dir = {table.batch_dir(m["batch_id"]): m for m in active}
-        labels = dedup_clusters(pairs)
+    def plan(docs):
+        # the loser set drives two actions (the affected-commit probe and
+        # the rewrite) and is tiny (dup-cluster members only, ≪ corpus)
+        basis = table.read_history(spark) if scope == "full-history" else docs
         losers = (
-            labels.where(F.col("id") != F.col("cluster_id"))
+            dedup_clusters(pair_fn(basis).select("id_a", "id_b"))
+            .where(F.col("id") != F.col("cluster_id"))
             .select(F.col("id").alias(id_col))
             .localCheckpoint(eager=True)
         )
-        tagged = docs.select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -2
-            ).alias("_cdir"),
+        return (
+            lambda tagged: tagged.join(losers, id_col, "semi"),
+            lambda rows: rows.join(losers, id_col, "left_anti"),
         )
-        hit_dirs = sorted(
-            r["_cdir"]
-            for r in tagged.join(losers, id_col, "semi")
-            .select("_cdir")
-            .distinct()
-            .collect()
-        )
-        if not hit_dirs:
-            return None
-        replaces = [by_dir[d]["batch_id"] for d in hit_dirs]
-        survivors = (
-            tagged.where(F.col("_cdir").isin(hit_dirs))
-            .join(losers, id_col, "left_anti")
-            .drop("_cdir")
-        )
-        rows_in = sum(by_dir[d]["metrics"]["rows"] for d in hit_dirs)
-        input_commits = len(hit_dirs)
-    else:
-        replaces = [m["batch_id"] for m in active]
-        survivors = dedup_survivors(docs, pairs, id_col)
-        rows_in = sum(m["metrics"]["rows"] for m in active)
-        input_commits = len(active)
 
-    # the survivor content of a targeted rewrite depends on pair
-    # discovery over the WHOLE snapshot, not just the replaced part, so
-    # the retry guard pins the full active set alongside the replaces
-    _guard_and_record_intent(
-        table, cid, replaces, [str(m["batch_id"]) for m in active],
-        scope, targeted,
+    return _rewrite_affected(
+        spark, table, compaction_id or f"compact-adhoc-{len(table.manifests())}",
+        "dedup-compaction", {"scope": scope, "id_col": id_col}, plan,
     )
-    manifest = table.commit(
-        cid,
-        survivors,
-        operation="dedup-compaction",
-        replaces=replaces,
-        extra_metrics={
-            "rows_in": rows_in,
-            "input_commits": input_commits,
-            "scope": scope,
-            "targeted": targeted,
-        },
-    )
-    # commit() returns None only for an already-committed cid — excluded
-    # by the committed() check at entry under serial foreachBatch.  An
-    # explicit raise (not assert: stripped under python -O, which would
-    # let _clear_intent run against someone else's committed snapshot
-    # and leak a stale-intent orphan) keeps the race a deliberate error.
-    if manifest is None:
-        raise RuntimeError(f"compaction {cid} raced a concurrent commit")
-    _clear_intent(table, cid)
-    return manifest
 
 
 def compact_strip_lines(
@@ -311,71 +303,39 @@ def compact_strip_lines(
 
     Targeted rewrite: the boilerplate-line profile is computed once
     over the FULL active snapshot (one explode + one digest aggregate),
-    affected documents (those containing >= 1 boilerplate line) are
-    attributed to their commit via ``_metadata.file_path``, and only
-    loser-bearing commits are rewritten — with ``line_dedup`` fed the
-    snapshot-global profile, so the rewritten text is identical to a
-    whole-corpus pass.  A profile that strips nothing commits nothing.
-    Same intent-sidecar crash/retry machinery as the other passes.
+    and only commits holding a document with >= 1 boilerplate line are
+    rewritten — with ``line_dedup`` fed the snapshot-global profile, so
+    the rewritten text is identical to a whole-corpus pass.  A profile
+    that strips nothing commits nothing.  The crash-retry intent pins
+    every argument the stripped text depends on.
     """
-    active = table.active_manifests()
-    if not active:
-        return None
-    cid = compaction_id or f"striplines-adhoc-{len(table.manifests())}"
-    if table.committed(cid):
-        return None
 
-    docs = table.read(spark)
-    bp = boilerplate_line_digests(
-        docs, max_docs_per_line, text_col, id_col, line_sep
-    ).localCheckpoint(eager=True)  # drives the affected-doc probe AND the
-    # rewrite; small (only > max_docs_per_line digests survive)
-
-    by_dir = {table.batch_dir(m["batch_id"]): m for m in active}
-    tagged = docs.select(
-        "*",
-        F.element_at(
-            F.split(F.col("_metadata.file_path"), "/"), -2
-        ).alias("_cdir"),
-    )
-    affected_lines = (
-        tagged.select(
-            "_cdir", F.explode(F.split(F.col(text_col), line_sep)).alias("line")
+    def plan(docs):
+        bp = boilerplate_line_digests(
+            docs, max_docs_per_line, text_col, id_col, line_sep
+        ).localCheckpoint(eager=True)  # drives the affected-doc probe AND
+        # the rewrite; small (only > max_docs_per_line digests survive)
+        return (
+            lambda tagged: tagged.select(
+                "_cdir",
+                F.explode(F.split(F.col(text_col), line_sep)).alias("line"),
+            )
+            .withColumn("digest", F.md5("line"))
+            .join(bp, "digest", "semi"),
+            lambda rows: line_dedup(
+                rows, max_docs_per_line, text_col, id_col, line_sep,
+                boilerplate=bp,
+            ),
         )
-        .withColumn("digest", F.md5("line"))
-        .join(bp, "digest", "semi")
+
+    return _rewrite_affected(
+        spark, table,
+        compaction_id or f"striplines-adhoc-{len(table.manifests())}",
+        "line-dedup-compaction",
+        {"max_docs_per_line": max_docs_per_line, "line_sep": line_sep,
+         "text_col": text_col, "id_col": id_col},
+        plan,
     )
-    hit_dirs = sorted(
-        r["_cdir"] for r in affected_lines.select("_cdir").distinct().collect()
-    )
-    if not hit_dirs:
-        return None
-    replaces = [by_dir[d]["batch_id"] for d in hit_dirs]
-    rewritten = line_dedup(
-        tagged.where(F.col("_cdir").isin(hit_dirs)).drop("_cdir"),
-        max_docs_per_line, text_col, id_col, line_sep,
-        boilerplate=bp,
-    )
-    _guard_and_record_intent(
-        table, cid, replaces, [str(m["batch_id"]) for m in active],
-        "line-dedup", True,
-    )
-    manifest = table.commit(
-        cid,
-        rewritten,
-        operation="line-dedup-compaction",
-        replaces=replaces,
-        extra_metrics={
-            "rows_in": sum(by_dir[d]["metrics"]["rows"] for d in hit_dirs),
-            "input_commits": len(hit_dirs),
-            "scope": "line-dedup",
-            "max_docs_per_line": max_docs_per_line,
-        },
-    )
-    if manifest is None:  # not assert: survives python -O (see compact_dedup)
-        raise RuntimeError(f"strip-lines {cid} raced a concurrent commit")
-    _clear_intent(table, cid)
-    return manifest
 
 
 def compact_window_dedup(
@@ -397,79 +357,39 @@ def compact_window_dedup(
     drained snapshot, never inside a micro-batch gate.
 
     Targeted rewrite: ``window_cut_positions`` runs once over the FULL
-    active snapshot (cut set ≤ repeated-span tokens), affected docs are
-    attributed to their commit via ``_metadata.file_path``, and only
+    active snapshot (cut set ≤ repeated-span tokens), and only
     cut-bearing commits are rewritten with ``window_dedup(cut=...)`` —
     identical text to a whole-corpus pass, O(affected data) rewrite
-    cost.  A cut set that touches nothing commits nothing.  Same
-    intent-sidecar crash/retry machinery as the other passes.
+    cost.  A cut set that touches nothing commits nothing.  The
+    crash-retry intent pins every argument the cut set depends on.
     """
-    from swingstream.operators.dedup import (
-        window_cut_positions,
-        window_dedup,
-    )
 
-    active = table.active_manifests()
-    if not active:
-        return None
-    cid = compaction_id or f"windowdedup-adhoc-{len(table.manifests())}"
-    if table.committed(cid):
-        return None
-
-    docs = table.read(spark)
-    cut = window_cut_positions(
-        docs, k, sample_p, mode, max_docs_per_window, text_col, id_col
-    ).localCheckpoint(eager=True)  # drives the affected probe AND the
-    # rewrite; small (only repeated-span positions survive)
-
-    by_dir = {table.batch_dir(m["batch_id"]): m for m in active}
-    tagged = docs.select(
-        "*",
-        F.element_at(
-            F.split(F.col("_metadata.file_path"), "/"), -2
-        ).alias("_cdir"),
-    )
-    hit_dirs = sorted(
-        r["_cdir"]
-        for r in tagged.join(
-            cut.select(F.col("_wd_id").alias(id_col)).distinct(),
-            id_col,
-            "left_semi",
+    def plan(docs):
+        cut = window_cut_positions(
+            docs, k, sample_p, mode, max_docs_per_window, text_col, id_col
+        ).localCheckpoint(eager=True)  # drives the affected probe AND the
+        # rewrite; small (only repeated-span positions survive)
+        return (
+            lambda tagged: tagged.join(
+                cut.select(F.col("_wd_id").alias(id_col)).distinct(),
+                id_col,
+                "left_semi",
+            ),
+            lambda rows: window_dedup(
+                rows, k, sample_p, mode, max_docs_per_window, text_col,
+                id_col, cut=cut,
+            ),
         )
-        .select("_cdir")
-        .distinct()
-        .collect()
+
+    return _rewrite_affected(
+        spark, table,
+        compaction_id or f"windowdedup-adhoc-{len(table.manifests())}",
+        "window-dedup-compaction",
+        {"k": k, "sample_p": sample_p, "mode": mode,
+         "max_docs_per_window": max_docs_per_window,
+         "text_col": text_col, "id_col": id_col},
+        plan,
     )
-    if not hit_dirs:
-        return None
-    replaces = [by_dir[d]["batch_id"] for d in hit_dirs]
-    rewritten = window_dedup(
-        tagged.where(F.col("_cdir").isin(hit_dirs)).drop("_cdir"),
-        k, sample_p, mode, max_docs_per_window, text_col, id_col,
-        cut=cut,
-    )
-    _guard_and_record_intent(
-        table, cid, replaces, [str(m["batch_id"]) for m in active],
-        "window-dedup", True,
-    )
-    manifest = table.commit(
-        cid,
-        rewritten,
-        operation="window-dedup-compaction",
-        replaces=replaces,
-        extra_metrics={
-            "rows_in": sum(by_dir[d]["metrics"]["rows"] for d in hit_dirs),
-            "input_commits": len(hit_dirs),
-            "scope": "window-dedup",
-            "k": k,
-            "sample_p": sample_p,
-            "mode": mode,
-        },
-    )
-    if manifest is None:  # not assert: survives python -O (see compact_dedup)
-        raise RuntimeError(f"window-dedup {cid} raced a concurrent commit")
-    _clear_intent(table, cid)
-    return manifest
 
 
 def compact_small_files(
@@ -480,8 +400,8 @@ def compact_small_files(
     compaction_id: str | None = None,
 ) -> dict | None:
     """Bin-pack small active commits into one — the OTHER Iceberg
-    rewrite_data_files use-case, complementing the targeted dedup pass
-    (which deliberately stops consolidating duplicate-free commits).
+    rewrite_data_files use-case, complementing the targeted content
+    passes (which deliberately leave unaffected commits alone).
 
     Every active commit with fewer than ``min_rows`` rows is merged
     into a single REPLACE commit of ``target_files`` files.  Streaming
@@ -494,10 +414,9 @@ def compact_small_files(
     dedup here); returns None when fewer than two commits qualify or
     the id was already committed.
 
-    Crash/retry: same intent-sidecar guard as compact_dedup — the
-    merged content is the union of exactly the recorded commits, so a
-    retry must see the same qualifying set (an interleaved small
-    append would change it) or fail loudly.
+    Crash/retry: the merged content is the union of exactly the
+    recorded commits, so a retry must see the same qualifying set (an
+    interleaved small append would change it) or fail loudly.
     """
     active = table.active_manifests()
     cid = compaction_id or f"binpack-adhoc-{len(table.manifests())}"
@@ -506,33 +425,14 @@ def compact_small_files(
     small = [m for m in active if m["metrics"]["rows"] < min_rows]
     if len(small) < 2:
         return None
-    replaces = [m["batch_id"] for m in small]
-    _guard_and_record_intent(
-        table, cid, replaces, [str(m["batch_id"]) for m in active],
-        "bin-pack", False,
-    )
-
     files = [
         os.path.join(table.data_dir, f) for m in small for f in m["files"]
     ]
-    merged = table._read_files(spark, files)
-    manifest = table.commit(
-        cid,
-        merged,
+    return _replace_commits(
+        table, cid, table._read_files(spark, files), active, small,
+        "bin-pack", {"min_rows": min_rows, "target_files": target_files},
         n_files=target_files,
-        operation="bin-pack",
-        replaces=replaces,
-        extra_metrics={
-            "rows_in": sum(m["metrics"]["rows"] for m in small),
-            "input_commits": len(small),
-            "scope": "bin-pack",
-        },
     )
-    # see compact_dedup: unconditional clear so the sidecar can't leak
-    if manifest is None:  # not assert: survives python -O (see compact_dedup)
-        raise RuntimeError(f"bin-pack {cid} raced a concurrent commit")
-    _clear_intent(table, cid)
-    return manifest
 
 
 def run_corpus_stream_with_compaction(
@@ -549,8 +449,6 @@ def run_corpus_stream_with_compaction(
     id_col: str = "url",
     every: int = 4,
     final_compaction: bool = True,
-    final_scope: str = "full-history",
-    targeted: bool = True,
     binpack_every: int = 0,
     binpack_min_rows: int = 100_000,
     final_strip_lines_max_docs: int | None = None,
@@ -567,17 +465,17 @@ def run_corpus_stream_with_compaction(
     when the stream drains, so the end state is fully deduplicated).
 
     The periodic passes are incremental (``scope="active"``); the final
-    pass defaults to ``scope="full-history"`` so the drained table
-    equals the one-shot batch dedup for ANY pair-graph shape, including
-    similarity chains whose bridge doc a periodic pass removed early
-    (module docstring).  Pass ``final_scope="active"`` to keep the
-    cheaper incremental approximation when the pair graph is known to
-    be clique-shaped (exact-content dedup).
+    pass is ``scope="full-history"`` so the drained table equals the
+    one-shot batch dedup for ANY pair-graph shape, including similarity
+    chains whose bridge doc a periodic pass removed early (module
+    docstring).  To keep the cheaper incremental approximation instead
+    (a clique-shaped pair graph, e.g. exact-content dedup), drain with
+    ``final_compaction=False`` and run ``compact_dedup(scope="active")``.
 
     ``binpack_every > 0`` additionally runs ``compact_small_files``
     every that many commits (after the dedup pass when both fire on
-    the same commit): the targeted dedup default deliberately stops
-    consolidating duplicate-free commits, so a long-running stream
+    the same commit): the dedup pass deliberately leaves duplicate-free
+    commits alone, so a long-running stream
     accumulates one small commit per micro-batch — the bin-pack pass
     is the maintenance loop that keeps the active file count bounded.
     Commits at or above ``binpack_min_rows`` rows are never rewritten.
@@ -843,8 +741,7 @@ def run_corpus_stream_with_compaction(
                 mh_index.compact(spark, f"mh-index-binpack-{batch_id}")
         if every > 0 and (batch_id + 1) % every == 0:
             compact_dedup(spark, table, pf, id_col=id_col,
-                          compaction_id=f"compact-{batch_id}",
-                          targeted=targeted)
+                          compaction_id=f"compact-{batch_id}")
         if binpack_every > 0 and (batch_id + 1) % binpack_every == 0:
             compact_small_files(spark, table, min_rows=binpack_min_rows,
                                 compaction_id=f"binpack-{batch_id}")
@@ -868,26 +765,21 @@ def run_corpus_stream_with_compaction(
             for m in table.append_manifests()
             if str(m["batch_id"]).isdigit()
         ]
-        final_id = (
-            f"compact-final-{max(appends)}" if appends else "compact-final"
-        )
+        final = f"final-{max(appends)}" if appends else "final"
         compact_dedup(spark, table, pf, id_col=id_col,
-                      compaction_id=final_id, scope=final_scope,
-                      targeted=targeted)
+                      compaction_id=f"compact-{final}", scope="full-history")
         if final_strip_lines_max_docs is not None:
             compact_strip_lines(
                 spark, table,
                 max_docs_per_line=final_strip_lines_max_docs,
                 id_col=id_col,
-                compaction_id=f"striplines-final-{max(appends)}"
-                if appends else "striplines-final",
+                compaction_id=f"striplines-{final}",
             )
         if final_window_dedup_k is not None:
             compact_window_dedup(
                 spark, table,
                 k=final_window_dedup_k,
                 id_col=id_col,
-                compaction_id=f"windowdedup-final-{max(appends)}"
-                if appends else "windowdedup-final",
+                compaction_id=f"windowdedup-{final}",
             )
     return table

@@ -189,13 +189,9 @@ def test_streaming_dedup_compaction_matches_one_shot_batch(spark, tmp_path):
         .withWatermark("warc_ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["url", "warc_ts"])
     )
-    # targeted=False pins the WHOLE-SNAPSHOT rewrite mode (bin-packing
-    # compaction): every pass collapses the active snapshot to one
-    # commit — the targeted default is pinned separately by
-    # test_targeted_compaction_rewrites_only_affected_commits
     table = run_corpus_stream_with_compaction(
         spark, stream, str(tmp_path / "corpus"), str(tmp_path / "ck"),
-        id_col="row_uid", every=2, targeted=False,
+        id_col="row_uid", every=2,
     )
 
     all_pages = with_uid(
@@ -216,18 +212,15 @@ def test_streaming_dedup_compaction_matches_one_shot_batch(spark, tmp_path):
     assert table.total_rows() == len(expected)
 
     # ledger: compaction manifests carry operation + replaces lineage,
-    # and the active snapshot is exactly the latest rewrite
+    # and the active snapshot holds the latest rewrite (duplicate-free
+    # appends stay active beside it)
     all_m = table.manifests()
     compactions = [m for m in all_m if m.get("operation") == "dedup-compaction"]
     assert compactions, "at least one compaction manifest must exist"
     assert all(m.get("replaces") for m in compactions)
     assert all("rows_in" in m["metrics"] for m in compactions)
-    # (when the last append batch already triggered a periodic pass, the
-    # final drain pass is a structural no-op and the active snapshot is
-    # that periodic rewrite)
     active = table.active_manifests()
-    assert len(active) == 1
-    assert active[0].get("operation") == "dedup-compaction"
+    assert any(a.get("operation") == "dedup-compaction" for a in active)
 
     # exactly-once: replaying any committed compaction id is a no-op,
     # and an idle re-compaction of an already-compacted snapshot too
@@ -266,10 +259,9 @@ def test_compaction_crash_between_publish_and_manifest(spark, tmp_path):
     t.commit(0, batch(0, 50))
     t.commit(1, batch(100, 20))
 
-    # whole-snapshot mode: this test pins the adoption machinery for the
-    # bin-packing rewrite, where the REPLACE covers the full active set
+    # both commits hold losers, so the first pass replaces them both
     pf = lambda d: exact_dup_pairs(d)  # noqa: E731
-    m = compact_dedup(spark, t, pf, compaction_id="compact-1", targeted=False)
+    m = compact_dedup(spark, t, pf, compaction_id="compact-1")
     assert m is not None and m["operation"] == "dedup-compaction"
     survivors = t.total_rows()
     assert survivors == 7  # 7 distinct texts
@@ -289,8 +281,7 @@ def test_compaction_crash_between_publish_and_manifest(spark, tmp_path):
     IcebergLiteTable._write_manifest = boom
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            compact_dedup(spark, t, pf, compaction_id="compact-2",
-                          targeted=False)
+            compact_dedup(spark, t, pf, compaction_id="compact-2")
     finally:
         IcebergLiteTable._write_manifest = orig
     orphan = os.path.join(t.data_dir, "batch-compact-2")
@@ -299,17 +290,18 @@ def test_compaction_crash_between_publish_and_manifest(spark, tmp_path):
     # pre-retry: ledger shows the pre-compaction snapshot (appends intact)
     assert t.total_rows() == survivors + 10
     # retry adopts the published dir and lands the manifest
-    m3 = compact_dedup(spark, t, pf, compaction_id="compact-2",
-                       targeted=False)
+    m3 = compact_dedup(spark, t, pf, compaction_id="compact-2")
     assert m3 is not None
     assert sorted(os.path.basename(f) for f in m3["files"]) == published
     assert t.total_rows() == 7
+    # every row of append 2 loses: only that commit is rewritten (to an
+    # empty REPLACE), and the first rewrite stays active beside it
     active = t.active_manifests()
-    assert [a["batch_id"] for a in active] == ["compact-2"]
+    assert [a["batch_id"] for a in active] == ["compact-1", "compact-2"]
 
 
 def test_targeted_compaction_rewrites_only_affected_commits(spark, tmp_path):
-    """r5: the default targeted compaction implements Iceberg's
+    """r5: dedup compaction implements Iceberg's
     rewrite_data_files granularity — only commits CONTAINING loser rows
     are rewritten; duplicate-free commits keep their append manifests
     active untouched; a pass that finds no losers commits nothing; and
@@ -331,7 +323,7 @@ def test_targeted_compaction_rewrites_only_affected_commits(spark, tmp_path):
     pf = lambda d: exact_dup_pairs(d)  # noqa: E731
 
     m = compact_dedup(spark, t, pf, compaction_id="compact-a")
-    assert m is not None and m["metrics"]["targeted"] is True
+    assert m is not None
     assert [str(b) for b in m["replaces"]] == ["1"]
     assert m["metrics"]["rows_in"] == len(rows1)
     # clean commits' ORIGINAL append manifests are still the active ones
@@ -409,9 +401,7 @@ def test_streaming_harness_periodic_binpack(spark, tmp_path):
     snapshots so they never enter the full-history pair-discovery
     basis, while the targeted rewrite must attribute loser rows onto
     the bin-pack commit dirs they now live in.  Dedup cadence is off
-    (``every=0``) so bin-packing is the only periodic maintenance —
-    with both at the same cadence the dedup pass collapses the active
-    set first and bin-pack correctly no-ops."""
+    (``every=0``) so bin-packing is the only periodic maintenance."""
     from swingstream.operators.dedup import dedup_survivors, exact_dup_pairs
     from swingstream.sources.pages import pages_from_pandas, read_pages_stream
     from swingstream.streaming.compaction import run_corpus_stream_with_compaction
@@ -438,7 +428,7 @@ def test_streaming_harness_periodic_binpack(spark, tmp_path):
     )
     table = run_corpus_stream_with_compaction(
         spark, stream, str(tmp_path / "corpus"), str(tmp_path / "ck"),
-        id_col="row_uid", every=0, targeted=True,
+        id_col="row_uid", every=0,
         binpack_every=2, binpack_min_rows=1_000_000,
     )
 
@@ -1190,10 +1180,13 @@ def test_compaction_chain_semantics_incremental_vs_full_history(spark, tmp_path)
     components; pin BOTH documented behaviors through the streaming
     path: (a) incremental-only compaction leaves exactly the chain
     endpoint alive whose bridge was removed early (the documented
-    approximation — delta == {C}); (b) the default full-history final
-    pass restores exact one-shot parity."""
+    approximation — delta == {C}); (b) the full-history final pass
+    restores exact one-shot parity."""
     from swingstream.operators.dedup import dedup_survivors, minhash_lsh_pairs
-    from swingstream.streaming.compaction import run_corpus_stream_with_compaction
+    from swingstream.streaming.compaction import (
+        compact_dedup,
+        run_corpus_stream_with_compaction,
+    )
 
     pdf = _chain_docs_pdf()
     d = str(tmp_path / "docs_stream")
@@ -1203,14 +1196,15 @@ def test_compaction_chain_semantics_incremental_vs_full_history(spark, tmp_path)
     pf = lambda dd: minhash_lsh_pairs(  # noqa: E731
         dd, jaccard_threshold=0.75, candidate_guard=False)
 
-    def run(name, final_scope):
+    def run(name, final_compaction):
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1).parquet(d)
         )
         return run_corpus_stream_with_compaction(
             spark, stream, str(tmp_path / name), str(tmp_path / f"ck_{name}"),
-            pair_fn=pf, id_col="doc_id", every=1, final_scope=final_scope,
+            pair_fn=pf, id_col="doc_id", every=1,
+            final_compaction=final_compaction,
         )
 
     docs = spark.createDataFrame(pdf)
@@ -1221,13 +1215,16 @@ def test_compaction_chain_semantics_incremental_vs_full_history(spark, tmp_path)
 
     # (a) incremental approximation: C's bridge B was compacted away in
     # batch 0, so C survives — the delta vs one-shot is EXACTLY {3}
-    inc = run("inc", final_scope="active")
+    inc = run("inc", final_compaction=False)
+    compact_dedup(spark, inc, pf, id_col="doc_id",
+                  compaction_id="compact-final", scope="active")
     got_inc = sorted(inc.read(spark).toPandas()["doc_id"])
     assert got_inc == sorted(one_shot + [3])
 
-    # (b) full-history final pass (default): exact one-shot parity —
-    # discovery over the append history finds A~B~C, C loses to min id 1
-    full = run("full", final_scope="full-history")
+    # (b) full-history final pass (the drain default): exact one-shot
+    # parity — discovery over the append history finds A~B~C, C loses
+    # to min id 1
+    full = run("full", final_compaction=True)
     got_full = sorted(full.read(spark).toPandas()["doc_id"])
     assert got_full == one_shot
     final = [m for m in full.manifests()
@@ -1457,8 +1454,8 @@ def test_compaction_retry_refuses_stale_snapshot(spark, tmp_path):
 
 def test_compaction_retry_refuses_changed_parameters(spark, tmp_path):
     """r6 (r5 advice): the crash-retry guard must also pin the
-    PARAMETERS the crashed attempt computed under.  A crashed targeted/
-    active-scope pass retried with a different scope (or targeted flag)
+    PARAMETERS the crashed attempt computed under.  A crashed
+    active-scope pass retried with a different scope
     that happens to produce the same replaces set would otherwise adopt
     the stale rows while the fresh manifest records the retry's
     parameters — content computed under the old label committed under
@@ -1491,7 +1488,7 @@ def test_compaction_retry_refuses_changed_parameters(spark, tmp_path):
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             compact_dedup(spark, t, pf, compaction_id="compact-0",
-                          scope="active", targeted=False)
+                          scope="active")
     finally:
         IcebergLiteTable._write_manifest = orig
     assert os.path.isdir(os.path.join(t.data_dir, "batch-compact-0"))
@@ -1500,16 +1497,12 @@ def test_compaction_retry_refuses_changed_parameters(spark, tmp_path):
     # the retry must refuse to adopt
     with pytest.raises(RuntimeError, match="parameters changed"):
         compact_dedup(spark, t, pf, compaction_id="compact-0",
-                      scope="full-history", targeted=False)
-    # ...and a different targeted flag likewise
-    with pytest.raises(RuntimeError, match="parameters changed"):
-        compact_dedup(spark, t, pf, compaction_id="compact-0",
-                      scope="active", targeted=True)
+                      scope="full-history")
     assert not t.committed("compact-0")
 
     # identical parameters adopt cleanly
     m = compact_dedup(spark, t, pf, compaction_id="compact-0",
-                      scope="active", targeted=False)
+                      scope="active")
     assert m is not None and t.total_rows() == 5
     assert not os.path.exists(t._manifest_path("compact-0") + ".intent")
 
@@ -1522,13 +1515,101 @@ def test_compaction_retry_refuses_changed_parameters(spark, tmp_path):
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             compact_dedup(spark, t, pf, compaction_id="compact-1",
-                          scope="active", targeted=True)
+                          scope="active")
     finally:
         IcebergLiteTable._write_manifest = orig
     shutil.rmtree(os.path.join(t.data_dir, "batch-compact-1"))
     m2 = compact_dedup(spark, t, pf, compaction_id="compact-1",
-                       scope="full-history", targeted=True)
+                       scope="full-history")
     assert m2 is not None and m2["metrics"]["scope"] == "full-history"
+
+
+@pytest.mark.parametrize("pass_name", ["strip_lines", "window_dedup"])
+def test_content_pass_retry_refuses_changed_parameters(
+    spark, tmp_path, pass_name
+):
+    """The line strip and the window dedup pin their parameters in the
+    crash-retry intent too.  Each crashed pass is retried under a
+    changed parameter that rewrites the SAME commits, so only the
+    parameter record can tell the orphan apart: adopting it would keep
+    the old parameters' text under a manifest stating the new ones (a
+    line in 3 docs that max_docs_per_line=2 strips would survive).  An
+    intent with no parameter record is refused too, never adopted."""
+    import json
+
+    from swingstream.streaming.compaction import (
+        compact_strip_lines,
+        compact_window_dedup,
+    )
+
+    span = " ".join(f"s{i}" for i in range(12))
+    if pass_name == "strip_lines":
+        # "boiler" is in 5 docs (stripped at max 4 and at max 2),
+        # "tri" in 3 docs of the same commits (stripped at max 2 only)
+        texts = [[f"keep {b}\nboiler" + ("\ntri" if b < 3 else "")]
+                 for b in range(5)]
+
+        def run(param, cid):
+            return compact_strip_lines(spark, t, max_docs_per_line=param,
+                                       compaction_id=cid)
+        first, changed = 4, 2
+    else:
+        # a 12-token span repeated in commit 1: cut at k=8 and at k=10
+        texts = [[f"a1 {span} a2"], [f"b1 {span} b2"], ["c1 c2 c3"]]
+
+        def run(param, cid):
+            return compact_window_dedup(spark, t, k=param,
+                                        compaction_id=cid)
+        first, changed = 8, 10
+
+    t = IcebergLiteTable(str(tmp_path / "tbl"))
+    for b, rows in enumerate(texts):
+        t.commit(b, spark.createDataFrame(
+            [(b * 10 + i, x) for i, x in enumerate(rows)],
+            "doc_id long, text string"))
+
+    orig = IcebergLiteTable._write_manifest
+
+    def boom(self, batch_id, *a, **k):
+        if str(batch_id) == "pass-0":
+            raise RuntimeError("injected crash before manifest write")
+        return orig(self, batch_id, *a, **k)
+
+    IcebergLiteTable._write_manifest = boom
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run(first, "pass-0")
+    finally:
+        IcebergLiteTable._write_manifest = orig
+    orphan = os.path.join(t.data_dir, "batch-pass-0")
+    assert os.path.isdir(orphan)
+
+    with pytest.raises(RuntimeError, match="parameters changed"):
+        run(changed, "pass-0")
+    assert not t.committed("pass-0")
+
+    # an intent without a parameter record is refused, not adopted
+    intent_path = t._manifest_path("pass-0") + ".intent"
+    with open(intent_path) as fh:
+        intent = json.load(fh)
+    with open(intent_path, "w") as fh:
+        json.dump({k: v for k, v in intent.items() if k != "params"}, fh)
+    with pytest.raises(RuntimeError, match="parameters changed"):
+        run(first, "pass-0")
+    assert not t.committed("pass-0")
+
+    # heal: drop the orphan, recompute under the changed parameter; the
+    # manifest states the parameter its rows were computed under
+    shutil.rmtree(orphan)
+    m = run(changed, "pass-0")
+    assert m is not None and not os.path.exists(intent_path)
+    key = "max_docs_per_line" if pass_name == "strip_lines" else "k"
+    assert m["metrics"][key] == changed
+    got = t.read(spark).orderBy("doc_id").toPandas()["text"].tolist()
+    if pass_name == "strip_lines":
+        assert got == [f"keep {b}" for b in range(5)]
+    else:
+        assert got == [f"a1 {span} a2", "b1 b2", "c1 c2 c3"]
 
 
 def test_soak_kill_resume_full_topology(spark, tmp_path):
