@@ -14,5 +14,3 @@ optimization, Arrow-vectorized pandas UDFs for the numpy regression
 kernels, Structured Streaming for the continuous pipeline.  No RDDs, no
 per-row Python.
 """
-
-__version__ = "0.1.0"

@@ -136,6 +136,3 @@ class SwingParams:
             return 1.0
         i = k - self.min_lag
         return self.lag_weights[i] if 0 <= i < len(self.lag_weights) else 1.0
-
-
-DEFAULT_PARAMS = SwingParams()

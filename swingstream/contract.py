@@ -657,14 +657,6 @@ def q_moving_avg(spark, sf):
     )
 
 
-SQL_MOVING_AVG = """
-SELECT event_id, user_id,
-       ROUND(AVG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 6) AS mov_avg
-FROM events ORDER BY event_id
-"""
-
-
 def q_window_frames(spark, sf):
     """r6 merge of the former q_moving_avg + q_range_window (one window
     slot, same hash coverage of BOTH frame types): the ROWS-frame moving
@@ -1035,27 +1027,6 @@ def q_docs_quality(spark, sf):
     )
 
 
-SQL_DOCS_QUALITY = f"""
-SELECT doc_id,
-  FLOOR(GREATEST(CAST(0.0 AS DOUBLE), LEAST(CAST(1.0 AS DOUBLE),
-    CAST(0.4 AS DOUBLE) * LEAST(LENGTH(text), 500) / CAST(500.0 AS DOUBLE)
-    + CAST(0.3 AS DOUBLE) * (CASE WHEN n_toks = 0 THEN CAST(0.0 AS DOUBLE) ELSE n_stop / n_toks END)
-    - CAST(0.2 AS DOUBLE) * (CASE WHEN LENGTH(text) = 0 THEN CAST(0.0 AS DOUBLE)
-             ELSE (LENGTH(text) - LENGTH(regexp_replace(text, '[!-/:-@\\[-`{{-~]', '', 'g'))) / LENGTH(text) END)
-    - CAST(0.1 AS DOUBLE) * (CASE WHEN LENGTH(text) = 0 THEN CAST(0.0 AS DOUBLE)
-             ELSE (LENGTH(text) - LENGTH(regexp_replace(text, '[0-9]', '', 'g'))) / LENGTH(text) END)
-  )) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE) AS quality
-FROM (
-  SELECT doc_id, text,
-    CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-         ELSE len(string_split_regex(TRIM(text), '\\s+')) END AS n_toks,
-    len(list_filter(string_split_regex(TRIM(LOWER(text)), '\\s+'),
-        t -> list_contains({_sql_list(STOP_EN)}, t))) AS n_stop
-  FROM documents)
-ORDER BY doc_id
-"""
-
-
 def q_docs_langid(spark, sf):
     _prep(spark)
     d = _fan(spark, _t(spark, sf, "documents"))  # r8: 3.1s -> 0.85s at sf1.0
@@ -1072,22 +1043,6 @@ def _sw_count(lg: str) -> str:
         f"len(list_filter(string_split_regex(TRIM(LOWER(text)), '\\s+'), "
         f"t -> list_contains({_sql_list(T.STOPWORDS[lg])}, t)))"
     )
-
-
-SQL_DOCS_LANGID = f"""
-SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n FROM (
-  SELECT lang,
-    CASE WHEN GREATEST(ce, cd, cf, cs) = 0 THEN 'zz'
-         WHEN ce >= cd AND ce >= cf AND ce >= cs THEN 'en'
-         WHEN cd >= cf AND cd >= cs THEN 'de'
-         WHEN cf >= cs THEN 'fr'
-         ELSE 'es' END AS pred_lang
-  FROM (
-    SELECT lang, {_sw_count('en')} AS ce, {_sw_count('de')} AS cd,
-           {_sw_count('fr')} AS cf, {_sw_count('es')} AS cs
-    FROM documents))
-GROUP BY lang, pred_lang ORDER BY lang, pred_lang
-"""
 
 
 def q_docs_text_profile(spark, sf):

@@ -5,13 +5,3 @@ seeded, deterministic numpy computation so that "same input stream +
 watermark => same output rows" holds under task retries and at any
 parallelism (SURVEY.md §4.3 pin #1).
 """
-
-from swingstream.models.lasso import cv_select_alpha, lasso_cd, lasso_importance
-from swingstream.models.rf import extra_trees_importance
-
-__all__ = [
-    "lasso_cd",
-    "cv_select_alpha",
-    "lasso_importance",
-    "extra_trees_importance",
-]

@@ -248,20 +248,6 @@ def cv_select_alpha(
     return float(alphas[int(np.argmin(np.round(mse / n_folds, 12)))])
 
 
-def lasso_importance(
-    X: np.ndarray,
-    y: np.ndarray,
-    alpha: float | None = None,
-    *,
-    n_alphas: int = 10,
-) -> tuple[np.ndarray, float]:
-    """Fit and return (|beta| importance vector, alpha used)."""
-    if alpha is None:
-        alpha = cv_select_alpha(X, y, n_alphas=n_alphas)
-    beta = lasso_cd(X, y, alpha)
-    return np.abs(beta), alpha
-
-
 def bootstrap_stability(
     X: np.ndarray,
     y: np.ndarray,

@@ -1,5 +1,5 @@
 """Benchmark decontamination — the standard training-data curation
-stage between dedup and packing: flag (or drop) training documents that
+stage between dedup and packing: flag training documents that
 share long n-grams with an evaluation set, so eval answers don't leak
 into the training corpus.
 
@@ -184,25 +184,3 @@ def decontaminate(
         docs, corpus, evals, min_hits=min_hits, id_col=id_col,
         broadcast_eval=broadcast_eval,
     )
-
-
-def decontaminated_corpus(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 13,
-    min_hits: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_eval: bool = True,
-    normalize: str = "simple",
-) -> DataFrame:
-    """The filtered corpus: documents with fewer than ``min_hits``
-    eval-overlapping n-grams, all columns unchanged.  One left-anti
-    join against the (small) contaminated-id set — the corpus passes
-    through once."""
-    flagged = decontaminate(
-        docs, eval_docs, n=n, min_hits=min_hits,
-        text_col=text_col, id_col=id_col, broadcast_eval=broadcast_eval,
-        normalize=normalize,
-    ).where(F.col("contaminated")).select(id_col)
-    return docs.join(flagged, id_col, "left_anti")

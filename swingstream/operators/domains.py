@@ -38,8 +38,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["host_counts", "host_cap"]
-
 
 def host_counts(
     docs: DataFrame, host_col: str = "source"

@@ -1,5 +1,5 @@
 """Link-graph extraction — harvest ``<a href>`` targets from crawled
-HTML and aggregate them into host-level edges and per-URL in-degree:
+HTML and aggregate them into per-URL in-degree:
 the signals a web-scale curation pipeline mines for quality (anchor
 coverage ≈ authority) and for frontier/seed expansion.
 
@@ -16,8 +16,8 @@ Catalyst plan:
 * targets are normalized with ``functions.textfns.canonical_url`` —
   the SAME canonicalizer the dedup identity uses, so "the link graph"
   and "the document identity" can never disagree about what a URL is;
-* the edge/in-degree aggregations are word-count-shaped hash-aggs on
-  avalanche-distributed keys (urls/hosts); nothing is collected.
+* the in-degree aggregation is a word-count-shaped hash-agg on
+  avalanche-distributed keys (urls); nothing is collected.
 
 The href regex lives in the Java∩RE2 dialect intersection (see
 operators/pii.py) so the DuckDB oracle replays extraction exactly.
@@ -86,21 +86,4 @@ def in_degree(
             F.count(F.lit(1)).cast("long").alias("n_links"),
             F.count_distinct("src_host").cast("long").alias("n_src_hosts"),
         )
-    )
-
-
-def host_edges(
-    links: DataFrame,
-) -> DataFrame:
-    """Host-level web graph: (src_host, dst_host, n_links) — the
-    Common-Crawl-style host graph, deduplicated to one weighted edge
-    per host pair (word-count shape; self-edges kept, callers filter)."""
-    return (
-        links.select(
-            F.parse_url("src_url", F.lit("HOST")).alias("src_host"),
-            F.parse_url("target", F.lit("HOST")).alias("dst_host"),
-        )
-        .where(F.col("dst_host").isNotNull())
-        .groupBy("src_host", "dst_host")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_links"))
     )

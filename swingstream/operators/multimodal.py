@@ -24,23 +24,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),   # image | audio | video
-        StructField("payload", BinaryType(), True),
-        StructField("meta", MapType(StringType(), StringType()), True),
-    ]
-)
 
 MEDIA_FEATURES_SCHEMA = StructType(
     [

@@ -36,8 +36,8 @@ email+phone form embedded in the streaming admission gate (its
 the q_docs_textquality oracle); it delegates to this module's
 ``count_matches``/``redact`` helpers so there is ONE regex engine.
 This module is the canonical standalone redaction surface (adds IPv4,
-fixed-order counts-on-original semantics, idempotence-safe
-placeholders, and the stats rollup).
+fixed-order counts-on-original semantics and idempotence-safe
+placeholders).
 """
 
 from __future__ import annotations
@@ -104,25 +104,3 @@ def pii_redact(
         text_col,
         redact(F.col(text_col), [(p, ph) for _, p, ph in active]),
     )
-
-
-def pii_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    kinds: tuple[str, ...] = ("email", "phone", "ipv4"),
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Corpus-level PII telemetry: total hits and affected-doc counts
-    per kind, optionally per group (lang/source).  One hash-agg over
-    the redaction map — word-count shape."""
-    red = pii_redact(docs, text_col=text_col, kinds=kinds)
-    aggs = []
-    for kind in kinds:
-        c = F.col(f"n_{kind}")
-        aggs.append(F.sum(c).cast("long").alias(f"total_{kind}"))
-        aggs.append(
-            F.sum((c > 0).cast("long")).cast("long").alias(f"docs_with_{kind}")
-        )
-    if group_cols:
-        return red.groupBy(*group_cols).agg(*aggs)
-    return red.agg(*aggs)

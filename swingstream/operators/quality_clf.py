@@ -218,108 +218,3 @@ def quality_clf_scores(
         counts, model.weight_table(spark), model.bias_micro,
         ids=docs, id_col=id_col,
     ).withColumnRenamed("id", id_col)
-
-
-# ---------------------------------------------------------------------------
-# Admission-gate form — the annotate/gate/rejections trio that plugs the
-# trained classifier into run_corpus_stream_with_compaction exactly like
-# the heuristic textquality trio: annotate each micro-batch ONCE, feed
-# the persisted frame to both the gate and the quarantine split.  A
-# per-doc score under a FIXED model commutes with micro-batching, so
-# streamed gate == one-shot batch gate (pinned by test).
-# ---------------------------------------------------------------------------
-
-_CLF_PARAMS_KEY = "swingstream.quality_clf.params"
-
-
-def model_digest(model: QualityModel) -> str:
-    """Content digest of a trained model (weights + bias + hashing
-    config) — the identity that pins an annotation to the exact model
-    that produced it."""
-    import hashlib
-
-    h = hashlib.blake2b(digest_size=16)
-    h.update(model.w_micro.tobytes())
-    h.update(str(model.bias_micro).encode())
-    h.update(str(model.n_buckets).encode())
-    h.update(model.salt.encode())
-    return h.hexdigest()
-
-
-def clf_annotate(
-    docs: DataFrame,
-    model: QualityModel,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Annotate every doc with its ``quality_score`` under ``model``.
-
-    Idempotent on pre-annotated input under the SAME model: the model's
-    content digest is pinned in the column's schema metadata (survives
-    persist/parquet), and a frame scored by a DIFFERENT model — or
-    source data that coincidentally carries a ``quality_score`` column —
-    raises instead of silently gating on foreign scores (the same
-    discipline as textquality.quality_annotate)."""
-    params = {"model_digest": model_digest(model)}
-    if "quality_score" in docs.columns:
-        meta = docs.schema["quality_score"].metadata or {}
-        prior = meta.get(_CLF_PARAMS_KEY)
-        if prior is None:
-            raise ValueError(
-                "input already carries a 'quality_score' column that "
-                "clf_annotate did not produce (no model metadata) — "
-                "rename or drop it before annotating"
-            )
-        if prior != params:
-            raise ValueError(
-                "input was scored under a different model: existing "
-                f"{prior} vs requested {params} — re-annotate from the "
-                "raw frame or pass the original model"
-            )
-        return docs
-    scores = quality_clf_scores(docs, model, text_col=text_col,
-                                id_col=id_col)
-    return docs.join(
-        scores.select(
-            id_col,
-            F.col("quality_score").alias(
-                "quality_score", metadata={_CLF_PARAMS_KEY: params}
-            ),
-        ),
-        [id_col],
-        "inner",
-    )
-
-
-def clf_gate(
-    docs: DataFrame,
-    model: QualityModel,
-    min_score: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Admission filter: docs scoring ≥ ``min_score`` under ``model``
-    (GPT-3 appendix A keeps documents the classifier prefers; the
-    published practice smooths with a Pareto draw — deliberately NOT
-    done here, so admission is deterministic and replay-exact).  The
-    committed rows CARRY their score: downstream mixture sampling can
-    stratify on it without re-scoring."""
-    return clf_annotate(docs, model, text_col, id_col).where(
-        F.col("quality_score") >= F.lit(float(min_score))
-    )
-
-
-def clf_rejections(
-    docs: DataFrame,
-    model: QualityModel,
-    min_score: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Quarantine complement of ``clf_gate`` (same model + threshold),
-    tagged with the gate that tripped."""
-    return (
-        clf_annotate(docs, model, text_col, id_col)
-        .where(F.col("quality_score") < F.lit(float(min_score)))
-        .withColumn("reject_reason", F.lit("clf_score"))
-    )

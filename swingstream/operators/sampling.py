@@ -1,8 +1,7 @@
-"""Deterministic stratified / token-budget corpus sampling — the stage
-a curation pipeline ends with: pick a reproducible subset per stratum
-(language, quality bucket, source) at an explicit rate, or pick rates
-FROM a token budget so each stratum contributes ~budget tokens to the
-training mix.
+"""Deterministic token-budget corpus sampling — the stage a curation
+pipeline ends with: pick a reproducible subset per stratum (language,
+quality bucket, source) at rates chosen FROM a token budget, so each
+stratum contributes ~budget tokens to the training mix.
 
 No reference-repo twin exists (mount empty) — the semantics follow the
 standard data-mixing practice (per-(lang, quality) rates in the Llama /
@@ -13,7 +12,7 @@ RefinedWeb / Dolma recipes), re-expressed as a Catalyst plan:
   rate, so reruns and incremental shards agree), uniform (xxhash64
   avalanche), monotone in the rate (raising a stratum's rate only ADDS
   docs — supersampling an existing mix never churns it), and
-  embarrassingly parallel (no shuffle at all for the fixed-rate form);
+  embarrassingly parallel;
 * thresholds are INTEGER arithmetic end-to-end
   (``threshold_k = min(K, (budget * K) div stratum_tokens)``) so the
   driver's DuckDB oracle replays the decision bit-for-bit from the
@@ -41,45 +40,6 @@ def sample_residue(
     keys (two different samples of one corpus should not nest unless
     you want them to)."""
     return F.pmod(F.xxhash64(key.cast("string"), F.lit(salt)), F.lit(k))
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_cols: Sequence[str],
-    rates: dict | float,
-    key_col: str = "doc_id",
-    salt: str = "",
-    k: int = SAMPLE_K,
-) -> DataFrame:
-    """Deterministic per-stratum sampling at explicit rates.
-
-    ``rates`` is either one float for every stratum or a dict mapping a
-    stratum value (single column) / tuple (multi column) to a rate in
-    [0, 1]; strata absent from the dict default to 0.0 (dropped) — an
-    explicit mix recipe keeps what it names.  Membership is a pure
-    column predicate (no shuffle, no aggregate): a doc survives iff
-    its residue < int(round(rate * k)) — rounded, not truncated, so a
-    nominal rate maps to the exact intended threshold (0.3 at k=10^6
-    is 300000, not the float-error 299999).
-    """
-    strata = list(strata_cols)
-    res = sample_residue(F.col(key_col), salt=salt, k=k)
-    if isinstance(rates, dict):
-        expr = F.lit(0)
-        for stratum, rate in sorted(rates.items(), key=lambda kv: str(kv[0])):
-            vals = stratum if isinstance(stratum, tuple) else (stratum,)
-            if len(vals) != len(strata):
-                raise ValueError(
-                    f"rate key {stratum!r} arity != strata {strata}"
-                )
-            cond = F.lit(True)
-            for c, v in zip(strata, vals):
-                cond = cond & (F.col(c) == F.lit(v))
-            expr = F.when(cond, F.lit(int(round(rate * k)))).otherwise(expr)
-        threshold = expr
-    else:
-        threshold = F.lit(int(round(float(rates) * k)))
-    return df.where(res < threshold)
 
 
 def token_budget_thresholds(
@@ -156,95 +116,3 @@ def token_budget_sample(
         strata_cols, token_col, budget_per_stratum,
         residue_col="_residue", k=k,
     ).drop("_residue")
-
-
-def mixture_thresholds(
-    df: DataFrame,
-    strata_cols: Sequence[str],
-    token_col: str,
-    target_props: dict,
-    total_budget: int,
-    k: int = SAMPLE_K,
-) -> DataFrame:
-    """Per-stratum thresholds for a Dolma/Llama-style MIXTURE recipe:
-    the mix names each stratum's share of a TOTAL token budget
-    (``{"en": 0.7, "de": 0.3}``) instead of one flat per-stratum budget.
-
-    Integer arithmetic end-to-end: proportions quantize to parts-per-
-    million (``p_ppm``), each stratum's target is
-    ``total_budget * p_ppm div 1e6`` tokens, and
-    ``threshold_k = min(K, target_tokens * K div stratum_tokens)`` —
-    the same BIGINT discipline as token_budget_thresholds, so a DuckDB
-    oracle (or a rerun) replays every membership bit-for-bit.  Strata
-    absent from the recipe get threshold 0 (dropped — an explicit mix
-    keeps what it names); a stratum too small for its share caps at K
-    (keep everything; the achieved-vs-target gap is visible in the
-    returned ``target_tokens``/``stratum_tokens`` columns — upsampling
-    past 1 epoch is a repetition decision this operator refuses to make
-    silently).
-
-    Output: strata_cols + stratum_tokens + target_tokens + threshold_k,
-    ≤ |strata| rows — broadcast it back and filter, exactly like the
-    flat-budget form.
-    """
-    strata = list(strata_cols)
-    total = int(total_budget)
-    ppm = F.lit(0).cast("long")
-    for stratum, p in sorted(target_props.items(), key=lambda kv: str(kv[0])):
-        vals = stratum if isinstance(stratum, tuple) else (stratum,)
-        if len(vals) != len(strata):
-            raise ValueError(f"prop key {stratum!r} arity != strata {strata}")
-        if not (0.0 <= float(p) <= 1.0):
-            raise ValueError(f"proportion for {stratum!r} not in [0,1]: {p}")
-        cond = F.lit(True)
-        for c, v in zip(strata, vals):
-            cond = cond & (F.col(c) == F.lit(v))
-        ppm = F.when(
-            cond, F.lit(int(round(float(p) * 1_000_000))).cast("long")
-        ).otherwise(ppm)
-    return (
-        df.groupBy(*strata)
-        .agg(F.sum(F.col(token_col)).cast("long").alias("stratum_tokens"))
-        .withColumn("_ppm", ppm)
-        .withColumn(
-            "target_tokens",
-            F.expr(f"CAST({total} AS BIGINT) * _ppm div 1000000"),
-        )
-        .withColumn(
-            "threshold_k",
-            F.least(
-                F.lit(k).cast("long"),
-                F.expr(f"target_tokens * CAST({k} AS BIGINT)"
-                       " div stratum_tokens"),
-            ),
-        )
-        .drop("_ppm")
-    )
-
-
-def mixture_sample(
-    df: DataFrame,
-    strata_cols: Sequence[str],
-    token_col: str,
-    target_props: dict,
-    total_budget: int,
-    key_col: str = "doc_id",
-    salt: str = "",
-    k: int = SAMPLE_K,
-) -> DataFrame:
-    """Deterministic mixture sampling: the corpus filtered so each
-    stratum contributes ~``total_budget * target_props[stratum]``
-    tokens.  Same two-pass shape as token_budget_sample (one ≤ |strata|-
-    row aggregate broadcast back, one shuffle-free corpus filter);
-    returns the sampled rows with ``threshold_k`` attached."""
-    strata = list(strata_cols)
-    th = mixture_thresholds(
-        df, strata, token_col, target_props, total_budget, k=k
-    )
-    res = sample_residue(F.col(key_col), salt=salt, k=k)
-    return (
-        df.withColumn("_residue", res)
-        .join(F.broadcast(th.select(*strata, "threshold_k")), strata)
-        .where(F.col("_residue") < F.col("threshold_k"))
-        .drop("_residue")
-    )

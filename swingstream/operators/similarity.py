@@ -14,8 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_M31 = 2_147_483_647
-
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -82,22 +80,19 @@ def brute_force_topk(
     )
 
 
-def _hyperplane_expr(vec_col: str, n_bits: int, seed_col: str | None = None) -> str:
+def _hyperplane_expr(vec_col: str, n_bits: int) -> str:
     """SQL higher-order expression: sign pattern of projections onto
     pseudo-random hyperplanes whose components derive from
-    xxhash64([seed:]bit:dim) mapped into [-1, 1] — deterministic, no
-    driver RNG, no Python.  ``seed_col`` (a column name) yields an
-    independent hyperplane family per value — the per-band families of
-    neardup_pairs_lsh_blas.  (SQL form because shiftleft's Python
+    xxhash64(bit:dim) mapped into [-1, 1] — deterministic, no
+    driver RNG, no Python.  (SQL form because shiftleft's Python
     binding only takes static ints, and the shift amount here is the
     lambda-bound bit index.)"""
-    seed = f"cast({seed_col} as string), '#', " if seed_col else ""
     return f"""
 aggregate(
   transform(sequence(0, {n_bits - 1}), b ->
     if(aggregate(
          zip_with({vec_col}, sequence(0, size({vec_col}) - 1), (x, d) ->
-           x * (cast(pmod(xxhash64(concat({seed}cast(b as string), ':',
+           x * (cast(pmod(xxhash64(concat(cast(b as string), ':',
                                           cast(d as string))), 2001) - 1000
                      as double) / 1000.0)),
          cast(0.0 as double), (acc, v) -> acc + v) > 0,
@@ -193,9 +188,7 @@ def neardup_pairs_blas(
     exact and duplicate-free at ANY threshold.  Per-task memory is
     O((n/n_blocks)² ) sims + two block matrices; replication cost is a
     factor n_blocks on the (small) normalized vectors, never the corpus
-    payload.  At 10^9-vector scale the same kernel runs per LSH bucket
-    instead (``neardup_pairs_lsh_blas``) — block-pair all-pairs is the
-    exact/verification form, bucketing is the discovery form.
+    payload.
     """
     import pandas as pd
 
@@ -235,56 +228,6 @@ def neardup_pairs_blas(
     return (
         replicated.groupBy("bi", "bj")
         .applyInPandas(kernel, _PAIR_SCHEMA_DDL)
-        .orderBy("id_a", "id_b")
-    )
-
-
-def neardup_pairs_lsh_blas(
-    vectors: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = 8,
-    n_bands: int = 4,
-) -> DataFrame:
-    """Embedding near-dup discovery at scale: hyperplane-LSH bucketing
-    (``n_bands`` independent signature families — a pair is a candidate
-    if ANY band buckets it together), then the exact per-bucket BLAS
-    kernel, then pair-level dedup.
-
-    Shuffle key is (band, signature) — uniform for spread-out corpora;
-    only bucket-mates meet in a task, so candidate work is
-    Σ_buckets |bucket|² ≪ n².  Recall is the standard LSH OR-of-bands
-    guarantee: a pair at angle θ survives a band with prob
-    (1 − θ/π)^n_bits, any-of-n_bands ≥ 1 − (1 − p)^bands — tune
-    (n_bits, n_bands) to the threshold.  The cos emitted for a pair is
-    identical in every bucket (same rounded kernel), so dropDuplicates
-    is safe.
-    """
-    import pandas as pd
-
-    base = vectors.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    banded = base.select(
-        "id",
-        "v",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-    ).withColumn(
-        "sig",
-        F.expr(_hyperplane_expr("v", n_bits, seed_col="band")),
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-        ids, Vn = _normalize_rows(pdf)
-        return _pairs_from_sims(ids, ids, Vn @ Vn.T, threshold, upper=True)
-
-    return (
-        banded.groupBy("band", "sig")
-        .applyInPandas(kernel, _PAIR_SCHEMA_DDL)
-        .dropDuplicates(["id_a", "id_b"])
         .orderBy("id_a", "id_b")
     )
 
@@ -410,26 +353,6 @@ def ivf_ann_topk_from_assignments(
         .select("query_id", "cand_id", "cos", "rk")
         .orderBy("query_id", "rk")
     )
-
-
-def ivf_ann_topk(
-    vectors: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 2,
-    n_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN top-k: k-means coarse quantizer buckets + multi-probe —
-    the clustered-corpus complement to hyperplane LSH
-    (lsh_ann_topk_from_sigs).
-    At 10^9-vector scale: centroids train on a sample, assignment is one
-    broadcast join, and each query touches n_probe/n_centroids of the
-    corpus."""
-    assigned, cdf = ivf_assignments(vectors, n_centroids, n_iters, id_col, vec_col)
-    return ivf_ann_topk_from_assignments(assigned, cdf, query_ids, k, n_probe)
 
 
 def neardup_pairs_cosine(

@@ -292,120 +292,3 @@ def pii_scrub(
             t, [(EMAIL_RE, "<EMAIL>"), (PHONE_RE, "<PHONE>")]
         ).alias("text_masked"),
     )
-
-
-# ---------------------------------------------------------------------------
-# URL / domain blocklist filtering — the admission stage that runs
-# BEFORE any text is even extracted (RefinedWeb §3.1 runs a 4.6M-domain
-# blocklist + URL word-score first; it is the cheapest reject in the
-# pipeline).  Composes into run_corpus_stream_with_compaction(gate_fn=)
-# like the other admission transforms; per-doc predicate => commutes
-# with micro-batching by construction.
-# ---------------------------------------------------------------------------
-
-
-def host_suffixes(host: Column) -> Column:
-    """All dot-suffix chains of a hostname: a.b.example.com →
-    [a.b.example.com, b.example.com, example.com, com].  Blocking
-    "example.com" must also block its subdomains; matching by suffix
-    EXPLODE + equi-join keeps the probe a uniform hash join at any
-    blocklist size (an endswith condition against N patterns would be
-    a broadcast nested-loop — O(rows × N)).  Bounded by the label
-    count (≤ ~10 on real hostnames).  Userinfo and port are stripped
-    first — a blocklisted domain must match example.com:8080 and
-    user@example.com too."""
-    bare = F.substring_index(F.substring_index(host, "@", -1), ":", 1)
-    labels = F.split(F.lower(bare), r"\.")
-    n = F.size(labels)
-    return F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.array_join(F.slice(labels, i + 1, n), "."),
-    )
-
-
-def url_gate(
-    docs: DataFrame,
-    blocked_hosts: DataFrame | None = None,
-    blocked_url_re: str | None = None,
-    url_col: str = "url",
-) -> DataFrame:
-    """Admission filter on the URL alone: a doc is rejected when any
-    dot-suffix of its hostname appears in ``blocked_hosts`` (one-column
-    ``host`` frame; subdomains of a blocked domain are blocked) or when
-    the url matches ``blocked_url_re`` (RE2-compatible subset, like
-    every other cross-engine regex here).  Shape: one suffix explode
-    (≤ ~10 rows/doc) + one broadcast-sized equi anti-join on the
-    blocklist + one JVM regexp filter — no text is touched, so the
-    reject costs nothing downstream.
-
-    At a 4.6M-domain blocklist the broadcast still fits (~100 MB of
-    short strings); beyond that drop the broadcast hint and let the
-    suffix equi-join shuffle on its uniform key.
-    """
-    from swingstream.functions.textfns import host_of
-
-    out = docs
-    if blocked_hosts is not None:
-        bl = blocked_hosts.select(F.lower("host").alias("_ug_sfx")).distinct()
-        hits = (
-            docs.select(
-                F.col(url_col),
-                F.explode(
-                    host_suffixes(host_of(F.col(url_col)))
-                ).alias("_ug_sfx"),
-            )
-            .join(F.broadcast(bl), "_ug_sfx", "left_semi")
-            .select(url_col)
-            .distinct()
-        )
-        out = out.join(hits, url_col, "left_anti")
-    if blocked_url_re is not None:
-        out = out.where(~F.lower(F.col(url_col)).rlike(blocked_url_re))
-    return out
-
-
-def url_rejections(
-    docs: DataFrame,
-    blocked_hosts: DataFrame | None = None,
-    blocked_url_re: str | None = None,
-    url_col: str = "url",
-) -> DataFrame:
-    """Quarantine complement of ``url_gate`` (same inputs), tagged with
-    the first rule that tripped — blocked_host outranks blocked_url,
-    mirroring quality_annotate's fixed precedence."""
-    reason = F.lit(None).cast("string")
-    if blocked_url_re is not None:
-        reason = F.when(
-            F.lower(F.col(url_col)).rlike(blocked_url_re),
-            F.lit("blocked_url"),
-        ).otherwise(reason)
-    from swingstream.functions.textfns import host_of
-
-    if blocked_hosts is not None:
-        bl = blocked_hosts.select(F.lower("host").alias("_ug_sfx")).distinct()
-        hosts_hit = (
-            docs.select(
-                F.col(url_col).alias("_ug_url"),
-                F.explode(
-                    host_suffixes(host_of(F.col(url_col)))
-                ).alias("_ug_sfx"),
-            )
-            .join(F.broadcast(bl), "_ug_sfx", "left_semi")
-            .select("_ug_url")
-            .distinct()
-            .withColumn("_ug_hosthit", F.lit(True))
-        )
-        docs = docs.join(
-            hosts_hit, docs[url_col] == hosts_hit["_ug_url"], "left"
-        ).drop("_ug_url")
-        reason = F.when(F.col("_ug_hosthit"), F.lit("blocked_host")).otherwise(
-            reason
-        )
-        return (
-            docs.withColumn("reject_reason", reason)
-            .where(F.col("reject_reason").isNotNull())
-            .drop("_ug_hosthit")
-        )
-    return docs.withColumn("reject_reason", reason).where(
-        F.col("reject_reason").isNotNull()
-    )

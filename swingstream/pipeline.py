@@ -48,43 +48,6 @@ def series_from_wide(
     )
 
 
-def zscore_series(series: DataFrame) -> DataFrame:
-    """P4 batch twin of [ref: Swing/Swing.py::zscore_all_data ~L?]:
-    per-(group, feature) global z-score via explode → agg → join → repack.
-
-    The regression UDF also standardizes per design matrix (the pinned
-    P4 semantics); this operator exists for reference-lifecycle parity
-    and as the A5 exemplar.
-    """
-    long = series.select(
-        "group_key",
-        "replicate",
-        "bucket_idx",
-        "bucket_ts",
-        F.posexplode("features").alias("fidx", "value"),
-    )
-    stats = long.groupBy("group_key", "fidx").agg(
-        F.avg("value").alias("mu"), F.stddev_pop("value").alias("sd")
-    )
-    z = long.join(stats, ["group_key", "fidx"]).withColumn(
-        "zvalue",
-        F.when(F.col("sd") > 0, (F.col("value") - F.col("mu")) / F.col("sd")).otherwise(
-            F.lit(0.0)
-        ),
-    )
-    return (
-        z.groupBy("group_key", "replicate", "bucket_idx", "bucket_ts")
-        .agg(F.array_sort(F.collect_list(F.struct("fidx", "zvalue"))).alias("fs"))
-        .select(
-            "group_key",
-            "replicate",
-            "bucket_idx",
-            "bucket_ts",
-            F.transform("fs", lambda s: s["zvalue"]).alias("features"),
-        )
-    )
-
-
 def swing_batch(
     series: DataFrame,
     params: SwingParams,

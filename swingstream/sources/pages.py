@@ -28,10 +28,6 @@ PAGES_SCHEMA = StructType(
 )
 
 
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(PAGES_SCHEMA).parquet(path)
-
-
 def read_pages_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:

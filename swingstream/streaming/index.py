@@ -78,8 +78,6 @@ from pyspark.sql import functions as F
 
 from swingstream.sources.catalog import ManifestLedger
 
-__all__ = ["DigestIndex", "MinHashIndex", "digest_bucket"]
-
 
 def digest_bucket(digest: Column, n_buckets: int) -> Column:
     """Index bucket of a digest — pinned here so writers and probes can

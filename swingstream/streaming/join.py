@@ -10,8 +10,11 @@ of each host's buckets.
 
 This is the relational formulation of the lagged design matrix; the
 production pipeline uses the rolling-buffer form (state.py) because one
-grouped-map already materializes the whole design, but this query is
-kept first-class (own pipeline + test) per SURVEY.md §3.4's decision.
+grouped-map already materializes the whole design.  No program path
+calls this module: it is kept as a root of tests/test_no_dead_code.py
+because it is the BASELINE.json stateful stream-stream self-join, and
+``lagged_pairs_batch`` is the reference the stream form is compared
+against.
 """
 
 from __future__ import annotations

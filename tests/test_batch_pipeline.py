@@ -15,7 +15,6 @@ from swingstream.pipeline import (
     series_from_features,
     series_from_wide,
     swing_batch,
-    zscore_series,
 )
 from swingstream.sources.pages import pages_from_pandas
 
@@ -72,17 +71,6 @@ def test_densify_fills_gaps(spark, spark_pages):
     for _, grp in dense.groupby("group_key"):
         idx = np.sort(grp["bucket_idx"].to_numpy())
         assert (np.diff(idx) == 1).all()
-
-
-def test_zscore_series(spark):
-    wide, _ = gen_series(n_features=4, n_buckets=12, n_replicates=2)
-    series = series_from_wide(
-        spark.createDataFrame(wide), [f"g{i}" for i in range(1, 5)]
-    )
-    z = zscore_series(series).toPandas()
-    vals = np.stack(z["features"].to_numpy())
-    np.testing.assert_allclose(vals.mean(axis=0), 0.0, atol=1e-9)
-    np.testing.assert_allclose(vals.std(axis=0), 1.0, atol=1e-9)
 
 
 @pytest.mark.parametrize("method", ["lasso", "rf"])

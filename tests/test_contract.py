@@ -149,33 +149,6 @@ def test_neardup_blas_matches_hof(spark):
     np.testing.assert_allclose(a["cos"], b["cos"], atol=2e-9)
 
 
-def test_udtf_edge_explode_matches_posexplode(spark):
-    """U5 alternate form: the Python UDTF fan-out == the relational
-    arrays_zip + explode formulation."""
-    from swingstream.functions.udtf import register
-
-    register(spark)
-    spark.sql("""
-        CREATE OR REPLACE TEMP VIEW targets AS
-        SELECT * FROM VALUES
-          ('g1', array('g2','g3'), array(1, 2), array(0.5, 0.0)),
-          ('g2', array('g1','g3'), array(1, 2), array(0.25, 0.75))
-        AS t(child, parents, lags, importances)
-    """)
-    got = spark.sql("""
-        SELECT t.child, e.parent, e.lag, e.importance
-        FROM targets t, LATERAL edge_explode(t.parents, t.lags, t.importances) e
-        ORDER BY child, parent
-    """).toPandas()
-    want = spark.sql("""
-        SELECT child, z.parents AS parent, CAST(z.lags AS INT) AS lag,
-               CAST(z.importances AS DOUBLE) AS importance
-        FROM targets LATERAL VIEW explode(arrays_zip(parents, lags, importances)) AS z
-        ORDER BY child, parent
-    """).toPandas()
-    pd.testing.assert_frame_equal(got, want)
-
-
 def test_line_dedup_query_strips_only_injected_boilerplate(spark):
     """Local mirror for the rows-only q_docs_line_dedup: the injected
     boilerplate line is stripped from the doc_id % 4 == 0 docs and the

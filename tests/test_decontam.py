@@ -7,11 +7,9 @@ cases where the expected overlap is hand-checkable."""
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from swingstream.operators.decontam import (
     decontaminate,
-    decontaminated_corpus,
     eval_digest_set,
     ngram_digest_table,
 )
@@ -109,14 +107,6 @@ def test_decontaminate_min_hits_threshold(spark):
     assert not bool(out.loc[1, "contaminated"])  # 1 < 2
 
 
-def test_decontaminated_corpus_drops_only_flagged(spark):
-    docs = _docs(spark)
-    clean = decontaminated_corpus(docs, _eval(spark), n=8)
-    assert sorted(clean.toPandas()["doc_id"]) == [2, 3, 4]
-    # all columns pass through unchanged
-    assert clean.columns == docs.columns
-
-
 def test_digest_tables_are_distinct_per_doc(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": [0], "text": ["a b a b a b a b a b"]})
@@ -134,82 +124,3 @@ def test_decontaminate_plan_broadcasts_eval_and_stays_jvm_side(spark):
     df = decontaminate(_docs(spark), _eval(spark), n=8)
     assert has_broadcast_join(df)
     assert "Python" not in explain_str(df, "simple")
-
-
-def test_decontam_composes_into_streaming_admission_gate(spark, tmp_path):
-    """Decontamination against a FIXED eval set is per-doc (a doc's
-    verdict never depends on other corpus docs), so unlike line dedup it
-    commutes with micro-batching and belongs IN the admission gate:
-    streamed gate(quality -> decontam) + dedup == one-shot batch of the
-    same composition.  Pins that the gate_fn contract accepts composed
-    curation stages, not just quality_gate."""
-    import hashlib
-
-    import pytest  # noqa: F401
-    from pyspark.sql import functions as F
-
-    from swingstream.fixtures import PagesSpec, gen_pages, write_pages_stream_dir
-    from swingstream.operators.dedup import dedup_survivors, exact_dup_pairs
-    from swingstream.operators.textquality import quality_gate
-    from swingstream.sources.pages import pages_from_pandas, read_pages_stream
-    from swingstream.streaming.compaction import run_corpus_stream_with_compaction
-
-    spec = PagesSpec(n_hosts=3, n_buckets=16, base_docs_per_bucket=3,
-                     content_dup_frac=0.1, late_frac=0.0)
-    pdf = gen_pages(spec)
-    key = pdf["url"] + "@" + pdf["warc_ts"].astype("int64").astype(str)
-    h = key.map(lambda s: int(hashlib.md5(s.encode()).hexdigest()[:8], 16))
-    leak = h % 5 == 0
-    pdf.loc[leak, "text"] = (
-        pdf.loc[leak, "text"] + " " + EVAL_SENT
-    )
-    assert leak.sum() > 5
-    d = tmp_path / "decontam_stream"
-    write_pages_stream_dir(pdf, str(d), n_files=4)
-
-    eval_docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0], "text": [EVAL_SENT]})
-    )
-    kw = dict(id_col="row_uid", text_col="text",
-              min_tokens=3, max_top_token_frac=0.9, max_dup_bigram_frac=0.97)
-
-    def gate(dd):
-        return decontaminated_corpus(
-            quality_gate(dd, **kw), eval_docs, n=8, id_col="row_uid")
-
-    def with_uid(df):
-        return df.withColumn(
-            "row_uid",
-            F.concat_ws("@", "url", F.unix_micros(
-                F.col("warc_ts").cast("timestamp")).cast("string")),
-        )
-
-    stream = with_uid(
-        read_pages_stream(spark, str(d), max_files_per_trigger=1)
-        .withWatermark("warc_ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["url", "warc_ts"])
-    )
-    table = run_corpus_stream_with_compaction(
-        spark, stream, str(tmp_path / "dc_corpus"), str(tmp_path / "dc_ck"),
-        gate_fn=gate, id_col="row_uid", every=2,
-    )
-
-    all_pages = with_uid(
-        pages_from_pandas(spark, pdf).dropDuplicates(["url", "warc_ts"])
-    )
-    gated = gate(all_pages)
-    expected = (
-        dedup_survivors(gated, exact_dup_pairs(gated, id_col="row_uid"),
-                        "row_uid")
-        .select("row_uid", "text").toPandas()
-        .sort_values("row_uid").reset_index(drop=True)
-    )
-    got = (
-        table.read(spark).select("row_uid", "text").toPandas()
-        .sort_values("row_uid").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, expected)
-    # the decontam stage actually dropped the leaked docs
-    n_unique = int(pdf.drop_duplicates(["url", "warc_ts"]).shape[0])
-    assert len(got) < n_unique
-    assert not got["text"].str.contains(EVAL_SENT, regex=False).any()

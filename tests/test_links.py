@@ -1,6 +1,6 @@
 """Unit tests for swingstream/operators/links.py — href extraction,
 link-farm cap, canonical-target consistency with the dedup identity,
-in-degree/host-edge aggregation, and plan hygiene.  The contract query
+in-degree aggregation, and plan hygiene.  The contract query
 q_docs_links hash-verifies extraction + in-degree against DuckDB."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from swingstream.operators.links import (
     extract_links,
-    host_edges,
     in_degree,
 )
 
@@ -99,17 +98,6 @@ def test_in_degree_counts_distinct_hosts(pages):
     # b.com/p linked from a.com and c.com — 2 links, 2 distinct hosts
     assert deg["http://b.com/p"] == (2, 2)
     assert deg["https://c.com/q"] == (1, 1)
-
-
-def test_host_edges(pages):
-    links = extract_links(pages, html_col="html", url_col="url")
-    e = {
-        (r.src_host, r.dst_host): r.n_links
-        for r in host_edges(links).collect()
-    }
-    assert e[("a.com", "b.com")] == 1
-    assert e[("c.com", "b.com")] == 1
-    assert e[("d.com", "a.com")] == 1
 
 
 def test_plan_jvm_only(pages):

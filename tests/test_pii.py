@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from swingstream.operators.pii import PII_PATTERNS, pii_redact, pii_stats
+from swingstream.operators.pii import PII_PATTERNS, pii_redact
 
 
 def _mk(spark, rows):
@@ -78,15 +78,6 @@ def test_kinds_subset_and_validation(corpus):
     assert "n_email" in out and "n_phone" not in out
     with pytest.raises(ValueError):
         pii_redact(corpus, kinds=("email", "ssn"))
-
-
-def test_stats_rollup(corpus):
-    g = {r.lang: r for r in pii_stats(corpus, group_cols=("lang",)).collect()}
-    assert g["fr"].total_email == 3 and g["fr"].docs_with_email == 1
-    assert g["en"].total_phone == 3 and g["en"].docs_with_phone == 2
-    assert g["de"].total_ipv4 == 0
-    tot = pii_stats(corpus).collect()[0]
-    assert tot.total_email == 4 and tot.total_ipv4 == 3
 
 
 def test_plan_is_jvm_only_and_shuffle_free(corpus):

@@ -44,13 +44,13 @@ def test_feature_scan_prunes_html(spark, tmp_path, pages_df):
     """§4.3 pin #4: the html binary must never reach the feature scan
     when text is already materialized (batch path reads text, not html)."""
     from swingstream.operators.features import host_bucket_features
-    from swingstream.sources.pages import read_pages
+    from swingstream.sources.pages import PAGES_SCHEMA
 
     p = str(tmp_path / "pages")
     pages_df.drop(columns=["arrival_idx"]).to_parquet(p + ".parquet", index=False)
     os.makedirs(p)
     os.replace(p + ".parquet", p + "/part-0.parquet")
-    pages = read_pages(spark, p)
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(p)
     feats = host_bucket_features(pages, SwingParams())
     cols = read_schema_columns(feats)
     assert "html" not in cols, f"html must be pruned from the scan: {cols}"

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from swingstream.operators.quality_clf import (
     quality_clf_scores,
@@ -88,84 +87,3 @@ def test_training_sample_is_bounded(spark):
         max_train_docs=25, n_iter=5,
     )
     assert m.n_buckets == B  # trained fine on the capped sample
-
-
-def test_clf_annotate_idempotent_and_model_pinned(spark):
-    import pytest
-
-    from swingstream.operators.quality_clf import clf_annotate, clf_gate
-
-    pos, neg = _df(spark, GOOD), _df(spark, SPAM, start=100)
-    m = train_quality_classifier(pos, neg, n_buckets=B, n_iter=50)
-    docs = _df(spark, GOOD + SPAM)
-    once = clf_annotate(docs, m)
-    assert clf_annotate(once, m) is once  # same model: pass-through
-
-    # a DIFFERENT model must refuse the stale annotation
-    m2 = train_quality_classifier(pos, neg, n_buckets=B, n_iter=51)
-    with pytest.raises(ValueError, match="different model"):
-        clf_annotate(once, m2)
-    # a foreign quality_score column (no metadata) must refuse too
-    foreign = docs.withColumn("quality_score", F.lit(1.0))
-    with pytest.raises(ValueError, match="did not produce"):
-        clf_annotate(foreign, m)
-    # gating on the pre-annotated frame works without re-scoring
-    admitted = clf_gate(once, m, min_score=0.5)
-    assert admitted.count() == len(GOOD)
-
-
-def test_clf_gate_streamed_matches_batch(spark, tmp_path):
-    """Classifier-gated ingest composes into the streaming admission
-    path: annotate-once + gate + quarantine per micro-batch, drained
-    result == one-shot batch clf_gate (per-doc scoring under a fixed
-    model commutes with micro-batching)."""
-    from swingstream.operators.quality_clf import (
-        clf_annotate,
-        clf_gate,
-        clf_rejections,
-    )
-    from swingstream.sources.catalog import IcebergLiteTable
-    from swingstream.streaming.compaction import (
-        run_corpus_stream_with_compaction,
-    )
-
-    pos, neg = _df(spark, GOOD), _df(spark, SPAM, start=100)
-    m = train_quality_classifier(pos, neg, n_buckets=B, n_iter=100)
-
-    # a mixed corpus streamed in 4 files
-    texts = (GOOD + SPAM) * 3
-    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    d = tmp_path / "stream"
-    d.mkdir()
-    for i, chunk in enumerate(np.array_split(np.arange(len(pdf)), 4)):
-        pdf.iloc[chunk].to_parquet(d / f"part-{i:04d}.parquet", index=False)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    table = run_corpus_stream_with_compaction(
-        spark,
-        stream,
-        str(tmp_path / "corpus"),
-        str(tmp_path / "ck"),
-        id_col="doc_id",
-        every=0,
-        final_compaction=False,
-        annotate_fn=lambda df: clf_annotate(df, m),
-        gate_fn=lambda df: clf_gate(df, m, min_score=0.5),
-        reject_fn=lambda df: clf_rejections(df, m, min_score=0.5),
-        quarantine_root=str(tmp_path / "quarantine"),
-    )
-
-    docs = spark.createDataFrame(pdf)
-    want = clf_gate(docs, m, min_score=0.5).orderBy("doc_id").toPandas()
-    got = table.read(spark).orderBy("doc_id").toPandas()
-    pd.testing.assert_frame_equal(got[want.columns], want)
-    assert (got["quality_score"] >= 0.5).all()
-
-    q = IcebergLiteTable(str(tmp_path / "quarantine")).read(spark).toPandas()
-    assert len(q) + len(got) == len(pdf)
-    assert (q["reject_reason"] == "clf_score").all()
-    assert (q["quality_score"] < 0.5).all()

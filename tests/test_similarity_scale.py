@@ -1,13 +1,12 @@
 """Scale-path tests for the near-duplicate kernels: the distributed
-block-pair BLAS form is exact at any threshold; the LSH-bucketed form
-finds planted near-dups while doing ≪ n² candidate work.
+block-pair BLAS form is exact at any threshold; IVF multi-probe
+recovers most exact top-k neighbours.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -41,40 +40,6 @@ def test_blockpair_blas_exact_at_low_threshold(spark, planted_vectors):
     np.testing.assert_allclose(a["cos"], b["cos"], atol=2e-9)
 
 
-def test_lsh_blas_recall_and_candidate_bound(spark, planted_vectors):
-    from swingstream.operators.similarity import (
-        neardup_pairs_cosine,
-        neardup_pairs_lsh_blas,
-        _hyperplane_expr,
-    )
-
-    exact = neardup_pairs_cosine(planted_vectors, threshold=0.9).toPandas()
-    lsh = neardup_pairs_lsh_blas(
-        planted_vectors, threshold=0.9, n_bits=8, n_bands=6
-    ).toPandas()
-    exact_pairs = set(zip(exact["id_a"], exact["id_b"]))
-    lsh_pairs = set(zip(lsh["id_a"], lsh["id_b"]))
-    assert exact_pairs, "fixture must plant near-dup pairs"
-    # no false positives possible (every candidate is exact-verified)
-    assert lsh_pairs <= exact_pairs
-    recall = len(lsh_pairs & exact_pairs) / len(exact_pairs)
-    assert recall >= 0.9, f"LSH recall {recall:.2f} < 0.9"
-
-    # candidate work bound: Σ_buckets |bucket|² ≪ n² per band
-    n = planted_vectors.count()
-    banded = planted_vectors.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("v"),
-        F.explode(F.sequence(F.lit(0), F.lit(5))).alias("band"),
-    ).withColumn("sig", F.expr(_hyperplane_expr("v", 8, seed_col="band")))
-    sizes = (
-        banded.groupBy("band", "sig").count().groupBy("band")
-        .agg(F.sum(F.col("count") * F.col("count")).alias("work"))
-        .toPandas()
-    )
-    assert (sizes["work"] < n * n / 4).all(), sizes
-
-
 def test_neardup_blas_has_no_driver_collect():
     """The round-1 kernel collected the corpus to the driver; the
     block-pair form must never — guard the source itself."""
@@ -82,20 +47,25 @@ def test_neardup_blas_has_no_driver_collect():
 
     from swingstream.operators import similarity
 
-    for fn in (similarity.neardup_pairs_blas, similarity.neardup_pairs_lsh_blas):
-        src = inspect.getsource(fn)
-        assert ".collect(" not in src and "broadcast(" not in src, fn.__name__
+    src = inspect.getsource(similarity.neardup_pairs_blas)
+    assert ".collect(" not in src and "broadcast(" not in src
 
 
 def test_ivf_ann_recall(spark, planted_vectors):
     """IVF multi-probe must recover most exact top-5 neighbors while
     touching only n_probe/n_centroids of the corpus per query."""
-    from swingstream.operators.similarity import brute_force_topk, ivf_ann_topk
+    from swingstream.operators.similarity import (
+        brute_force_topk,
+        ivf_ann_topk_from_assignments,
+        ivf_assignments,
+    )
 
     qids = [0, 1, 2, 3, 4, 5, 6, 7]
     exact = brute_force_topk(planted_vectors, qids, k=5).toPandas()
-    ivf = ivf_ann_topk(planted_vectors, qids, k=5, n_centroids=8,
-                       n_probe=3, n_iters=4).toPandas()
+    assigned, centroids = ivf_assignments(planted_vectors, n_centroids=8,
+                                          n_iters=4)
+    ivf = ivf_ann_topk_from_assignments(assigned, centroids, qids, k=5,
+                                        n_probe=3).toPandas()
     exact_sets = exact.groupby("query_id")["cand_id"].apply(set)
     ivf_sets = ivf.groupby("query_id")["cand_id"].apply(set)
     hits = sum(len(exact_sets[q] & ivf_sets.get(q, set())) for q in qids)

@@ -270,69 +270,6 @@ def test_quality_annotate_metadata_survives_parquet(spark, tmp_path):
         quality_gate(back, min_tokens=4)
 
 
-def test_url_gate_blocks_domain_suffixes_and_patterns(spark):
-    import pandas as pd
-
-    from swingstream.operators.textquality import (
-        host_suffixes,
-        url_gate,
-        url_rejections,
-    )
-
-    docs = spark.createDataFrame(pd.DataFrame({
-        "url": [
-            "https://ok.example.org/page",            # clean
-            "https://spam.example.com/a",             # subdomain of blocked
-            "https://example.com/b",                  # blocked exactly
-            "https://notexample.com/c",               # NOT a dot-suffix
-            "https://user@example.com:8080/d",        # userinfo+port stripped
-            "https://fine.org/casino-bonus",          # regex-blocked path
-        ],
-        "text": [f"t{i}" for i in range(6)],
-    }))
-    blocked = spark.createDataFrame(
-        pd.DataFrame({"host": ["EXAMPLE.com"]})  # case-folded both sides
-    )
-    kept = url_gate(docs, blocked_hosts=blocked,
-                    blocked_url_re=r"casino").select("url").toPandas()
-    assert sorted(kept["url"]) == [
-        "https://notexample.com/c",
-        "https://ok.example.org/page",
-    ]
-    rej = url_rejections(docs, blocked_hosts=blocked,
-                         blocked_url_re=r"casino").toPandas()
-    reasons = dict(zip(rej["url"], rej["reject_reason"]))
-    assert reasons["https://spam.example.com/a"] == "blocked_host"
-    assert reasons["https://example.com/b"] == "blocked_host"
-    assert reasons["https://user@example.com:8080/d"] == "blocked_host"
-    assert reasons["https://fine.org/casino-bonus"] == "blocked_url"
-    assert len(rej) + len(kept) == 6
-
-    # suffix chain itself
-    row = spark.range(1).select(
-        host_suffixes(F.lit("A.b.Example.COM")).alias("s")).first()
-    assert row["s"] == ["a.b.example.com", "b.example.com",
-                        "example.com", "com"]
-
-
-def test_url_gate_plan_is_jvm_only_with_broadcast_blocklist(spark):
-    import pandas as pd
-
-    from swingstream.operators.textquality import url_gate
-    from swingstream.plans.explain import explain_str, has_broadcast_join
-
-    docs = spark.createDataFrame(pd.DataFrame({
-        "url": [f"https://h{i}.net/x" for i in range(50)],
-        "text": ["t"] * 50,
-    }))
-    blocked = spark.createDataFrame(pd.DataFrame({"host": ["h7.net"]}))
-    gated = url_gate(docs, blocked_hosts=blocked)
-    plan = explain_str(gated, "simple")
-    assert "Python" not in plan and "ArrowEval" not in plan
-    assert has_broadcast_join(gated)
-    assert gated.count() == 49
-
-
 def test_quality_gate_mask_patterns_extends_to_canonical_set(spark):
     """mask_patterns lets the gate mask the full canonical PII set
     (adds IPv4) while the default stays the golden-pinned email/phone
