@@ -11,8 +11,9 @@ Scale design notes (10^12-document regime):
     for 5k docs; the kernel is ~2 s warm).  Banding turns O(n^2) pair
     search into an equi-join on (band_idx, band_hash) — the shuffle key
     is uniform by construction; candidates are verified with exact
-    shingle-Jaccard.  Signature tables persist across the self-join
-    (or stage to parquet, which is also what the DuckDB oracle replays).
+    shingle-Jaccard.  Signature tables are local-checkpointed across
+    the self-join (or staged to parquet, which is also what the DuckDB
+    oracle replays).
   * SimHash: 63-bit majority vote packed in an Arrow kernel over
     JVM-side token hashes; near-dup = OR-of-bands candidate equi-join
     (default: Manku WWW'07 4×16-bit bands at max_hamming=3 — guaranteed
@@ -47,32 +48,27 @@ _MERSENNE31 = 2_147_483_647  # 2^31 - 1
 def candidate_bound_check(
     bucketed: DataFrame,
     bucket_cols: list[str],
-    n_rows: int | None,
     op: str,
+    rows_per_input: int,
     factor: float = 50.0,
     min_candidates: int = 10_000_000,
-    rows_per_input: int | None = None,
 ) -> None:
     """Fail loudly when LSH banding degenerates to a near-cartesian join.
 
     Σ|bucket|² over the banding key IS the exact row count the candidate
     self-join will produce (before the id_a < id_b halving) — computed
-    here with one cheap aggregate on the (persisted) signature table, so
-    a degenerate corpus (tiny vocabulary, constant template pages) can't
-    silently re-create the O(n²) join that LSH exists to avoid, burn the
-    cluster, and *look* like a slow-but-working job.  The bound is
-    max(min_candidates, factor·n): small corpora are allowed their
-    harmless quadratic (500 degenerate docs → ~2M candidates — fine);
-    at production n the factor·n term keeps candidates linear in input.
+    here with one cheap aggregate on the (checkpointed) signature table,
+    so a degenerate corpus (tiny vocabulary, constant template pages)
+    can't silently re-create the O(n²) join that LSH exists to avoid,
+    burn the cluster, and *look* like a slow-but-working job.  The bound
+    is max(min_candidates, factor·n): small corpora are allowed their
+    harmless quadratic (500 degenerate docs → ~2M candidates — fine); at
+    production n the factor·n term keeps candidates linear in input.
 
-    r8 (guide §5 — fewer driver round-trips): when the banding explodes
-    each input row into a FIXED ``rows_per_input`` rows (minhash: one
-    row per band; simhash: posexplode of the band array), n is exactly
-    Σ|bucket| / rows_per_input — pass ``n_rows=None`` with
-    ``rows_per_input=<bands>`` and the guard derives n inside the SAME
-    aggregate instead of the caller paying a separate ``count()`` job
-    (which was the job that materialized the persisted sig table; that
-    work now happens under this one job instead of two).  A Σ|bucket|
+    The banding explodes each input row into exactly ``rows_per_input``
+    rows (one per band), so n = Σ|bucket| / rows_per_input comes out of
+    the same aggregate — one Spark job, which is also the job that
+    materializes the signature table the join then reads.  A Σ|bucket|
     that is not a multiple of ``rows_per_input`` breaks that invariant
     (a filtered banding, a wrong ``rows_per_input``) and raises
     ValueError rather than guarding with an understated n.
@@ -87,17 +83,14 @@ def candidate_bound_check(
         .first()
     )
     total = agg["s"]
-    if n_rows is None:
-        if rows_per_input is None:
-            raise ValueError(f"{op}: n_rows=None requires rows_per_input")
-        total_rows = 0 if agg["t"] is None else int(agg["t"])
-        n_rows, rem = divmod(total_rows, int(rows_per_input))
-        if rem:
-            raise ValueError(
-                f"{op}: {total_rows:,} banded rows is not a multiple of "
-                f"rows_per_input={rows_per_input}; the banding must emit "
-                f"exactly rows_per_input rows per input row, or pass n_rows"
-            )
+    total_rows = 0 if agg["t"] is None else int(agg["t"])
+    n_rows, rem = divmod(total_rows, int(rows_per_input))
+    if rem:
+        raise ValueError(
+            f"{op}: {total_rows:,} banded rows is not a multiple of "
+            f"rows_per_input={rows_per_input}; the banding must emit "
+            f"exactly rows_per_input rows per input row"
+        )
     bound = max(float(min_candidates), factor * float(n_rows))
     if total is not None and float(total) > bound:
         raise RuntimeError(
@@ -109,6 +102,57 @@ def candidate_bound_check(
             f"digest prefix), tighten the banding, or pass "
             f"candidate_guard=False to accept the quadratic join knowingly."
         )
+
+
+def lsh_candidates(
+    banded: DataFrame, key_cols: list[str], op: str, guard: bool, bands: int
+) -> DataFrame:
+    """THE LSH candidate rule: (id_a, id_b) once per pair of ``banded``
+    rows that agree on every ``key_cols`` column, with id_a < id_b.
+
+    ``banded`` holds ``bands`` rows per input row (its band explode);
+    every column that is neither ``id`` nor a key rides along as
+    ``<c>_a``/``<c>_b``.  With ``guard`` set, candidate_bound_check runs
+    first, eagerly.  Pass keys only when the verify payload is heavy:
+    the explode multiplies every carried byte by ``bands`` through the
+    candidate exchange, while the guarded candidate set is ≤ factor·n
+    pairs, so attaching the payload to the surviving pairs afterwards
+    moves far fewer bytes (MinHash's 32-long signature and shingle set).
+    A payload as small as a key (SimHash's 64-bit fingerprint) may ride.
+    """
+    if guard:
+        candidate_bound_check(banded, key_cols, op, rows_per_input=bands)
+    carried = [c for c in banded.columns if c != "id" and c not in key_cols]
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+    return (
+        banded.alias("a")
+        .join(banded.alias("b"), on + [F.col("a.id") < F.col("b.id")])
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carried for s in "ab"],
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def sig_agreement(a: str, b: str) -> Column:
+    """Fraction of positions where MinHash signatures ``a`` and ``b``
+    agree — the Jaccard estimate both compaction-time pair discovery
+    and the admission-time MinHashIndex probe test against."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    ) / F.size(a)
+
+
+def set_jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard |a ∩ b| / |a ∪ b| of two distinct-element arrays
+    (0.0 when both are empty)."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -247,47 +291,20 @@ def minhash_lsh_pairs_from_sigs(
     candidate_guard: bool = False,
 ) -> DataFrame:
     """Relational stage of MinHash-LSH over a signature table:
-    band-explode → equi-join on (band, band signature) → exact-Jaccard
-    verification on the carried shingle sets → threshold + order.
+    keys-only band candidates (lsh_candidates) → sig/sh payloads
+    attached to the surviving pairs → exact-Jaccard verification on the
+    shingle sets → threshold + order.
 
     ``candidate_guard=True`` runs candidate_bound_check eagerly on the
     banded keys first (default off here — the staged-oracle contract
     path wants pure laziness; the discovery wrapper minhash_lsh_pairs
-    defaults it ON).
-
-    r8 (guide §8 / §2.3 — shuffle keys, not payloads): the banding
-    self-join matches on (band_idx, band_hash, id) ONLY.  The old form
-    carried every document's 32-long signature AND its full shingle-hash
-    set through the band explode — ×bands duplication of the heavy
-    arrays through the candidate exchange, exactly the byte multiplier
-    the MinHash index's band/sig storage split exists to avoid.  The
-    guarded candidate set is small (≤ factor·n), so the sig/sh payloads
-    are attached to the surviving (id_a, id_b) pairs afterwards with two
-    joins against the signature table; pair set, est_jaccard and jaccard
-    are bit-identical (same per-pair arithmetic over the same arrays)."""
+    defaults it ON)."""
     banded = minhash_band_keys(sigs.select("id", "sig"), n_hashes, bands).select(
         "id", "band_idx", "band_hash"
     )
-    if candidate_guard:
-        # r8: n derived inside the guard aggregate (banded = n×bands
-        # rows exactly — sig-table rows already exclude empty-shingle
-        # docs) — one driver job instead of count()+guard, and the sig
-        # table's persist materializes under it
-        candidate_bound_check(
-            banded, ["band_idx", "band_hash"], None, "minhash_lsh_pairs",
-            rows_per_input=bands,
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    ids = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    ids = lsh_candidates(
+        banded, ["band_idx", "band_hash"], "minhash_lsh_pairs",
+        candidate_guard, bands,
     )
     pay_a = sigs.select(
         F.col("id").alias("id_a"),
@@ -299,26 +316,15 @@ def minhash_lsh_pairs_from_sigs(
         F.col("sig").alias("sig_b"),
         F.col("sh").alias("sh_b"),
     )
-    cand = ids.join(pay_a, "id_a").join(pay_b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (
-        cand.withColumn(
-            "est_jaccard",
-            F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            / F.size("sig_a"),
-        )
-        .withColumn("jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
+    return (
+        ids.join(pay_a, "id_a").join(pay_b, "id_b")
+        .withColumn("est_jaccard", sig_agreement("sig_a", "sig_b"))
+        .withColumn("jaccard", set_jaccard("sh_a", "sh_b"))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", _fr6(F.col("est_jaccard")).alias("est_jaccard"),
                 _fr6(F.col("jaccard")).alias("jaccard"))
         .orderBy("id_a", "id_b")
     )
-    return out
 
 
 def minhash_lsh_pairs(
@@ -336,15 +342,20 @@ def minhash_lsh_pairs(
     (id_a, id_b, est_jaccard, jaccard) with id_a < id_b, filtered on the
     EXACT token-shingle Jaccard of the candidates, ordered output.
 
-    The signature table is persisted: the banding self-join would
-    otherwise recompute every signature once per join side × band.  At
-    production scale, materialize it to a table instead (the contract
-    path stages it to parquet — same shape).
+    The signature table is local-checkpointed (lazily: the first job —
+    the guard's — materializes it): the banding self-join would
+    otherwise recompute every signature once per join side × band, and
+    unlike ``persist()`` nothing is left registered in the session's
+    cache once the result is released.  At production scale,
+    materialize it to a table instead (the contract path stages it to
+    parquet — same shape).
 
     The discovery path guards its banding (candidate_bound_check): a
     degenerate corpus must fail loudly, not run O(n²) quietly.
     """
-    sigs = minhash_sig_table(docs, text_col, id_col, n_hashes, shingle_n).persist()
+    sigs = minhash_sig_table(
+        docs, text_col, id_col, n_hashes, shingle_n
+    ).localCheckpoint(eager=False)
     return minhash_lsh_pairs_from_sigs(
         sigs, n_hashes, bands, jaccard_threshold, candidate_guard=candidate_guard
     )
@@ -361,19 +372,17 @@ def ngram_jaccard_pairs(
 
     The SQL-oracle-able verification primitive: pairs are restricted to
     equal ``block_col`` (at scale the block is an LSH bucket, not lang).
-    Token sets via split+array_distinct; Jaccard via
-    array_intersect/array_union sizes — all JVM-side.
+    Token sets via split+array_distinct; Jaccard via set_jaccard — all
+    JVM-side.
     """
     toks = F.array_distinct(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
     d = docs.select(
         F.col(id_col).alias("id"), F.col(block_col).alias("blk"), toks.alias("toks")
     )
     a, b = d.alias("a"), d.alias("b")
-    inter = F.size(F.array_intersect("a.toks", "b.toks")).cast("double")
-    union = F.size(F.array_union("a.toks", "b.toks")).cast("double")
     return (
         a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")))
-        .withColumn("jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
+        .withColumn("jaccard", set_jaccard("a.toks", "b.toks"))
         .where(F.col("jaccard") >= threshold)
         .select(
             F.col("a.id").alias("id_a"),
@@ -483,10 +492,6 @@ def simhash_pairs_from_sigs(
 
     ``candidate_guard=True`` additionally runs candidate_bound_check
     eagerly on the banded keys (the discovery wrapper defaults it ON).
-
-    The retired single-prefix form had a structural recall hole: a pair
-    differing anywhere inside the one 16-bit prefix was never a
-    candidate regardless of total hamming.
     """
     if bands is None:
         bands = max_hamming + 1
@@ -500,39 +505,21 @@ def simhash_pairs_from_sigs(
             f"on a small corpus), or use max_hamming <= 3 (4×16-bit "
             f"Manku bands)."
         )
-    bounds = simhash_band_bounds(bands)
     band_vals = F.array(
         *[
             F.shiftright("sh", start).bitwiseAND(F.lit((1 << width) - 1))
-            for start, width in bounds
+            for start, width in simhash_band_bounds(bands)
         ]
     )
-    blocked = bool(block_col)  # "" / None => unblocked
-    sel = ["id", "sh"] + ([block_col] if blocked else [])
-    d = sigs.select(
-        *sel, F.posexplode(band_vals).alias("band_idx", "band_val")
+    blocks = [block_col] if block_col else []  # "" / None => unblocked
+    banded = sigs.select(
+        "id", "sh", *blocks, F.posexplode(band_vals).alias("band_idx", "band_val")
     )
-    if candidate_guard:
-        guard_cols = ["band_idx", "band_val"] + ([block_col] if blocked else [])
-        # r8: n = Σ|bucket| / bands in the guard's own aggregate (the
-        # posexplode emits exactly ``bands`` rows per fingerprint) —
-        # drops the separate count() job per discovery call
-        candidate_bound_check(
-            d, guard_cols, None, "simhash_neardup_pairs", rows_per_input=bands
-        )
-    a, b = d.alias("a"), d.alias("b")
-    cond = (
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.id") < F.col("b.id"))
-    )
-    if blocked:
-        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
     return (
-        a.join(b, cond)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        lsh_candidates(
+            banded, ["band_idx", "band_val", *blocks], "simhash_neardup_pairs",
+            candidate_guard, bands,
+        )
         .withColumn(
             "hamming",
             F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"),
@@ -556,14 +543,15 @@ def simhash_neardup_pairs(
     verify (see simhash_pairs_from_sigs; the default max_hamming=3 ⇒
     4×16-bit Manku bands — guaranteed recall, scale-safe band keys).
     Loose thresholds (bands > 4) require a pre-blocking ``block_col``
-    carried from ``docs``.  Sig table persisted — see minhash_lsh_pairs;
-    the discovery path guards its banding (candidate_bound_check)."""
+    carried from ``docs``.  Sig table local-checkpointed — see
+    minhash_lsh_pairs; the discovery path guards its banding
+    (candidate_bound_check)."""
     sigs = simhash_sig_table(docs, text_col, id_col)
     if block_col:
         keyed = docs.select(F.col(id_col).alias("id"), F.col(block_col))
         sigs = sigs.join(keyed, "id")
     return simhash_pairs_from_sigs(
-        sigs.persist(), max_hamming, bands, block_col=block_col,
+        sigs.localCheckpoint(eager=False), max_hamming, bands, block_col=block_col,
         candidate_guard=candidate_guard,
     )
 

@@ -76,6 +76,11 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from swingstream.operators.dedup import (
+    minhash_band_keys,
+    minhash_sig_table,
+    sig_agreement,
+)
 from swingstream.sources.catalog import ManifestLedger
 
 
@@ -415,11 +420,6 @@ class MinHashIndex(_BucketedIndex):
         Arrow minhash kernel + the pinned band-key expression.  Docs
         with no shingles (shorter than the shingle width) emit nothing:
         there is nothing a near-dup test could match on."""
-        from swingstream.operators.dedup import (
-            minhash_band_keys,
-            minhash_sig_table,
-        )
-
         sigs = minhash_sig_table(
             docs, text_col=text_col, id_col=id_col,
             n_hashes=self.n_hashes, shingle_n=self.shingle_n,
@@ -438,8 +438,8 @@ class MinHashIndex(_BucketedIndex):
         any indexed doc sharing a band key.  Two pruned reads, all
         JVM-side: (1) band buckets touched by the batch propose
         candidate (id, idx_id) pairs via one equi-join; (2) only the
-        sig buckets of the CANDIDATE idx_ids are read for the zip_with
-        agreement verify.  Two bounded collects drive the pruning —
+        sig buckets of the CANDIDATE idx_ids are read for the
+        sig_agreement verify.  Two bounded collects drive the pruning —
         the batch's distinct band buckets and the candidates' distinct
         sig buckets, each ≤ n_buckets ints."""
         spark = bands_batch.sparkSession
@@ -487,16 +487,9 @@ class MinHashIndex(_BucketedIndex):
         ).select(
             F.col("id").alias("idx_id"), F.col("sig").alias("idx_sig")
         )
-        agree = F.aggregate(
-            F.zip_with(
-                "sig", "idx_sig", lambda x, y: (x == y).cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ) / F.size("sig")
         return (
             cand.join(idx_sigs, "idx_id")
-            .where(agree >= F.lit(self.threshold))
+            .where(sig_agreement("sig", "idx_sig") >= F.lit(self.threshold))
             .select("id")
             .distinct()
         )

@@ -12,7 +12,6 @@ from swingstream.fixtures import gen_series, plant_network
 from swingstream.operators.evaluate import aupr, auroc
 from swingstream.operators.features import densify_buckets, host_bucket_features
 from swingstream.pipeline import (
-    series_from_features,
     series_from_wide,
     swing_batch,
 )

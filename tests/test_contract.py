@@ -8,7 +8,6 @@ a tight float tolerance — rounding is already inside both queries).
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb

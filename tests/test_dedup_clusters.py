@@ -172,17 +172,32 @@ def test_lsh_candidate_guard_trips_on_degenerate_corpus(spark):
 @pytest.mark.parametrize("banded_rows, raises", [(12, False), (13, True)])
 def test_candidate_guard_derived_n_needs_whole_inputs(spark, banded_rows,
                                                       raises):
-    """With n_rows=None the guard derives n = Σ|bucket| / rows_per_input;
-    a total that is not a multiple means the banding did not emit exactly
-    rows_per_input rows per input, so the guard refuses to floor it."""
+    """The guard derives n = Σ|bucket| / rows_per_input; a total that is
+    not a multiple means the banding did not emit exactly rows_per_input
+    rows per input, so the guard refuses to floor it."""
     import swingstream.operators.dedup as dd
 
     bucketed = spark.createDataFrame(
         [(i % 5,) for i in range(banded_rows)], "band int")
     with (pytest.raises(ValueError, match="not a multiple of rows_per_input")
           if raises else contextlib.nullcontext()):
-        dd.candidate_bound_check(bucketed, ["band"], None, "probe",
+        dd.candidate_bound_check(bucketed, ["band"], "probe",
                                  rows_per_input=4)
+
+
+def test_discovery_leaves_no_cached_signature_table(spark):
+    """Both discovery calls reuse their signature table across the guard
+    job and the self-join without registering it in the session's cache:
+    a compaction loop calls them once per pass, and each registered
+    table would stay pinned for the rest of the session."""
+    from swingstream.fixtures import gen_documents
+    from swingstream.operators.dedup import minhash_lsh_pairs, simhash_neardup_pairs
+
+    docs = spark.createDataFrame(gen_documents(n_docs=200, vocab_size=500, seed=5))
+    spark.catalog.clearCache()
+    minhash_lsh_pairs(docs).collect()
+    simhash_neardup_pairs(docs).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.fixture(autouse=True)
@@ -194,10 +209,10 @@ def _tight_guard_floor(monkeypatch):
 
     orig = dd.candidate_bound_check
 
-    def patched(bucketed, bucket_cols, n_rows, op, factor=50.0,
-                min_candidates=100_000, rows_per_input=None):
-        return orig(bucketed, bucket_cols, n_rows, op, factor, min_candidates,
-                    rows_per_input)
+    def patched(bucketed, bucket_cols, op, rows_per_input, factor=50.0,
+                min_candidates=100_000):
+        return orig(bucketed, bucket_cols, op, rows_per_input, factor,
+                    min_candidates)
 
     monkeypatch.setattr(dd, "candidate_bound_check", patched)
     yield

@@ -10,7 +10,6 @@ import math
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from swingstream.operators.dsir import (
     bucket_logratio,

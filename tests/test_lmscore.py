@@ -10,7 +10,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from swingstream.operators.lmscore import (
     NLL_MICRO,

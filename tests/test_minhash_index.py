@@ -10,7 +10,6 @@ between the corpus/digest commits and the minhash index commit.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F

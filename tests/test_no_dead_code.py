@@ -16,6 +16,11 @@ its entries live only when something reached names the table.  The
 walk imports nothing and needs no Spark.  There is no allowlist beyond
 ``ROOTS``: an unreached definition is deleted, or joins ``ROOTS`` with
 its reason.
+
+Imports are aliases, not nodes, so the walk cannot see an import that
+nothing uses; a second check holds every module under ``swingstream/``
+and ``tests/`` to referencing each name it imports, by the same rule
+(``__future__`` imports excepted).
 """
 
 from __future__ import annotations
@@ -123,18 +128,13 @@ def _defined_names(stmt: ast.stmt) -> list[str]:
 def unreached(root: str, roots) -> list[str]:
     """``file:line::name`` of every package node no entry of ``roots``
     reaches, in the checkout at ``root``."""
-    pkg = os.path.join(root, PACKAGE)
     trees: dict[str, ast.Module] = {}
     nodes: dict[str, list[tuple[str, ast.stmt]]] = {}  # name -> [(file, stmt)]
-    for dirpath, dirs, files in os.walk(pkg):
-        dirs[:] = sorted(d for d in dirs if not d.startswith("."))
-        for f in sorted(files):
-            if f.endswith(".py"):
-                rel = os.path.relpath(os.path.join(dirpath, f), root)
-                trees[rel] = tree = _parse(root, rel)
-                for stmt in tree.body:
-                    for name in _defined_names(stmt):
-                        nodes.setdefault(name, []).append((rel, stmt))
+    for rel, tree in _modules(root, PACKAGE):
+        trees[rel] = tree
+        for stmt in tree.body:
+            for name in _defined_names(stmt):
+                nodes.setdefault(name, []).append((rel, stmt))
 
     todo: list[ast.stmt] = []
     for rel, name, _reason in roots:
@@ -165,9 +165,45 @@ def _parse(root: str, rel: str) -> ast.Module:
         return ast.parse(fh.read(), filename=rel)
 
 
+def _modules(root: str, top: str):
+    """(path relative to ``root``, syntax tree) of every ``.py`` file
+    under ``root/top``."""
+    for dirpath, dirs, files in os.walk(os.path.join(root, top)):
+        dirs[:] = sorted(d for d in dirs if not d.startswith("."))
+        for f in sorted(files):
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(dirpath, f), root)
+                yield rel, _parse(root, rel)
+
+
+def unused_imports(root: str) -> list[str]:
+    """``file:line::name`` of every name a module under ``swingstream/``
+    or ``tests/`` imports and never references outside its imports."""
+    out = []
+    for top in (PACKAGE, "tests"):
+        for rel, tree in _modules(root, top):
+            imports = [n for n in ast.walk(tree)
+                       if isinstance(n, (ast.Import, ast.ImportFrom))]
+            bound = [(n.lineno, a.asname or a.name.split(".")[0])
+                     for n in imports
+                     if getattr(n, "module", None) != "__future__"
+                     for a in n.names if a.name != "*"]
+            for n in imports:  # binding a name is not a use of it
+                n.names = []
+            used = set(_references(tree))
+            out += [f"{rel}:{line}::{name}" for line, name in bound
+                    if name not in used]
+    return out
+
+
 def test_every_top_level_definition_is_referenced():
     dead = unreached(ROOT, ROOTS)
     assert not dead, "definitions no root reaches:\n  " + "\n  ".join(dead)
+
+
+def test_every_import_is_referenced():
+    unused = unused_imports(ROOT)
+    assert not unused, "imported, never referenced:\n  " + "\n  ".join(unused)
 
 
 def _tree(tmp_path, files: dict[str, str]) -> str:
@@ -212,3 +248,22 @@ _ENTRY = [("main.py", None, "entry")]
 ])
 def test_reachability_on_synthetic_tree(tmp_path, files, dead):
     assert unreached(_tree(tmp_path, files), _ENTRY) == dead
+
+
+@pytest.mark.parametrize("files, unused", [
+    pytest.param(
+        {"swingstream/mod.py": "from __future__ import annotations\n"
+                               "import os\nimport os.path\n"
+                               "from a import used, unused\n"
+                               "import b as bee\n\n"
+                               "print(used, os.path.sep, 'bee')\n",
+         "tests/test_mod.py": "def test_x():\n    import json\n"
+                              "    import sys\n    return sys\n"},
+        ["swingstream/mod.py:4::unused", "tests/test_mod.py:2::json"],
+        id="unused-module-and-local-imports"),
+    pytest.param(
+        {"swingstream/mod.py": "\"\"\"Uses ghost.\"\"\"\nfrom a import ghost\n"},
+        ["swingstream/mod.py:2::ghost"], id="docstring-is-not-a-use"),
+])
+def test_unused_imports_on_synthetic_tree(tmp_path, files, unused):
+    assert unused_imports(_tree(tmp_path, files)) == unused

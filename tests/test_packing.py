@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from swingstream.operators.packing import (
     pack_blocks,

@@ -5,12 +5,11 @@ broadcast joins, codegen — the properties that make the plan survive a
 from __future__ import annotations
 
 import os
-
-import pytest
+import re
 
 from swingstream.config import SwingParams
 from swingstream.plans.explain import (
-    codegen_stage_count,
+    explain_str,
     has_broadcast_join,
     pushed_filters,
     read_schema_columns,
@@ -81,9 +80,7 @@ def test_gold_join_broadcasts(spark):
     wide, _ = gen_series(n_features=4, n_buckets=12, n_replicates=2, seed=5, net=net)
     names = [f"g{i}" for i in range(1, 5)]
     ranked = swing_batch(
-        spark.createDataFrame(wide).transform(
-            lambda d: __import__("swingstream.pipeline", fromlist=["x"]).series_from_wide(d, names)
-        ),
+        spark.createDataFrame(wide).transform(lambda d: series_from_wide(d, names)),
         SwingParams(window_width=6, min_lag=1, max_lag=2, alpha=0.1),
         feature_names=tuple(names),
     )
@@ -97,14 +94,41 @@ def test_lineitem_projection_prunes(spark):
     assert cols == ["l_quantity"], cols
 
 
+_BAND_KEYS = {"band_idx", "band_hash", "band_val"}
+
+
+def _band_exchange_inputs(plan: str) -> list[set[str]]:
+    """Input column names of every Exchange in a formatted plan that is
+    hash-partitioned on a band key."""
+    out = []
+    for m in re.finditer(
+        r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]\n"
+        r"Arguments: hashpartitioning\((.*), \d+\)", plan, re.M,
+    ):
+        inputs, keys = ({c.split("#")[0] for c in g.split(", ")}
+                        for g in m.groups())
+        if keys & _BAND_KEYS:
+            out.append(inputs)
+    return out
+
+
 def test_minhash_banding_is_equi_join(spark):
     """The LSH candidate join must plan as a hash/sort-merge EQUI-join on
     (band_idx, band_hash) — a nested-loop/cartesian plan would mean the
-    banding key got lost and the operator degraded to O(n²) pair search."""
+    banding key got lost and the operator degraded to O(n²) pair search.
+
+    The candidate exchanges carry keys, not payloads: the band explode
+    multiplies every carried byte by the band count, so on the MinHash
+    path only (id, band key) cross them and the signature and shingle
+    set join the surviving pairs afterwards; the SimHash path may add
+    its 64-bit fingerprint.  Broadcast joins are off while planning so
+    the candidate join shuffles."""
     from swingstream.fixtures import gen_documents
     from swingstream.operators.dedup import (
         minhash_lsh_pairs_from_sigs,
         minhash_sig_table,
+        simhash_pairs_from_sigs,
+        simhash_sig_table,
     )
 
     docs = spark.createDataFrame(gen_documents(n_docs=60, vocab_size=500, seed=5))
@@ -112,6 +136,26 @@ def test_minhash_banding_is_equi_join(spark):
     plan = minhash_lsh_pairs_from_sigs(sigs)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan, plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+
+    sh_sigs = simhash_sig_table(docs).join(
+        docs.select(docs.doc_id.alias("id"), "lang"), "id")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        mh = explain_str(minhash_lsh_pairs_from_sigs(sigs))
+        sh = explain_str(simhash_pairs_from_sigs(sh_sigs, max_hamming=8,
+                                                 block_col="lang"))
+    finally:
+        spark.conf.set(key, prev)
+    for plan, allowed in (
+        (mh, {"id", "band_idx", "band_hash"}),
+        (sh, {"id", "band_idx", "band_val", "lang", "sh"}),
+    ):
+        inputs = _band_exchange_inputs(plan)
+        assert len(inputs) >= 2, plan
+        for cols in inputs:
+            assert cols <= allowed, (cols, plan)
 
 
 def test_streaming_extract_path_has_no_python_nodes(spark, pages_df):

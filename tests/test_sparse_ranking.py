@@ -5,8 +5,6 @@ from __future__ import annotations
 import dataclasses
 
 import numpy as np
-import pandas as pd
-import pytest
 
 from swingstream.config import SwingParams
 from swingstream.fixtures import gen_series, plant_network

@@ -15,7 +15,6 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from swingstream.operators.dedup import window_dedup, window_occurrences
 
