@@ -968,7 +968,7 @@ def window_cut_positions(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """The (persisted) cut set (_wd_id, pos) of ``window_dedup`` —
+    """The (local-checkpointed) cut set (_wd_id, pos) of ``window_dedup`` —
     exposed separately so the compaction pass can compute it once over
     the FULL active snapshot and feed the targeted rewrite
     (streaming/compaction.py compact_window_dedup), exactly like the
@@ -977,9 +977,11 @@ def window_cut_positions(
     if mode not in ("keep_first", "frequent"):
         raise ValueError(f"unknown mode {mode!r}")
     # the kernel output is consumed by two plan branches (the group
-    # profile and the join probe) — persist so the md5 pass over the
+    # profile and the join probe) — checkpoint so the md5 pass over the
     # corpus runs ONCE, the same discipline as the LSH signature tables
-    occ = window_occurrences(docs, k, sample_p, text_col, id_col).persist()
+    occ = window_occurrences(
+        docs, k, sample_p, text_col, id_col
+    ).localCheckpoint(eager=False)
 
     if mode == "frequent":
         bad = (
@@ -1015,7 +1017,7 @@ def window_cut_positions(
     # covered by some repeated-window occurrence and by NO surviving
     # occurrence (max(_wd_keep) == false) — the survivor-protection
     # anti-join collapsed into an aggregate.  `cut` is small (≤ repeated
-    # span tokens) and consumed by three branches — persist it.
+    # span tokens) and consumed by three branches — checkpoint it.
     cut = (
         marked.select(
             "_wd_id",
@@ -1028,7 +1030,7 @@ def window_cut_positions(
         .agg(F.max("_wd_keep").alias("_k"))
         .where(~F.col("_k"))
         .select("_wd_id", "pos")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     return cut
 

@@ -142,7 +142,7 @@ def _finalize(partials: DataFrame, params: SwingParams) -> DataFrame:
 
 
 def host_bucket_features(
-    pages: DataFrame, params: SwingParams, *, salted: bool = False, dedup: bool = True
+    pages: DataFrame, params: SwingParams, *, salted: bool = False
 ) -> DataFrame:
     """(host, bucket_idx, bucket_ts, features: array<double>[G])."""
     from swingstream.operators.cleaning import drop_incomplete
@@ -165,7 +165,7 @@ def host_bucket_features(
         # redeliveries share (host, digest, bucket) by construction.
         # Streaming twin: dropDuplicatesWithinWatermark on the same key.
         rows = rows.dropDuplicates(["host", "digest", "bucket_idx"]).drop("digest")
-    elif dedup:
+    else:
         rows = deduplicate_pages(rows)
     if not salted:
         partials = rows.groupBy("host", "bucket_idx").agg(

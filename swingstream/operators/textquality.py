@@ -33,6 +33,9 @@ from pyspark.sql import functions as F
 # semantics under Java regex (Spark) and RE2 (DuckDB oracle).
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\+?\d[\d\- ]{7,}\d"
+# email/phone mask chain of both the admission gate and pii_scrub (whose
+# output the q_docs_textquality oracle replays)
+MASKS = [(EMAIL_RE, "<EMAIL>"), (PHONE_RE, "<PHONE>")]
 
 
 def _tokens(text: Column) -> Column:
@@ -150,12 +153,7 @@ def boilerplate_ngrams(
     )
 
 
-# Schema-metadata key pinning the thresholds a reject_reason column was
-# produced under — quality_annotate's idempotence check reads it back.
-_QUALITY_PARAMS_KEY = "swingstream.quality_annotate.params"
-
-
-def quality_annotate(
+def quality_gate(
     docs: DataFrame,
     *,
     id_col: str = "doc_id",
@@ -164,46 +162,18 @@ def quality_annotate(
     max_top_token_frac: float = 0.5,
     max_dup_bigram_frac: float = 0.5,
 ) -> DataFrame:
-    """Annotate every document with a ``reject_reason`` column: the FIRST
-    Gopher-style repetition gate it trips, in the fixed precedence
-    (too_few_tokens, top_token_frac, dup_bigram_frac), or NULL when
-    admitted.  Shape: ``repetition_stats`` (uniform per-doc aggregation)
-    joined back on ``id_col`` — no collect, no skewed keys, identical
-    profile per micro-batch and per batch.
+    """Corpus admission verdict, the curation sink's ``gate_fn``: every
+    document plus a ``reject_reason`` column — the FIRST Gopher-style
+    repetition gate it trips, in the fixed precedence (too_few_tokens,
+    top_token_frac, dup_bigram_frac), or NULL when admitted.  Admitted
+    rows have email/phone PII masked in ``text_col``; rejected rows keep
+    their text as it arrived.  All other columns pass through unchanged.
 
-    Idempotent on pre-annotated input: a frame already carrying a
-    ``reject_reason`` column THAT THIS FUNCTION PRODUCED UNDER THE SAME
-    THRESHOLDS passes through unchanged, so a gated ingest can annotate
-    each micro-batch ONCE (and persist it) and feed the same frame to
-    both ``quality_gate`` and ``quality_rejections`` without paying the
-    explode + aggregations twice (r5 advice).  The thresholds are
-    pinned in the column's schema metadata (survives persist/parquet
-    round trips); a frame annotated under DIFFERENT thresholds, or
-    source data that coincidentally carries a ``reject_reason`` column,
-    raises instead of silently gating on stale or foreign verdicts
-    (r6 advice)."""
-    params = {
-        "min_tokens": int(min_tokens),
-        "max_top_token_frac": float(max_top_token_frac),
-        "max_dup_bigram_frac": float(max_dup_bigram_frac),
-    }
-    if "reject_reason" in docs.columns:
-        meta = docs.schema["reject_reason"].metadata or {}
-        prior = meta.get(_QUALITY_PARAMS_KEY)
-        if prior is None:
-            raise ValueError(
-                "input already carries a 'reject_reason' column that "
-                "quality_annotate did not produce (no threshold metadata) "
-                "— rename or drop it before annotating"
-            )
-        if prior != params:
-            raise ValueError(
-                "input was annotated under different thresholds: "
-                f"existing {prior} vs requested {params} — re-annotate "
-                "from the raw frame (drop 'reject_reason') or call with "
-                "the original thresholds"
-            )
-        return docs
+    Shape: ``repetition_stats`` (uniform per-doc aggregation) joined back
+    on ``id_col`` — no collect, no skewed keys, identical profile per
+    micro-batch and per batch."""
+    from swingstream.operators.pii import redact
+
     rep = repetition_stats(docs, text_col=text_col, id_col=id_col)
     reason = (
         F.when(F.col("n_tokens") < min_tokens, F.lit("too_few_tokens"))
@@ -216,56 +186,16 @@ def quality_annotate(
             F.lit("dup_bigram_frac"),
         )
     )
+    text = F.col(text_col)
     return docs.join(
-        rep.select(
-            id_col,
-            reason.alias(
-                "reject_reason", metadata={_QUALITY_PARAMS_KEY: params}
-            ),
-        ),
-        [id_col],
-        "inner",
+        rep.select(id_col, reason.alias("reject_reason")), [id_col], "inner"
+    ).withColumn(
+        text_col,
+        F.when(
+            F.col("reject_reason").isNull(),
+            redact(text, MASKS),
+        ).otherwise(text),
     )
-
-
-def quality_gate(
-    docs: DataFrame,
-    *,
-    mask_pii: bool = True,
-    mask_patterns: list[tuple[str, str]] | None = None,
-    text_col: str = "text",
-    **annotate_kw,
-) -> DataFrame:
-    """Corpus admission gate: drop documents failing the
-    ``quality_annotate`` thresholds and mask PII in the survivors' text.
-    All other columns pass through unchanged.
-
-    ``mask_patterns`` overrides the masked (pattern, placeholder) chain;
-    the default stays the legacy email/phone pair (golden-pinned).  Pass
-    e.g. ``[(p, ph) for _, p, ph in pii.PII_PATTERNS]`` to mask the full
-    canonical set (adds IPv4) at the gate."""
-    from swingstream.operators.pii import redact
-
-    ann = quality_annotate(docs, text_col=text_col, **annotate_kw)
-    out = ann.where(F.col("reject_reason").isNull()).drop("reject_reason")
-    if mask_pii:
-        # r8 (r7 ADVICE): test None, not truthiness — an explicit empty
-        # list means "mask nothing", not "fall back to the legacy chain"
-        reps = (
-            [(EMAIL_RE, "<EMAIL>"), (PHONE_RE, "<PHONE>")]
-            if mask_patterns is None
-            else mask_patterns
-        )
-        out = out.withColumn(text_col, redact(F.col(text_col), reps))
-    return out
-
-
-def quality_rejections(docs: DataFrame, **kw) -> DataFrame:
-    """The rejected complement of ``quality_gate`` with its
-    ``reject_reason`` — what an audited curation pipeline quarantines
-    instead of silently dropping."""
-    ann = quality_annotate(docs, **kw)
-    return ann.where(F.col("reject_reason").isNotNull())
 
 
 def pii_scrub(
@@ -288,7 +218,5 @@ def pii_scrub(
         id_col,
         count_matches(t, EMAIL_RE).alias("n_emails"),
         count_matches(t, PHONE_RE).alias("n_phones"),
-        redact(
-            t, [(EMAIL_RE, "<EMAIL>"), (PHONE_RE, "<PHONE>")]
-        ).alias("text_masked"),
+        redact(t, MASKS).alias("text_masked"),
     )

@@ -443,8 +443,6 @@ def run_corpus_stream_with_compaction(
     *,
     pair_fn: Callable[[DataFrame], DataFrame] | None = None,
     gate_fn: Callable[[DataFrame], DataFrame] | None = None,
-    reject_fn: Callable[[DataFrame], DataFrame] | None = None,
-    annotate_fn: Callable[[DataFrame], DataFrame] | None = None,
     quarantine_root: str | None = None,
     id_col: str = "url",
     every: int = 4,
@@ -454,7 +452,6 @@ def run_corpus_stream_with_compaction(
     final_strip_lines_max_docs: int | None = None,
     final_window_dedup_k: int | None = None,
     digest_index_root: str | None = None,
-    digest_expr=None,
     index_buckets: int = 64,
     index_compact_every: int = 0,
     minhash_index_root: str | None = None,
@@ -480,32 +477,26 @@ def run_corpus_stream_with_compaction(
     is the maintenance loop that keeps the active file count bounded.
     Commits at or above ``binpack_min_rows`` rows are never rewritten.
 
-    ``gate_fn`` (e.g. ``textquality.quality_gate``) is an admission
-    transform applied to each micro-batch BEFORE the append: only its
-    output rows are committed, and the manifest records
-    ``rows_in_gate`` / ``rows_rejected_gate`` so per-commit admission
-    telemetry lives in the same ledger as the lineage (the counts a
-    100-TB curation pipeline alarms on).  The dedup passes then operate
-    on the gated corpus — identical ordering to the batch twin
-    (gate, then dedup).
-
-    ``reject_fn`` + ``quarantine_root`` additionally commit the gate's
-    REJECTED complement (e.g. ``textquality.quality_rejections``, which
-    carries a ``reject_reason`` column) to a second IcebergLite table
-    under the SAME batch_id — an audited curation pipeline quarantines
-    rejects instead of silently dropping them, and keying both commits
-    to one batch_id keeps the pair exactly-once together under
-    foreachBatch retries.  Read it back with
+    ``gate_fn`` (e.g. ``textquality.quality_gate``) is the admission
+    verdict: ``gate_fn(batch)`` returns every row of the micro-batch
+    plus a ``reject_reason`` column — NULL means admitted, and admitted
+    rows carry their final (e.g. PII-masked) text.  The sink calls it
+    once per micro-batch, pins the verdict, and learns
+    ``rows_in_gate`` / ``rows_rejected_gate`` from one aggregate job;
+    the manifest records both, so per-commit admission telemetry lives
+    in the same ledger as the lineage.  Admitted rows, without
+    ``reject_reason``, are appended; the dedup passes then operate on
+    the gated corpus — identical ordering to the batch twin (gate, then
+    dedup).  With ``quarantine_root`` (requires ``gate_fn``) the
+    rejected rows, with their ``reject_reason``, are committed to a
+    second IcebergLite table under the SAME batch_id, corpus first —
+    an audited curation pipeline quarantines rejects instead of
+    silently dropping them.  The gate runs here rather than upstream of
+    the stream because both halves must commit under one batch_id to
+    stay exactly-once together under foreachBatch retries, and its
+    per-document aggregations need a static micro-batch, which only
+    ``foreachBatch`` provides.  Read the quarantine back with
     ``IcebergLiteTable(quarantine_root)``.
-
-    ``annotate_fn`` (e.g. ``textquality.quality_annotate`` with the same
-    thresholds) makes the gated+quarantined path SINGLE-PASS: the sink
-    annotates each micro-batch once, persists the annotated frame, and
-    feeds it to both ``gate_fn`` and ``reject_fn`` — which short-circuit
-    on the pre-annotated input instead of re-running the explode +
-    aggregations (2× the gate cost at scale without it; r5 advice).
-    Requires gate_fn; the three callables must agree on thresholds (use
-    the same kwargs for all three).
 
     ``final_strip_lines_max_docs`` additionally runs one
     ``compact_strip_lines`` pass AFTER the drain-time final dedup
@@ -529,7 +520,7 @@ def run_corpus_stream_with_compaction(
     never-seen-before documents are committed; the survivors' digests
     land in the index under the SAME batch_id, corpus first / index
     second (the crash-safe order — see the index module docstring).
-    ``digest_expr`` defaults to ``md5(text)``; the manifest records
+    The digest is ``md5(text)``; the manifest records
     ``rows_rejected_index``.  ``index_compact_every`` bounds the file
     count of EVERY enabled admission index (digest and minhash) with a
     periodic per-bucket bin-pack, mirroring ``binpack_every`` on the
@@ -558,15 +549,9 @@ def run_corpus_stream_with_compaction(
     compactions never race an append; every maintenance commit id is
     pinned to the triggering batch_id for exactly-once under retries.
     """
+    if quarantine_root is not None and gate_fn is None:
+        raise ValueError("quarantine_root requires gate_fn")
     table = IcebergLiteTable(out_root)
-    if (reject_fn is None) != (quarantine_root is None):
-        raise ValueError(
-            "reject_fn and quarantine_root must be passed together"
-        )
-    if reject_fn is not None and gate_fn is None:
-        raise ValueError("reject_fn requires gate_fn")
-    if annotate_fn is not None and gate_fn is None:
-        raise ValueError("annotate_fn requires gate_fn")
     quarantine = (
         IcebergLiteTable(quarantine_root) if quarantine_root else None
     )
@@ -578,7 +563,7 @@ def run_corpus_stream_with_compaction(
         from swingstream.streaming.index import DigestIndex
 
         index = DigestIndex(digest_index_root, n_buckets=index_buckets)
-        dig_expr = digest_expr if digest_expr is not None else F.md5("text")
+        dig_expr = F.md5("text")
     mh_index = None
     if minhash_index_root is not None:
         from swingstream.streaming.index import MinHashIndex
@@ -701,36 +686,29 @@ def run_corpus_stream_with_compaction(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if gate_fn is not None:
-            # the batch is read several times (rows_in count, repetition
-            # stats, semi-join back, committed write) — pin both frames
-            # once instead of re-reading the source files per action.
-            # With annotate_fn the annotation (explode + two aggregations
-            # + join) runs ONCE and both gate_fn and reject_fn consume
-            # the persisted annotated frame.
+            # the gate reads its input in several plan branches (stats
+            # and join back), each of which would re-run the source scan
+            # and any upstream stateful operator; the verdict is read by
+            # the count job and both commits — pin both, so each runs once
             batch_df.persist()
-            base = (
-                annotate_fn(batch_df).persist()
-                if annotate_fn is not None
-                else batch_df
-            )
-            admitted = gate_fn(base).persist()
+            verdict = gate_fn(batch_df).persist()
             try:
-                n_in = batch_df.count()
-                n_adm = admitted.count()
+                n_in, n_rej = verdict.agg(
+                    F.count(F.lit(1)), F.count("reject_reason")
+                ).first()
+                reject = F.col("reject_reason")
                 commit_admitted(
-                    batch_id, admitted,
-                    {"rows_in_gate": n_in,
-                     "rows_rejected_gate": n_in - n_adm},
+                    batch_id,
+                    verdict.where(reject.isNull()).drop("reject_reason"),
+                    {"rows_in_gate": n_in, "rows_rejected_gate": n_rej},
                 )
                 if quarantine is not None:
                     quarantine.commit(
-                        batch_id, reject_fn(base),
+                        batch_id, verdict.where(reject.isNotNull()),
                         extra_metrics={"rows_in_gate": n_in},
                     )
             finally:
-                admitted.unpersist()
-                if base is not batch_df:
-                    base.unpersist()
+                verdict.unpersist()
                 batch_df.unpersist()
         else:
             commit_admitted(batch_id, batch_df, {})

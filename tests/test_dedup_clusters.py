@@ -187,16 +187,23 @@ def test_candidate_guard_derived_n_needs_whole_inputs(spark, banded_rows,
 
 def test_discovery_leaves_no_cached_signature_table(spark):
     """Both discovery calls reuse their signature table across the guard
-    job and the self-join without registering it in the session's cache:
-    a compaction loop calls them once per pass, and each registered
-    table would stay pinned for the rest of the session."""
+    job and the self-join, and the token-window dedup reuses its
+    occurrence table and cut set, without registering them in the
+    session's cache: a compaction loop calls them once per pass, and
+    each registered table would stay pinned for the rest of the
+    session."""
     from swingstream.fixtures import gen_documents
-    from swingstream.operators.dedup import minhash_lsh_pairs, simhash_neardup_pairs
+    from swingstream.operators.dedup import (
+        minhash_lsh_pairs,
+        simhash_neardup_pairs,
+        window_dedup,
+    )
 
     docs = spark.createDataFrame(gen_documents(n_docs=200, vocab_size=500, seed=5))
     spark.catalog.clearCache()
     minhash_lsh_pairs(docs).collect()
     simhash_neardup_pairs(docs).collect()
+    window_dedup(docs).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

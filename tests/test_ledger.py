@@ -6,6 +6,8 @@ indented JSON) and the admission indexes (``DigestIndex``:
 These tests drive its manifest-write path directly — no DataFrames — and
 pin replay no-ops, REPLACE archival, the archival crash window,
 cross-instance visibility, sidecar filtering and the byte format.
+The curation sink's argument contract is checked here too: it raises
+before any Spark call or ledger write.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ import shutil
 import pytest
 
 from swingstream.sources.catalog import IcebergLiteTable
+from swingstream.streaming.compaction import run_corpus_stream_with_compaction
 from swingstream.streaming.index import DigestIndex
 
 
@@ -214,3 +217,15 @@ def test_on_disk_manifest_format_is_pinned(layout, tmp_path):
     assert reopened.manifests() == t.manifests()
     assert reopened.committed(3)
     assert commit(reopened, 3) is None and reopened.commit(3, None) is None
+
+
+def test_quarantine_without_gate_raises_before_any_write(tmp_path):
+    """A quarantine needs a verdict to split on: without ``gate_fn`` the
+    sink refuses before touching Spark (no session, no stream) or disk."""
+    out = str(tmp_path / "corpus")
+    with pytest.raises(ValueError, match="quarantine_root requires gate_fn"):
+        run_corpus_stream_with_compaction(
+            None, None, out, str(tmp_path / "ck"),
+            quarantine_root=str(tmp_path / "quarantine"),
+        )
+    assert os.listdir(tmp_path) == []

@@ -75,11 +75,8 @@ ROOTS = [
     ("swingstream/extract.py", "extract_udf",
      "reference extract_expr is compared against (aim 3)"),
     ("swingstream/operators/textquality.py", "quality_gate",
-     "admission gate exercising the curation topology's gate_fn contract"),
-    ("swingstream/operators/textquality.py", "quality_rejections",
-     "rejection side of that gate: the reject_fn contract"),
-    ("swingstream/operators/textquality.py", "quality_annotate",
-     "annotation side of that gate: the annotate_fn contract"),
+     "admission verdict exercising the curation topology's gate_fn "
+     "contract"),
     ("swingstream/streaming/pipeline.py", "run_feature_query",
      "test harness running q1 alone, checkpoint resume included (aim 3)"),
     ("swingstream/streaming/state.py", "run_scoring_query",

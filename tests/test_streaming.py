@@ -1297,11 +1297,7 @@ def test_streaming_quality_gate_matches_batch_and_records_metrics(spark, tmp_pat
     import hashlib
 
     from swingstream.operators.dedup import dedup_survivors, exact_dup_pairs
-    from swingstream.operators.textquality import (
-        quality_annotate,
-        quality_gate,
-        quality_rejections,
-    )
+    from swingstream.operators.textquality import quality_gate
     from swingstream.sources.pages import pages_from_pandas, read_pages_stream
     from swingstream.streaming.compaction import run_corpus_stream_with_compaction
 
@@ -1332,24 +1328,24 @@ def test_streaming_quality_gate_matches_batch_and_records_metrics(spark, tmp_pat
     kw = dict(id_col="row_uid", text_col="text",
               min_tokens=3, max_top_token_frac=0.8, max_dup_bigram_frac=0.95)
     gate = lambda dd: quality_gate(dd, **kw)  # noqa: E731
-    rejects = lambda dd: quality_rejections(dd, **kw)  # noqa: E731
-    annotate = lambda dd: quality_annotate(dd, **kw)  # noqa: E731
     stream = with_uid(
         read_pages_stream(spark, str(d), max_files_per_trigger=1)
         .withWatermark("warc_ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["url", "warc_ts"])
     )
+    spark.catalog.clearCache()
     table = run_corpus_stream_with_compaction(
         spark, stream, str(tmp_path / "gated_corpus"), str(tmp_path / "gated_ck"),
-        gate_fn=gate, reject_fn=rejects, annotate_fn=annotate,
-        quarantine_root=str(tmp_path / "gated_quarantine"),
+        gate_fn=gate, quarantine_root=str(tmp_path / "gated_quarantine"),
         id_col="row_uid", every=2,
     )
+    # the sink releases every frame it pinned per micro-batch
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     all_pages = with_uid(
         pages_from_pandas(spark, pdf).dropDuplicates(["url", "warc_ts"])
     )
-    gated = gate(all_pages)
+    gated = gate(all_pages).where(F.col("reject_reason").isNull())
     expected = (
         dedup_survivors(gated, exact_dup_pairs(gated, id_col="row_uid"), "row_uid")
         .select("row_uid", "text").toPandas()
@@ -1630,11 +1626,7 @@ def test_soak_kill_resume_full_topology(spark, tmp_path):
         exact_dup_pairs,
         line_dedup,
     )
-    from swingstream.operators.textquality import (
-        quality_annotate,
-        quality_gate,
-        quality_rejections,
-    )
+    from swingstream.operators.textquality import quality_gate
     from swingstream.sources.pages import pages_from_pandas, read_pages_stream
     from swingstream.streaming.compaction import run_corpus_stream_with_compaction
 
@@ -1673,8 +1665,6 @@ def test_soak_kill_resume_full_topology(spark, tmp_path):
 
     run_kw = dict(
         gate_fn=lambda dd: quality_gate(dd, **kw),
-        reject_fn=lambda dd: quality_rejections(dd, **kw),
-        annotate_fn=lambda dd: quality_annotate(dd, **kw),
         quarantine_root=str(tmp_path / "soak_quarantine"),
         id_col="row_uid", every=2, binpack_every=3, binpack_min_rows=10**6,
         final_strip_lines_max_docs=4,
@@ -1714,7 +1704,8 @@ def test_soak_kill_resume_full_topology(spark, tmp_path):
     all_pages = with_uid(
         pages_from_pandas(spark, pdf).dropDuplicates(["url", "warc_ts"])
     )
-    gated = quality_gate(all_pages, **kw)
+    verdict = quality_gate(all_pages, **kw)
+    gated = verdict.where(F.col("reject_reason").isNull())
     deduped = dedup_survivors(
         gated, exact_dup_pairs(gated, id_col="row_uid"), "row_uid")
     expected = (
@@ -1749,7 +1740,7 @@ def test_soak_kill_resume_full_topology(spark, tmp_path):
     q = IcebergLiteTable(str(tmp_path / "soak_quarantine"))
     qdf = q.read(spark).select("row_uid", "reject_reason").toPandas()
     expected_rejects = (
-        quality_rejections(all_pages, **kw)
+        verdict.where(F.col("reject_reason").isNotNull())
         .select("row_uid", "reject_reason").toPandas()
         .sort_values("row_uid").reset_index(drop=True)
     )

@@ -1,5 +1,6 @@
 """Unit tests for swingstream/operators/textquality.py — the Gopher-style
-repetition gates, boilerplate n-gram mining, and PII scrub.
+repetition gates and the admission verdict built on them, boilerplate
+n-gram mining, and PII scrub.
 
 The contract queries (q_docs_textquality / q_docs_boilerplate) hash-verify
 these against DuckDB on the driver tables, but that fixture text carries no
@@ -21,6 +22,7 @@ from swingstream.operators.textquality import (
     PHONE_RE,
     boilerplate_ngrams,
     pii_scrub,
+    quality_gate,
     repetition_stats,
 )
 
@@ -194,107 +196,29 @@ def test_boilerplate_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_single_pass_gate_reuses_annotation(spark):
-    """r5 advice: a gated+quarantined micro-batch must pay the annotation
-    (explode + two aggregations + join) ONCE.  quality_annotate is
-    idempotent on pre-annotated input, so gate and rejections over one
-    persisted annotated frame both plan as a cache scan — no second
-    repetition_stats subtree (no Generate/explode node) in either plan."""
-    from swingstream.operators.textquality import (
-        quality_annotate,
-        quality_gate,
-        quality_rejections,
-    )
-    from swingstream.plans.explain import explain_str
-
-    pdf = pd.DataFrame(
-        {"doc_id": range(4),
-         "text": ["spam spam spam spam spam", "a fine unique document here",
-                  "x", "another perfectly ordinary text"]}
-    )
-    docs = spark.createDataFrame(pdf)
-    ann = quality_annotate(docs, min_tokens=2).persist()
-    try:
-        ann.count()
-        adm = quality_gate(ann, min_tokens=2)
-        rej = quality_rejections(ann, min_tokens=2)
-        for df in (adm, rej):
-            plan = explain_str(df, "simple")
-            assert "InMemoryTableScan" in plan, plan
-            # everything ABOVE the cache boundary must be re-annotation-free
-            # (the InMemoryRelation prints its own build plan below it —
-            # that subtree is the cached one and never re-executes)
-            live = plan.split("InMemoryRelation", 1)[0]
-            assert "Generate" not in live, plan  # explode = re-annotation
-        got = sorted(adm.toPandas()["doc_id"]) + sorted(rej.toPandas()["doc_id"])
-        assert got == [1, 3, 0, 2]
-        # admitted + rejected partition the input exactly
-        assert (rej.toPandas()["reject_reason"].isin(
-            ["too_few_tokens", "top_token_frac", "dup_bigram_frac"]).all())
-        # r6 advice: idempotence is keyed on the threshold metadata, not
-        # bare column presence — different thresholds must raise, never
-        # silently gate on the stale verdicts
-        with pytest.raises(ValueError, match="different thresholds"):
-            quality_gate(ann, min_tokens=3)
-    finally:
-        ann.unpersist()
-
-
-def test_quality_annotate_rejects_foreign_reject_reason_column(spark):
-    """Source data that coincidentally carries a reject_reason column
-    (no quality_annotate metadata) must raise, not pass through as if
-    annotated."""
-    from swingstream.operators.textquality import quality_annotate
-
-    docs = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": [1], "text": ["hello there"], "reject_reason": ["spam"]}
-    ))
-    with pytest.raises(ValueError, match="did not produce"):
-        quality_annotate(docs)
-
-
-def test_quality_annotate_metadata_survives_parquet(spark, tmp_path):
-    """The threshold pin must survive a parquet round trip, so a
-    persisted annotated corpus re-gates cheaply across jobs."""
-    from swingstream.operators.textquality import quality_annotate, quality_gate
-
-    docs = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": [1, 2], "text": ["one fine document", "x"]}
-    ))
-    p = str(tmp_path / "ann")
-    quality_annotate(docs, min_tokens=2).write.parquet(p)
-    back = spark.read.parquet(p)
-    # same thresholds: passes through (one row rejected at the gate)
-    assert quality_gate(back, min_tokens=2).count() == 1
-    with pytest.raises(ValueError, match="different thresholds"):
-        quality_gate(back, min_tokens=4)
-
-
-def test_quality_gate_mask_patterns_extends_to_canonical_set(spark):
-    """mask_patterns lets the gate mask the full canonical PII set
-    (adds IPv4) while the default stays the golden-pinned email/phone
-    pair."""
-    import pandas as pd
-
-    from swingstream.operators.pii import PII_PATTERNS
-    from swingstream.operators.textquality import quality_gate
-
+def test_quality_gate_labels_every_row_and_masks_only_admitted(spark):
+    """The gate_fn contract: every input row comes back with a
+    reject_reason — the first gate tripped, NULL when admitted — and only
+    admitted rows have their PII masked; a rejected row's text stays as
+    it arrived, for the quarantine audit."""
     pdf = pd.DataFrame(
         {
-            "doc_id": [0],
+            "doc_id": [0, 1, 2, 3],
             "text": [
-                "a perfectly ordinary document about mail a@b.io and "
-                "server 10.0.0.1 with plenty of normal words to pass "
-                "every quality threshold in the annotate stage today"
+                "spam spam spam spam spam spam",
+                "mail a@b.io or call +1 555-010-7788 today please",
+                "x",
+                "spam spam spam spam a@b.io spam spam",
             ],
         }
     )
-    df = spark.createDataFrame(pdf)
-    legacy = quality_gate(df).collect()[0].text
-    assert "|||EMAIL|||" not in legacy and "<EMAIL>" in legacy
-    assert "10.0.0.1" in legacy  # legacy pair does not mask IPs
-    full = quality_gate(
-        df, mask_patterns=[(p, ph) for _, p, ph in PII_PATTERNS]
-    ).collect()[0].text
-    assert "|||EMAIL|||" in full and "|||IP|||" in full
-    assert "10.0.0.1" not in full
+    got = (
+        quality_gate(spark.createDataFrame(pdf), min_tokens=2)
+        .toPandas().sort_values("doc_id").reset_index(drop=True)
+    )
+    assert list(got["reject_reason"]) == [
+        "top_token_frac", None, "too_few_tokens", "top_token_frac"
+    ]
+    assert got.loc[1, "text"] == "mail <EMAIL> or call <PHONE> today please"
+    rejected = got["reject_reason"].notna()
+    assert list(got.loc[rejected, "text"]) == list(pdf.loc[rejected, "text"])
