@@ -36,12 +36,7 @@ from pyspark.sql.types import (
 )
 
 from swingstream.config import SwingParams
-from swingstream.models.lasso import (
-    bootstrap_stability,
-    cv_select_alpha,
-    lasso_fista,
-    lasso_fista_multi,
-)
+from swingstream.models.lasso import bootstrap_stability, cv_select_alpha, lasso_fista
 from swingstream.models.permutation import permutation_zscores
 from swingstream.models.rf import extra_trees_importance
 
@@ -73,9 +68,14 @@ def _seed(group_key: str, win_start: int, target: int) -> int:
 
 
 def fit_design(
-    X: np.ndarray, y: np.ndarray, params: SwingParams, seed: int
+    X: np.ndarray,
+    y: np.ndarray,
+    params: SwingParams,
+    seed: int,
+    alpha: float | None = None,
 ) -> np.ndarray:
-    """One target's importance vector over the (G*K)-wide lagged design."""
+    """One target's importance vector over the (G*K)-wide lagged design:
+    rf, plsr, or the Lasso at the target's ``alpha`` (permutation refits)."""
     if params.method == "rf":
         return extra_trees_importance(
             X, y, n_trees=params.n_trees, max_depth=params.max_depth, seed=seed
@@ -84,10 +84,8 @@ def fit_design(
         from swingstream.models.plsr import plsr_vip
 
         return plsr_vip(X, y)
-    alpha = params.alpha
-    if alpha is None:
-        alpha = cv_select_alpha(X, y, n_alphas=params.n_alphas)
-    return np.abs(lasso_fista(X, y, alpha, max_iter=params.solver_max_iter))
+    beta = lasso_fista(X, y[:, None], alpha, max_iter=params.solver_max_iter)
+    return np.abs(beta[:, 0])
 
 
 def score_design(
@@ -116,43 +114,38 @@ def score_design(
     feat_idx = np.tile(np.arange(G), K)            # i per column
     lag_arr = np.repeat(np.asarray(lags, dtype=np.int32), G)
     parent_arr = np.asarray(names, dtype=object)[feat_idx]
-    # fast path: fixed-alpha Lasso with no resampling shares one
-    # matrix-valued FISTA across all G targets (same design matrix)
-    multi_imp = None
-    if (
-        p.method == "lasso"
-        and p.alpha is not None
-        and p.n_permutations == 0
-        and p.n_bootstraps == 0
-    ):
-        multi_imp = np.abs(
-            lasso_fista_multi(X, Y, p.alpha, max_iter=p.solver_max_iter)
-        )  # (p, G)
+    # Lasso: one alpha per target (fixed, or CV over each target's grid)
+    # and one solver call for all G targets of the shared design
+    alphas = imps = None
+    if p.method == "lasso":
+        alphas = (
+            np.full(G, p.alpha)
+            if p.alpha is not None
+            else cv_select_alpha(X, Y, n_alphas=p.n_alphas)
+        )
+        imps = np.abs(lasso_fista(X, Y, alphas, max_iter=p.solver_max_iter))
 
-    # r8: the blake2b seed feeds only the non-multi fit path and the
-    # permutation/bootstrap resamplers — on the hot fixed-alpha path it
-    # was pure per-target overhead (one digest per (window, target):
-    # ~450k calls per bench stream run).  Compute it only when consumed;
-    # the value is unchanged where it is consumed.
-    needs_seed = multi_imp is None or p.n_permutations > 0 or p.n_bootstraps > 0
+    # the blake2b seed feeds rf and the permutation/bootstrap resamplers
+    # only — compute it only where it is consumed
+    needs_seed = p.method != "lasso" or p.n_permutations > 0 or p.n_bootstraps > 0
     imp_rows, z_rows, p_rows, s_rows, child_rows, masks = [], [], [], [], [], []
     for j in range(G):
         y = Y[:, j]
         seed = _seed(group_key, win_start, j) if needs_seed else 0
-        if multi_imp is not None:
-            imp = multi_imp[:, j]
+        alpha = None if alphas is None else alphas[j]
+        if imps is not None:
+            imp = imps[:, j]
         elif y.std() == 0.0:
             imp = np.zeros(X.shape[1])
         else:
             imp = fit_design(X, y, p, seed)
         zs = ps = stab = None
         if p.n_permutations > 0 and y.std() > 0.0:
-            fitf = lambda Xp, yp: fit_design(Xp, yp, p, seed)
+            fitf = lambda Xp, yp: fit_design(Xp, yp, p, seed, alpha)
             zs, ps = permutation_zscores(
                 X, y, imp, fitf, n_permutations=p.n_permutations, seed=seed
             )
         if p.n_bootstraps > 0 and p.method == "lasso" and y.std() > 0.0:
-            alpha = p.alpha if p.alpha is not None else cv_select_alpha(X, y)
             stab = bootstrap_stability(
                 X, y, alpha, n_bootstraps=p.n_bootstraps, seed=seed
             )

@@ -10,9 +10,9 @@ plans:
 
 * ``repetition_stats`` — per-document duplicate-token/bigram fractions
   (the Gopher "repetition" quality gates).  Explode-based: tokens are
-  exploded once, aggregated by (doc_id[, token]) — uniform shuffle
-  keys, no per-row quadratic HOFs, window only WITHIN a document
-  (bounded partitions), so the shape survives 100× scale-up.
+  exploded once, aggregated by (doc_id, token) then doc_id — uniform
+  shuffle keys, no per-row quadratic HOFs, window only WITHIN a
+  document (bounded partitions), so the shape survives 100× scale-up.
 * ``boilerplate_ngrams`` — corpus-wide template-phrase profile: token
   n-grams ranked by document frequency.  One explode + one hash
   aggregate on the n-gram string; top-k compiles to TakeOrderedAndProject
@@ -57,44 +57,46 @@ def repetition_stats(
     * ``dup_bigram_frac`` — 1 − distinct_bigrams / total_bigrams
       (0.0 when fewer than 2 tokens).
 
-    Shape: one explode, aggregates keyed on (doc_id[, token]) — both
-    uniform — and a lag window PARTITIONED by doc_id (documents bound
-    the partition, never the corpus).  A template-farm corpus skews
-    the token key only per-document, not globally.
+    Shape: one tokenize + explode (outer, so token-less documents keep
+    their row) and one read of ``docs``; a lead window PARTITIONED by
+    doc_id (documents bound the partition, never the corpus) gives each
+    token its successor, then aggregates keyed on (doc_id, token) and
+    doc_id — all clustered on doc_id, so one shuffle.  Tokens hold no
+    whitespace, so a document's distinct bigrams are the sum over its
+    distinct tokens of their distinct successors.
     """
-    toks = docs.select(
-        id_col, F.posexplode(_tokens(F.col(text_col))).alias("pos", "tok")
-    )
-    per_tok = toks.groupBy(id_col, "tok").agg(F.count("*").alias("c"))
-    top = per_tok.groupBy(id_col).agg(
-        F.max("c").alias("max_c"), F.sum("c").alias("n_tokens")
-    )
     w = Window.partitionBy(id_col).orderBy("pos")
-    bigrams = (
-        toks.withColumn("nxt", F.lead("tok").over(w))
-        .where(F.col("nxt").isNotNull())
-        .select(id_col, F.concat_ws(" ", "tok", "nxt").alias("bigram"))
+    per_tok = (
+        docs.select(
+            id_col,
+            F.posexplode_outer(_tokens(F.col(text_col))).alias("pos", "tok"),
+        )
+        .withColumn("nxt", F.lead("tok").over(w))
+        .groupBy(id_col, "tok")
+        .agg(
+            F.count("tok").alias("c"),
+            F.count("nxt").alias("c_next"),
+            F.count_distinct("nxt").alias("d_next"),
+        )
     )
-    big = bigrams.groupBy(id_col).agg(
-        F.count("*").alias("n_bigrams"),
-        F.count_distinct("bigram").alias("n_distinct_bigrams"),
-    )
+    n_tokens = F.col("n_tokens")
+    n_bigrams = F.col("n_bigrams")
     return (
-        docs.select(id_col)
-        .join(top, id_col, "left")
-        .join(big, id_col, "left")
+        per_tok.groupBy(id_col)
+        .agg(
+            F.max("c").alias("max_c"),
+            F.sum("c").alias("n_tokens"),
+            F.sum("c_next").alias("n_bigrams"),
+            F.sum("d_next").alias("n_distinct_bigrams"),
+        )
         .select(
             id_col,
-            F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
-            F.when(
-                F.coalesce("n_tokens", F.lit(0)) > 0,
-                F.col("max_c") / F.col("n_tokens"),
-            )
+            n_tokens.cast("long").alias("n_tokens"),
+            F.when(n_tokens > 0, F.col("max_c") / n_tokens)
             .otherwise(F.lit(0.0))
             .alias("top_token_frac"),
             F.when(
-                F.coalesce("n_bigrams", F.lit(0)) > 0,
-                1.0 - F.col("n_distinct_bigrams") / F.col("n_bigrams"),
+                n_bigrams > 0, 1.0 - F.col("n_distinct_bigrams") / n_bigrams
             )
             .otherwise(F.lit(0.0))
             .alias("dup_bigram_frac"),

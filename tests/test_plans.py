@@ -71,6 +71,20 @@ def test_textquality_prunes_and_stays_jvm_side(spark):
         assert "Python" not in explain_str(df, "simple"), q.__name__
 
 
+def test_quality_gate_tokenizes_once(spark):
+    """The admission verdict tokenizes and explodes each document once
+    (one Generate) and reads its input twice: once for the repetition
+    stats, once for the join back that carries every column."""
+    from swingstream.operators.textquality import quality_gate
+
+    docs = spark.createDataFrame(
+        [(0, "a a b"), (1, "x y"), (2, ""), (3, "z")], "doc_id long, text string"
+    )
+    plan = quality_gate(docs)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bGenerate\b", plan)) == 1, plan
+    assert len(re.findall(r"\bScan\b", plan)) == 2, plan
+
+
 def test_gold_join_broadcasts(spark):
     from swingstream.fixtures import gen_series, plant_network
     from swingstream.operators.evaluate import label_edges

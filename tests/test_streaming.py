@@ -757,26 +757,31 @@ def test_streaming_canonical_url_dedup_matches_batch(spark, tmp_path):
     )
 
 
-def test_scoring_stream_matches_batch(spark, stream_dir, tmp_path):
+@pytest.mark.parametrize("alpha", [0.05, None])
+def test_scoring_stream_matches_batch(spark, stream_dir, tmp_path, alpha):
+    """Fixed alpha and the per-target CV alpha search."""
+    import dataclasses
+
     from swingstream.operators.features import densify_buckets
     from swingstream.pipeline import series_from_features, swing_edges
     from swingstream.streaming.pipeline import FEATURE_SCHEMA, run_feature_query
     from swingstream.streaming.state import run_scoring_query
 
+    params = dataclasses.replace(PARAMS, alpha=alpha)
     path, _ = stream_dir
     feat_table, _ = run_feature_query(
-        spark, path, str(tmp_path / "feat2"), str(tmp_path / "ck2"), PARAMS,
+        spark, path, str(tmp_path / "feat2"), str(tmp_path / "ck2"), params,
         max_files_per_trigger=2,
     )
     edges_table = run_scoring_query(
         spark, feat_table.data_dir, str(tmp_path / "edges"), str(tmp_path / "ck3"),
-        PARAMS, list(PARAMS.feature_names),
+        params, list(params.feature_names),
     )
     stream_edges = edges_table.read(spark).toPandas()
     # batch twin over the SAME staged features
     feats = feat_table.read(spark, FEATURE_SCHEMA)
     batch_edges = swing_edges(
-        series_from_features(densify_buckets(feats, PARAMS)), PARAMS
+        series_from_features(densify_buckets(feats, params)), params
     ).toPandas()
     key = ["group_key", "win_start", "parent", "child", "lag"]
     a = stream_edges.sort_values(key).reset_index(drop=True)
