@@ -1,8 +1,30 @@
-"""Wiring of the session factory's worker settings."""
+"""Wiring of the session factory's worker and driver-JVM settings."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+SESSION = """
+import json
+
+from pyspark import SparkContext
+
+from swingstream.session import get_spark
+
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+spark.range(10).count()
+pid = SparkContext._gateway.proc.pid
+with open(f"/proc/{pid}/maps") as fh:
+    maps = sorted({ln.split()[-1] for ln in fh if "swingstream-cds" in ln})
+print("RESULT " + json.dumps({"pid": pid, "maps": maps}), flush=True)
+"""
 
 
 def test_workers_use_stat_checked_zip_importers(spark):
@@ -29,3 +51,37 @@ def test_workers_use_stat_checked_zip_importers(spark):
             .mapInPandas(zip_finder_classes, "names string").collect())
     assert len(rows) == 4
     assert {r["names"] for r in rows} == {"StatCheckedZipImporter"}
+
+
+def test_second_session_maps_the_class_archive(tmp_path):
+    """A local session's JVM dumps its classes at exit, and the next
+    session's JVM maps that archive.  Both run as their own processes,
+    with the temp dir and the driver java options set as the benchmark
+    sets them."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp), SWINGSTREAM_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
+               PYSPARK_SUBMIT_ARGS=(f"--driver-java-options "
+                                    f"-Djava.io.tmpdir={tmp} pyspark-shell"))
+    env.pop("SPARK_CONF_DIR", None)
+    cache = tmp / "swingstream-cds"
+
+    def session():
+        proc = subprocess.run([sys.executable, "-c", SESSION], env=env,
+                              capture_output=True, text=True, timeout=300,
+                              cwd=tmp_path)
+        lines = proc.stdout.splitlines()
+        assert lines and lines[-1].startswith("RESULT "), (
+            f"{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}")
+        return json.loads(lines[-1][len("RESULT "):])
+
+    first = session()
+    assert first["maps"] == []
+    # the dumping JVM exited before its session's process did
+    assert not os.path.exists(f"/proc/{first['pid']}")
+    published = sorted(n for n in os.listdir(cache)
+                       if n.endswith((".jsa", ".part")))
+    assert len(published) == 1 and published[0].endswith(".jsa"), published
+    assert session()["maps"] == [str(cache / published[0])]

@@ -32,10 +32,13 @@ params = SwingParams(window_width=6, step_size=1, min_lag=1, max_lag=2,
                      method="lasso", alpha=0.05)
 out = pages_pipeline(pages, params, salted=True).collect()
 conf = spark.sparkContext.getConf()
+runtime = spark.sparkContext._jvm.java.lang.management.ManagementFactory
 print("RESULT " + json.dumps({
     "rows": len(out), "cols": sorted(out[0].asDict().keys()),
     "daemon": conf.get("spark.python.daemon.module"),
-    "worker_path": conf.get("spark.executorEnv.PYTHONPATH")}))
+    "worker_path": conf.get("spark.executorEnv.PYTHONPATH"),
+    "default_java_options": conf.get("spark.driver.defaultJavaOptions", ""),
+    "jvm_args": list(runtime.getRuntimeMXBean().getInputArguments())}))
 """
 
 
@@ -75,3 +78,8 @@ def test_spark_submit_py_files(tmp_path):
     # shipped zip: the job runs in tmp_path, outside any checkout
     assert res["daemon"] == "swingstream.pydaemon"
     assert str(zip_path) in res["worker_path"].split(os.pathsep)
+    # spark-submit started the JVM before get_spark ran: no class-data-
+    # sharing archive, in the conf or in the JVM's own arguments
+    for arg in [res["default_java_options"]] + res["jvm_args"]:
+        assert "SharedArchiveFile" not in arg, arg
+        assert "ArchiveClassesAtExit" not in arg, arg
