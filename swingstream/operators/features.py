@@ -189,23 +189,14 @@ def host_bucket_features(
 
 
 def densify_buckets(features: DataFrame, params: SwingParams) -> DataFrame:
-    """Fill missing (group_key, bucket) slots with zero-vectors — but
-    ONLY within reach of a real bucket (the dead-span pin, mirrored by
-    streaming.state.emit_windows).
-
-    SWING assumes an evenly-sampled series; web hosts can go quiet for a
-    bucket — or for days.  Zero-filling a whole dark span is unbounded
-    work that scores meaningless all-zero windows, so fill is limited to
-    the slots some ELIGIBLE window (response span touches a real bucket)
-    can reference: [b - (w + max_lag - 1), b + (w - 1)] around each real
-    bucket b, clamped to the group's [lo, hi].  Overlapping reaches are
-    merged with a gaps-and-islands pass (two window functions + one
-    explode — no per-row fan-out, no driver loop); on gap-free data this
-    reduces to exactly the old full-range fill.
-
-    Output carries ``is_real`` so the scorer can apply the matching
-    eligibility rule (scoring.make_fit_fn drops windows with no real
-    response row).
+    """Fill missing (group_key, bucket) slots with zero-vectors, ONLY
+    within reach of a real bucket b: [b - (w + max_lag - 1), b + (w - 1)],
+    clamped to the group's [lo, hi] — the slots a window that
+    operators.scoring.window_designs scores can reference.  Overlapping
+    reaches merge in a gaps-and-islands pass (two window functions + one
+    explode, no driver loop).  Output carries ``is_real``.  Scoring does
+    not need this step: window_designs zero-fills gaps itself and drops
+    ``is_real = False`` rows; this is the relational twin of that fill.
     """
     from pyspark.sql import Window as W
 

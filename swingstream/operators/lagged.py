@@ -1,4 +1,8 @@
-"""Lagged design-matrix assembly (SURVEY.md §2.3 J1, §2.5 W2) — batch form.
+"""Lagged design rows in relational form (SURVEY.md §2.3 J1, §2.5 W2):
+`F.lag().over()` per (group_key, replicate) plus a per-window explode,
+all JVM-side, over DENSE bucket_idx.  Only the contract's
+q_lagged_design runs it, against a DuckDB replay; scoring builds its
+designs with operators.scoring.window_designs, one group per series.
 
 Canonical series schema consumed by the whole engine:
 
@@ -10,12 +14,6 @@ for DREAM4-style fixtures, group_key = network id and replicate = the
 biological replicate whose time restarts — SWING pools replicate rows
 into the same window's sample set
 [ref: Swing/Swing.py::__init__ replicate stacking ~L?].
-
-The reference builds the lagged design by pandas column-concat of
-window n-k slices [ref: Swing/util/utility_module.py::
-get_explanatory_indices ~L?]; here it is `F.lag().over()` per
-(group_key, replicate) — a single shuffle by key, then window exec, all
-JVM-side.  Requires DENSE bucket_idx (densify_buckets upstream).
 """
 
 from __future__ import annotations
@@ -40,9 +38,8 @@ def explode_windows(lagged: DataFrame, params: SwingParams) -> DataFrame:
 
     Window starts are bucket indices ≡ 0 (mod step_size); a row at
     bucket t belongs to windows starting in [t-w+1, t].  Emitted rows
-    carry `win_start`; completeness (w rows per replicate, all lags
-    non-null) is enforced at fit time.  Fan-out = ceil(w/s) rows per
-    input row — the batch analogue of the streaming sliding window.
+    carry `win_start`; completeness is not applied here.  Fan-out =
+    ceil(w/s) rows per input row.
     """
     w, s = params.window_width, params.step_size
     starts = F.sequence(

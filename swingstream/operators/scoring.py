@@ -1,4 +1,5 @@
-"""Per-(group, window) regression scoring — the engine's one grouped-map UDF.
+"""SWING window scoring: the window rules and the regression core, once
+for the batch and the stream.
 
 Reference semantics [ref: Swing/Swing.py::fit_windows ~L?] →
 [ref: Swing/RFRWindow.py::get_coeffs ~L?] / [ref:
@@ -10,17 +11,19 @@ decrease.  Optional permutation z-scores [ref:
 Window.run_permutation_test ~L?] and Lasso bootstrap stability
 [ref: LassoWindow.run_bootstrap ~L?].
 
-Spark form: `groupBy(group_key, win_start).applyInPandas(fit, EDGE_SCHEMA)`
-(SURVEY.md §2.4 A1, §2.9 U1/U6).  Arrow moves one array column per lag;
-all math is numpy inside the worker.  Determinism pins (§4.3 #1): rows
-sorted by (replicate, bucket_idx) before fitting; every random draw
-seeded from blake2b(group_key, win_start, target).
+``window_designs`` builds each window's design from per-replicate sparse
+buffers and ``score_design`` scores it: the stream passes one host's
+buffer (streaming.state.emit_windows), the batch each whole series in
+one ``groupBy(group_key).applyInPandas`` group (``score_windows``), so a
+bucket crosses the shuffle once (SURVEY.md §2.4 A1, §2.9 U1/U6).
+Determinism pins (§4.3 #1): rows sorted by (replicate, bucket_idx)
+before fitting; every random draw seeded from blake2b(group_key,
+win_start, target).
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -97,15 +100,10 @@ def score_design(
     params: SwingParams,
     names: list[str],
 ) -> dict[str, list]:
-    """Shared numpy scoring core — the SINGLE implementation both the
-    batch applyInPandas path and the streaming applyInPandasWithState
-    path call, so batch and stream emit byte-identical edge rows for the
-    same design (t3 parity requirement, BASELINE.json exactly-once
-    output matching).
-
-    X: (n, G*K) lagged design, column k_idx*G + i = feature i at
-    lags[k_idx]; Y: (n, G) responses.
-    """
+    """One window's edge rows: the numpy core every window of the batch
+    and the stream goes through, after window_designs built its X, the
+    (n, G*K) lagged design (column k_idx*G + i = feature i at
+    lags[k_idx]), and Y, the (n, G) responses."""
     p = params
     lags = list(p.lags)
     G = len(names)
@@ -198,54 +196,104 @@ def score_design(
     return out
 
 
-def make_fit_fn(
-    params: SwingParams, feature_names: tuple[str, ...] | None = None
-) -> Callable[[tuple, pd.DataFrame], pd.DataFrame]:
-    names = list(feature_names or params.feature_names)
-    lags = list(params.lags)
-    w = params.window_width
-    p = params
+def window_designs(
+    reps: list[tuple[list[int], list]],
+    params: SwingParams,
+    after: int | None = None,
+) -> tuple[list[tuple[int, int, np.ndarray, np.ndarray]], int | None]:
+    """The SWING window rules, once for the batch and the stream.
 
-    def fit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        group_key, win_start = str(key[0]), int(key[1])
-        empty = pd.DataFrame(
-            {f.name: pd.Series(dtype="object") for f in EDGE_SCHEMA.fields}
-        )
-        # dead-span pin (densify_buckets / state.emit_windows twin): a
-        # window whose response rows are ALL zero-filled slots is not a
-        # real observation window — emit nothing
-        if "is_real" in pdf.columns and not pdf["is_real"].any():
-            return empty
-        lag_cols = [f"lag_{k}" for k in lags]
-        pdf = pdf.sort_values(["replicate", "bucket_idx"], kind="stable")
-        mask = pdf[lag_cols].notna().all(axis=1)
-        pdf = pdf[mask]
-        if len(pdf) == 0:
-            return empty
-        # complete replicates only: exactly w in-window rows each
-        sizes = pdf.groupby("replicate", sort=False)["bucket_idx"].transform("size")
-        pdf = pdf[sizes == w]
-        if len(pdf) < 3:
-            return empty
-        start_rows = pdf[pdf["bucket_idx"] == win_start]
-        if len(start_rows) == 0:
-            return empty
-        win_start_ts = start_rows["bucket_ts"].iloc[0]
-        Y = np.stack(pdf["features"].to_numpy())  # (n, G)
-        X = np.concatenate(
-            [np.stack(pdf[c].to_numpy()) for c in lag_cols], axis=1
-        )  # (n, G*K); column k_idx*G + i = feature i at lag lags[k_idx]
-        out = score_design(group_key, win_start, win_start_ts, X, Y, p, names)
-        return pd.DataFrame(out)
+    ``reps``: one sparse buffer ``(idx, feats)`` per replicate, in
+    replicate order, holding REAL buckets only (``idx`` ascending, G
+    doubles each).  Window n starts on the step grid (n % s == 0) and
+    responds over [n, n + w - 1].  Replicate r, with real buckets in
+    [lo_r, hi_r], joins window n iff n - k_max >= lo_r, n + w - 1 <= hi_r
+    (completeness) and a real bucket of r lies in the response span (the
+    dead-span rule: candidates come from the real buckets, so a dark span
+    costs nothing).  Gaps inside a joined span are zero-filled locally;
+    the joined rows are pooled replicate-major, and a window with fewer
+    than 3 of them is decided but not scored.  Only starts after
+    ``after`` (the stream's max_emitted) are considered.
 
-    return fit
+    Returns one ``(n, r0, X, Y)`` per scored window in start order (r0 the
+    first pooled replicate, X the (rows, G*K) design with column
+    k_idx*G + i = feature i at lags[k_idx], Y the (rows, G) responses),
+    and the largest start decided, or None.
+    """
+    w, s, kmax, lags = params.window_width, params.step_size, params.max_lag, params.lags
+    joins: dict[int, list[int]] = {}  # window start -> replicates joining it
+    for r, (idx, _) in enumerate(reps):
+        if not idx:
+            continue
+        first, last = idx[0] + kmax, idx[-1] - w + 1
+        starts: set[int] = set()
+        for b in idx:
+            n0 = max(b - w + 1, first)
+            starts.update(range(n0 + (-n0) % s, min(b, last) + 1, s))
+        for n in starts:
+            if after is None or n > after:
+                joins.setdefault(n, []).append(r)
+    lookups = [dict(zip(idx, feats)) for idx, feats in reps]
+    designs = []
+    for n in sorted(joins):
+        if len(joins[n]) * w < 3:
+            continue
+        xs, ys = [], []
+        for r in joins[n]:
+            zero = [0.0] * len(reps[r][1][0])
+            block = np.asarray(
+                [lookups[r].get(i, zero) for i in range(n - kmax, n + w)],
+                dtype=np.float64,
+            )
+            ys.append(block[kmax:])
+            xs.append(np.concatenate([block[kmax - k : kmax - k + w] for k in lags], axis=1))
+        designs.append((n, joins[n][0], np.concatenate(xs), np.concatenate(ys)))
+    return designs, max(joins, default=None)
+
+
+def _emit_frame(scored: list[dict[str, list]]) -> pd.DataFrame:
+    """ONE DataFrame per group call from the per-window scored dicts,
+    its columns concatenated as arrays (r8: 65 ms, against 281 ms for a
+    pd.concat of per-window frames, for a 350-window host batch)."""
+    if not scored:
+        return pd.DataFrame(columns=EDGE_SCHEMA.fieldNames())
+    cols: dict[str, object] = {}
+    for k in scored[0]:
+        vals = [r[k] for r in scored]
+        if isinstance(vals[0], np.ndarray):
+            cols[k] = np.concatenate(vals)
+        else:  # win_start_ts: plain python lists of Timestamps
+            cols[k] = [x for v in vals for x in v]
+    return pd.DataFrame(cols)
 
 
 def score_windows(
-    windowed: DataFrame,
+    series: DataFrame,
     params: SwingParams,
     feature_names: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """groupBy(group_key, win_start) -> applyInPandas regression scoring."""
-    fit = make_fit_fn(params, feature_names)
-    return windowed.groupBy("group_key", "win_start").applyInPandas(fit, EDGE_SCHEMA)
+    """Canonical series -> per-window edge rows, one
+    ``groupBy(group_key).applyInPandas`` call per whole series.  Rows
+    sorted by (replicate, bucket_idx) feed ``window_designs``, less the
+    ``is_real = False`` rows (densify_buckets' filled slots).  win_start_ts
+    is the first pooled replicate's start-row bucket_ts, or n·Δ at a gap."""
+    names = list(feature_names or params.feature_names)
+    d = params.delta_seconds
+
+    def fit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        if "is_real" in pdf.columns:
+            pdf = pdf[pdf["is_real"]]
+        pdf = pdf.sort_values(["replicate", "bucket_idx"], kind="stable")
+        reps, stamps = [], []
+        for _, rep in pdf.groupby("replicate", sort=False):
+            idx = rep["bucket_idx"].tolist()
+            reps.append((idx, list(rep["features"])))
+            stamps.append(dict(zip(idx, rep["bucket_ts"])))
+        return _emit_frame([
+            score_design(str(key[0]), n,
+                         stamps[r].get(n, pd.Timestamp(n * d, unit="s")),
+                         X, Y, params, names)
+            for n, r, X, Y in window_designs(reps, params)[0]
+        ])
+
+    return series.groupBy("group_key").applyInPandas(fit, EDGE_SCHEMA)

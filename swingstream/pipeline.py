@@ -1,14 +1,15 @@
 """Batch SWING pipeline — end-to-end composition (SURVEY.md §3.4 batch twin).
 
-    pages ──host_bucket_features──> canonical series ──with_lags──>
-    explode_windows ──score_windows──> edge table ──rank_edges──>
-    ranked adjacency list
+    pages ──host_bucket_features──> canonical series ──score_windows──>
+    edge table ──rank_edges──> ranked adjacency list
 
 Mirrors the reference lifecycle [ref: Swing/Swing.py: zscore_all_data →
 create_windows → fit_windows → rank_edges → compile_roller_edges →
 make_sort_df ~L?] as one lazy Catalyst plan: two shuffles (feature agg
-by (host, bucket); scoring group by (group_key, win_start)) plus the
-final small rank aggregation.
+by (host, bucket); scoring group by group_key, each series whole) plus
+the final small rank aggregation.  The windows, their gap zero-fill and
+the dead-span rule are built inside the scoring group
+(scoring.window_designs), as the stream builds them.
 """
 
 from __future__ import annotations
@@ -17,16 +18,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from swingstream.config import SwingParams
-from swingstream.operators.features import densify_buckets, host_bucket_features
-from swingstream.operators.lagged import explode_windows, with_lags
+from swingstream.operators.features import host_bucket_features
 from swingstream.operators.ranking import rank_edges, rank_edges_sparse
 from swingstream.operators.scoring import score_windows
 
 
 def series_from_features(features: DataFrame) -> DataFrame:
     """(group_key, bucket_idx, bucket_ts, features[, is_real]) ->
-    canonical series; is_real (densify_buckets' dead-span marker) rides
-    along when present so the scorer can skip ineligible windows."""
+    canonical series; is_real (densify_buckets' marker) rides along when
+    present so the scorer can drop the zero-filled slots."""
     cols = ["group_key", F.lit("").alias("replicate"), "bucket_idx", "bucket_ts"]
     if "is_real" in features.columns:
         cols.append("is_real")
@@ -60,9 +60,7 @@ def swing_batch(
     closed-form sparse rank aggregation — feeding them to dense
     rank_edges would silently rank sentinel rows as edges.
     """
-    lagged = with_lags(series, params)
-    windowed = explode_windows(lagged, params)
-    edges = score_windows(windowed, params, feature_names)
+    edges = score_windows(series, params, feature_names)
     if params.emit_zero_edges:
         return rank_edges(edges, params)
     return rank_edges_sparse(edges, params, feature_names)
@@ -74,8 +72,7 @@ def swing_edges(
     feature_names: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Canonical series -> per-window edge table (pre-aggregation)."""
-    return score_windows(explode_windows(with_lags(series, params), params),
-                         params, feature_names)
+    return score_windows(series, params, feature_names)
 
 
 def pages_pipeline(
@@ -83,8 +80,7 @@ def pages_pipeline(
 ) -> DataFrame:
     """Full batch pipeline from the raw pages table."""
     feats = host_bucket_features(pages, params, salted=salted)
-    dense = densify_buckets(feats, params)
-    return swing_batch(series_from_features(dense), params)
+    return swing_batch(series_from_features(feats), params)
 
 
 def session_series_batch(pages: DataFrame, params: SwingParams) -> DataFrame:

@@ -21,6 +21,7 @@ import tempfile
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+from pyspark.util import _parse_memory
 
 # State partition count is frozen at the first checkpoint — pin it here
 # (SURVEY.md §4.3 pin #2).  64 covers local[8]..local[32] and a real
@@ -58,16 +59,18 @@ class _ClassArchive:
     the class metadata an earlier session's JVM loaded (``-Xshare:auto``,
     the default: a mismatch only loses the speed-up).  A miss has the JVM
     dump its classes at exit (``-XX:ArchiveClassesAtExit``) to a ``.part``
-    file, which ``publish`` renames into place at interpreter exit, once
-    that JVM has exited cleanly.  A published name carries the archive's
-    byte size, so a truncated archive is never handed to a JVM.  A miss
-    holds ``dump.lock`` until publication: one JVM dumps at a time, and a
-    session that loses the race runs without an archive.
+    file, which ``publish`` renames into place once that JVM has exited
+    cleanly (``_end_jvm``, at interpreter exit).  A published name
+    carries the archive's byte size, so a truncated archive is never
+    handed to a JVM.  A miss holds ``dump.lock`` until publication: one
+    JVM dumps at a time, and a session that loses the race runs without
+    an archive.
 
     Archives live under ``<tempfile.gettempdir()>/swingstream-cds/``,
-    keyed on the JDK, the Spark jars and the conf dir; a dump clears
-    every other archive there.  The dump refuses a non-empty directory on
-    the classpath, and Spark's conf dir is on it even when it holds only
+    keyed on the JDK, the Spark jars, the conf dir and the heap's
+    compressed-oops mode; a dump clears every archive there but the
+    other mode's.  The dump refuses a non-empty directory on the
+    classpath, and Spark's conf dir is on it even when it holds only
     ``*.template`` files, so the JVM launches against the empty
     ``conf/`` inside the cache; a conf dir with real settings gets no
     archive, and is honoured.
@@ -78,7 +81,6 @@ class _ClassArchive:
     # and a hit whose classpath does not match logs why, to the JVM's
     # stdout, which is the Python driver's stdout.
     QUIET = "-Xlog:cds*=off"
-    DUMP_WAIT_S = 120  # a 187 MB dump took ~17 s at JVM exit
 
     def __init__(self, root: str, key: str, archive: str | None):
         self.root, self.key, self.lock = root, key, None
@@ -91,12 +93,10 @@ class _ClassArchive:
             self.java_options = f"-XX:SharedArchiveFile={archive} {self.QUIET}"
 
     @classmethod
-    def plan(cls) -> _ClassArchive | None:
-        """The archive for a JVM this process is about to launch, or None
-        when one is running already, the conf dir holds real settings,
-        or another process is dumping."""
-        if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
-            return None  # spark-submit, or an earlier session, started the JVM
+    def plan(cls, heap: str) -> _ClassArchive | None:
+        """The archive for the JVM this process is about to launch with a
+        ``heap`` (spark.driver.memory) heap, or None when the conf dir
+        holds real settings or another process is dumping."""
         root = os.path.join(tempfile.gettempdir(), "swingstream-cds")
         if any(c.isspace() or c in "\"'\\" for c in root):
             return None  # spark-submit splits the java options on these
@@ -107,13 +107,16 @@ class _ClassArchive:
         try:
             if any(not n.endswith(".template") for n in os.listdir(conf_dir)):
                 return None
-            key = cls.cache_key(java_home, os.path.join(spark_home, "jars"), conf_dir)
+            # a heap of 32 GB or more runs without compressed oops, and an
+            # archive dumped in one mode does not map in the other
+            big = _parse_memory(heap) >= 32 * 1024
+            key = cls.cache_key(java_home, os.path.join(spark_home, "jars"), conf_dir, big)
             os.makedirs(os.path.join(root, "conf"), exist_ok=True)
             archive = cls.published(root, key)
             if archive is not None:
                 return cls(root, key, archive)
             lock = os.open(os.path.join(root, "dump.lock"), os.O_RDWR | os.O_CREAT, 0o644)
-        except OSError:
+        except (OSError, ValueError):  # ValueError: a heap with no unit
             return None
         try:
             fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
@@ -124,10 +127,11 @@ class _ClassArchive:
         if archive is not None:
             os.close(lock)
             return cls(root, key, archive)
-        # no intact archive under this key: the rest are superseded,
-        # truncated, or parts whose dumper has gone
+        # no intact archive under this key: the rest, but the other
+        # mode's, are superseded, truncated, or parts whose dumper has gone
+        other = "coops-" if big else "nocoops-"
         for name in os.listdir(root):
-            if name.endswith((".jsa", ".part")):
+            if name.endswith((".jsa", ".part")) and not name.startswith(other):
                 with contextlib.suppress(OSError):
                     os.remove(os.path.join(root, name))
         plan = cls(root, key, None)
@@ -135,7 +139,9 @@ class _ClassArchive:
         return plan
 
     @staticmethod
-    def cache_key(java_home: str, jars_dir: str, conf_dir: str) -> str:
+    def cache_key(java_home: str, jars_dir: str, conf_dir: str, big_heap: bool) -> str:
+        """``<mode>-<digest>``: the mode names the compressed-oops
+        setting, so each mode's files are told apart by name."""
         h = hashlib.sha256(java_home.encode())
         with open(os.path.join(java_home, "release"), "rb") as fh:
             h.update(fh.read())
@@ -143,7 +149,7 @@ class _ClassArchive:
             st = os.stat(os.path.join(jars_dir, name))
             h.update(f"\0{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
         h.update(f"\0{conf_dir}".encode())
-        return h.hexdigest()[:16]
+        return ("nocoops-" if big_heap else "coops-") + h.hexdigest()[:16]
 
     @classmethod
     def archive_size(cls, path: str) -> int | None:
@@ -169,33 +175,22 @@ class _ClassArchive:
     @contextlib.contextmanager
     def launching(self):
         """Launch the JVM against the empty conf dir, then restore
-        ``os.environ``; a dump is published at interpreter exit."""
+        ``os.environ``."""
         saved = os.environ.get("SPARK_CONF_DIR")
         os.environ["SPARK_CONF_DIR"] = self.conf_dir
         try:
             yield
-        except BaseException:
-            self.release()
-            raise
         finally:
             if saved is None:
                 del os.environ["SPARK_CONF_DIR"]
             else:
                 os.environ["SPARK_CONF_DIR"] = saved
-        if self.part is not None:
-            atexit.register(self.publish, SparkContext._gateway.proc)
 
     def publish(self, proc: subprocess.Popen) -> None:
-        """End the dumping JVM if it still runs, then publish its archive
-        if it exited cleanly."""
+        """Publish a dumping JVM's archive once it has exited cleanly."""
+        if self.part is None:
+            return
         try:
-            if proc.poll() is None:
-                proc.stdin.close()  # the gateway JVM exits when its stdin closes
-                try:
-                    proc.wait(timeout=self.DUMP_WAIT_S)
-                except subprocess.TimeoutExpired:
-                    proc.kill()
-                    proc.wait()
             size = self.archive_size(self.part) if proc.returncode == 0 else None
             if size is not None:
                 os.replace(self.part, os.path.join(self.root, f"{self.key}-{size}.jsa"))
@@ -211,6 +206,33 @@ class _ClassArchive:
             self.lock = None
 
 
+JVM_EXIT_WAIT_S = 120  # a 187 MB class-archive dump took ~17 s at JVM exit
+
+
+def _end_jvm(proc: subprocess.Popen, archive: _ClassArchive | None) -> None:
+    """The one exit path of a driver JVM that ``get_spark`` launched, run
+    at interpreter exit: close its stdin (the gateway JVM exits when it
+    reads EOF there), wait for it, kill it on timeout, then publish its
+    class archive if it was dumping one.  The JVM is gone when the
+    Python process returns."""
+    try:
+        if SparkContext._active_spark_context is not None:
+            # a session left running: stop it first, or its accumulator
+            # server's connection reports the JVM's exit as an error
+            with contextlib.suppress(Exception):
+                SparkContext._active_spark_context.stop()
+        if proc.poll() is None:
+            proc.stdin.close()
+            try:
+                proc.wait(timeout=JVM_EXIT_WAIT_S)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+    finally:
+        if archive is not None:
+            archive.publish(proc)
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "swingstream",
@@ -224,6 +246,7 @@ def get_spark(
     # (batch feature agg measured 2.3x on 4x cores via /tmp, 3.1x via
     # tmpfs).  A real cluster has per-node NVMe — tmpfs is the faithful
     # stand-in, not a cheat (126 GiB available vs ~1 GiB shuffles).
+    driver_memory = os.environ.get("SWINGSTREAM_DRIVER_MEM", "8g")
     local_dir = os.environ.get(
         "SWINGSTREAM_LOCAL_DIR",
         "/dev/shm/swingstream-local" if os.path.isdir("/dev/shm") else "",
@@ -262,7 +285,7 @@ def get_spark(
             "false",
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SWINGSTREAM_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.sql.files.maxPartitionBytes", max_partition_bytes())
         # r8: Spark 4.1 turned on checkpoint-file checksums by default
         # (spark.sql.streaming.checkpoint.fileChecksum.enabled).  Each
@@ -282,6 +305,8 @@ def get_spark(
     if local_dir:
         b = b.config("spark.local.dir", local_dir)
     extra_conf = dict(extra_conf or {})
+    # spark-submit, or an earlier session, may have started the JVM already
+    launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
     archive = None
     if master == "local" or master.startswith("local["):
         # Worker daemon with stat-checked zip importers (pydaemon.py).
@@ -312,14 +337,21 @@ def get_spark(
         # places ahead of extraJavaOptions (--driver-java-options), so
         # they add to a caller's options rather than replace them.  A
         # cluster driver keeps the stock start.
-        archive = _ClassArchive.plan()
+        heap = extra_conf.get("spark.driver.memory", driver_memory)
+        archive = _ClassArchive.plan(heap) if launches else None
         if archive is not None:
             opts = extra_conf.get("spark.driver.defaultJavaOptions", "")
             extra_conf["spark.driver.defaultJavaOptions"] = " ".join(
                 o for o in (archive.java_options, opts) if o)
     for k, v in extra_conf.items():
         b = b.config(k, v)
-    with archive.launching() if archive else contextlib.nullcontext():
-        spark = b.getOrCreate()
+    try:
+        with archive.launching() if archive else contextlib.nullcontext():
+            spark = b.getOrCreate()
+    finally:
+        if launches and SparkContext._gateway is not None:
+            atexit.register(_end_jvm, SparkContext._gateway.proc, archive)
+        elif archive is not None:
+            archive.release()  # no JVM came up to dump
     spark.sparkContext.setLogLevel(os.environ.get("SWINGSTREAM_LOG_LEVEL", "ERROR"))
     return spark

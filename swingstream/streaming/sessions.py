@@ -47,12 +47,12 @@ from pyspark.sql.types import (
 
 from swingstream.config import SwingParams
 from swingstream.operators.features import _partials, feature_vector
+from swingstream.operators.scoring import _emit_frame
 from swingstream.sources.catalog import IcebergLiteTable
 from swingstream.sources.pages import read_pages_stream
 from swingstream.streaming.pipeline import narrow_pages, start_ledger_query
 from swingstream.streaming.state import (
     _advance,
-    _emit_frame,
     drain_concurrent,
     start_scoring_query,
 )

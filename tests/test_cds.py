@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import struct
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -31,7 +34,7 @@ class FakeJvm:
 @pytest.fixture
 def install(tmp_path, monkeypatch):
     """A JDK, a Spark home holding two jars and a templates-only conf dir,
-    and the temp dir, all under tmp_path; no JVM running."""
+    and the temp dir, all under tmp_path; no JVM or session running."""
     java = tmp_path / "jdk"
     java.mkdir()
     (java / "release").write_text('JAVA_VERSION="17.0.1"\n')
@@ -49,6 +52,7 @@ def install(tmp_path, monkeypatch):
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
     monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
     return {"java": java, "spark": spark, "cache": tmp / "swingstream-cds"}
 
 
@@ -68,7 +72,7 @@ def test_key_follows_jdk_jars_and_conf_dir(install):
 
     def key(conf="conf"):
         return _ClassArchive.cache_key(java, str(spark / "jars"),
-                                       str(spark / conf))
+                                       str(spark / conf), False)
 
     base = key()
     assert key() == base
@@ -84,51 +88,41 @@ def test_key_follows_jdk_jars_and_conf_dir(install):
     assert key("conf2") != key()
 
 
-def test_cold_start_dumps_then_next_start_maps_the_archive(install,
-                                                           monkeypatch):
+def test_cold_start_dumps_then_next_start_maps_the_archive(install):
     env = dict(os.environ)
-    at_exit = []
-    monkeypatch.setattr(atexit, "register",
-                        lambda fn, *args: at_exit.append((fn, args)))
-    plan = _ClassArchive.plan()
+    plan = _ClassArchive.plan("8g")
     assert plan.java_options.startswith(f"-XX:ArchiveClassesAtExit={plan.part} ")
     with plan.launching():
         # the JVM launches against the empty conf dir inside the cache
         assert os.environ["SPARK_CONF_DIR"] == str(install["cache"] / "conf")
         assert os.listdir(os.environ["SPARK_CONF_DIR"]) == []
-        gateway = type("Gateway", (), {"proc": FakeJvm(0)})()
-        monkeypatch.setattr(SparkContext, "_gateway", gateway)
     assert dict(os.environ) == env
-    # publication waits for interpreter exit, when the JVM has dumped
-    [(publish, args)] = at_exit
-    assert args == (gateway.proc,)
-    dump(plan)
+    dump(plan)  # the JVM dumps as it exits
     assert archives(install) == [os.path.basename(plan.part)]
-    publish(*args)
+    plan.publish(FakeJvm(0))
     assert archives(install) == [f"{plan.key}-4096.jsa"]
 
-    monkeypatch.setattr(SparkContext, "_gateway", None)  # the next process
-    hit = _ClassArchive.plan()
+    hit = _ClassArchive.plan("8g")
     assert hit.java_options.startswith(
         f"-XX:SharedArchiveFile={install['cache'] / archives(install)[0]} ")
     assert hit.part is None and hit.lock is None
 
 
 def test_failed_or_partial_dump_is_never_handed_to_a_jvm(install):
-    plan = _ClassArchive.plan()
+    plan = _ClassArchive.plan("8g")
     dump(plan)
     plan.publish(FakeJvm(137))  # killed while dumping
     assert archives(install) == []
 
     # a part left by a dumper that died, and a published archive cut short
-    plan = _ClassArchive.plan()
+    plan = _ClassArchive.plan("8g")
     dump(plan)
     plan.release()  # its lock goes with its process
     with open(install["cache"] / f"{plan.key}.1.part", "wb") as fh:
         fh.write(struct.pack("=I", _ClassArchive.MAGIC).ljust(4096, b"\0"))
     with open(install["cache"] / f"{plan.key}-4096.jsa", "wb") as fh:
         fh.write(struct.pack("=I", _ClassArchive.MAGIC).ljust(1000, b"\0"))
-    fresh = _ClassArchive.plan()
+    fresh = _ClassArchive.plan("8g")
     assert "-XX:ArchiveClassesAtExit=" in fresh.java_options
     assert "SharedArchiveFile" not in fresh.java_options
     assert archives(install) == []  # the dumper cleared both
@@ -136,12 +130,12 @@ def test_failed_or_partial_dump_is_never_handed_to_a_jvm(install):
 
 
 def test_superseded_archive_is_deleted_by_the_next_dump(install):
-    plan = _ClassArchive.plan()
+    plan = _ClassArchive.plan("8g")
     dump(plan)
     plan.publish(FakeJvm(0))
     old = archives(install)
     (install["spark"] / "jars" / "c.jar").write_bytes(b"c")  # Spark upgrade
-    plan = _ClassArchive.plan()
+    plan = _ClassArchive.plan("8g")
     assert plan.part is not None
     assert archives(install) == []
     dump(plan, 8192)
@@ -150,13 +144,13 @@ def test_superseded_archive_is_deleted_by_the_next_dump(install):
 
 
 def test_racing_cold_starts_give_one_dumper(install):
-    first = _ClassArchive.plan()
-    second = _ClassArchive.plan()
+    first = _ClassArchive.plan("8g")
+    second = _ClassArchive.plan("8g")
     assert first.part is not None
     assert second is None  # runs without an archive while first dumps
     dump(first)
     first.publish(FakeJvm(0))
-    third = _ClassArchive.plan()
+    third = _ClassArchive.plan("8g")
     assert third.part is None and "SharedArchiveFile" in third.java_options
 
 
@@ -193,7 +187,7 @@ def test_local_session_launches_with_the_flags(install, builder):
     assert builder["env"]["SPARK_CONF_DIR"] == str(install["cache"] / "conf")
     assert dict(os.environ) == env
     # the failed launch gave up the dump: its lock and part are gone
-    fresh = _ClassArchive.plan()
+    fresh = _ClassArchive.plan("8g")
     assert fresh.part is not None
     fresh.release()
 
@@ -219,3 +213,95 @@ def test_no_flags_and_environ_untouched(install, builder, monkeypatch, case):
     assert builder["env"] == env and dict(os.environ) == env
     assert "spark.driver.defaultJavaOptions" not in builder
     assert not os.path.exists(install["cache"])
+
+
+def test_heap_modes_keep_their_own_archives(install):
+    """A heap of 32 GB or more runs without compressed oops, and an
+    archive dumped in one mode does not map in the other: each mode has
+    its own key, and one mode's dump keeps the other mode's archive."""
+    small = _ClassArchive.plan("8g")
+    dump(small)
+    small.publish(FakeJvm(0))
+    big = _ClassArchive.plan("48g")
+    assert big.key != small.key and big.part is not None  # a miss
+    assert archives(install) == [f"{small.key}-4096.jsa"]  # kept
+    dump(big, 8192)
+    big.publish(FakeJvm(0))
+    assert archives(install) == sorted([f"{small.key}-4096.jsa",
+                                        f"{big.key}-8192.jsa"])
+    for heap, name in (("8g", f"{small.key}-4096.jsa"), ("48g", f"{big.key}-8192.jsa")):
+        hit = _ClassArchive.plan(heap)
+        assert hit.part is None
+        assert hit.java_options.startswith(
+            f"-XX:SharedArchiveFile={install['cache'] / name} ")
+
+
+# A stand-in for the gateway JVM: it exits when its stdin closes, and
+# first writes the archive a -XX:ArchiveClassesAtExit flag names.
+FAKE_JVM = f"""
+import struct, sys
+sys.stdin.read()
+if len(sys.argv) > 1:
+    with open(sys.argv[1], "wb") as fh:
+        fh.write(struct.pack("=I", {_ClassArchive.MAGIC}).ljust(4096, b"\\0"))
+"""
+
+
+@pytest.fixture
+def launcher(monkeypatch):
+    """A session builder whose getOrCreate launches a fake JVM as the
+    gateway process (``seen["jvm"]``, the script it runs), and the exit
+    handlers registered with atexit."""
+    seen = {"at_exit": [], "jvm": FAKE_JVM}
+
+    class Builder:
+        def __getattr__(self, name):
+            return lambda *a: self
+
+        def config(self, k, v):
+            seen[k] = v
+            return self
+
+        def getOrCreate(self):
+            part = re.findall(r"-XX:ArchiveClassesAtExit=(\S+)",
+                              seen.get("spark.driver.defaultJavaOptions", ""))
+            proc = subprocess.Popen([sys.executable, "-c", seen["jvm"], *part],
+                                    stdin=subprocess.PIPE)
+            monkeypatch.setattr(SparkContext, "_gateway",
+                                type("Gateway", (), {"proc": proc})())
+            return type("Session", (), {"sparkContext": type(
+                "Context", (), {"setLogLevel": staticmethod(lambda level: None)})})()
+
+    monkeypatch.setattr("swingstream.session.SparkSession.builder", Builder())
+    monkeypatch.setattr(atexit, "register",
+                        lambda fn, *args: seen["at_exit"].append((fn, args)))
+    return seen
+
+
+def test_every_launched_jvm_ends_at_exit(install, launcher, monkeypatch):
+    """One exit path for every JVM get_spark launches: at interpreter
+    exit its stdin is closed and it is waited for; a dumping JVM's
+    archive is then published, and the next, non-dumping JVM ends the
+    same way."""
+    for expect_dump in (True, False):
+        launcher["at_exit"].clear()
+        get_spark(master="local[1]")
+        [(end, args)] = launcher["at_exit"]
+        proc = args[0]
+        assert proc is SparkContext._gateway.proc and proc.poll() is None
+        end(*args)  # interpreter exit
+        assert proc.returncode == 0
+        published = archives(install)
+        assert len(published) == 1 and published[0].endswith("-4096.jsa")
+        assert ("ArchiveClassesAtExit" in launcher[
+            "spark.driver.defaultJavaOptions"]) == expect_dump
+        monkeypatch.setattr(SparkContext, "_gateway", None)  # the next process
+
+
+def test_a_jvm_that_ignores_eof_is_killed(install, launcher, monkeypatch):
+    monkeypatch.setattr("swingstream.session.JVM_EXIT_WAIT_S", 0.5)
+    launcher["jvm"] = "import time\ntime.sleep(60)\n"
+    get_spark(master="spark://head:7077")  # no archive, still one exit path
+    [(end, args)] = launcher["at_exit"]
+    end(*args)
+    assert args[0].returncode is not None and args[0].returncode < 0

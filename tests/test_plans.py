@@ -102,6 +102,22 @@ def test_gold_join_broadcasts(spark):
     assert has_broadcast_join(label_edges(ranked, gold))
 
 
+def test_swing_edges_shuffles_each_series_once(spark):
+    """Batch scoring moves each series through one shuffle, whole, and
+    builds its windows inside the group: one Exchange, hash-partitioned
+    on group_key, and no per-window explode (Generate) or lag (Window)
+    node in the executed plan on the DREAM4-style fixture."""
+    from swingstream.contract import q_swing_edges
+
+    df = q_swing_edges(spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert re.findall(r"\bExchange (\w+)\((\w+)#", final) == [
+        ("hashpartitioning", "group_key")], final
+    assert not re.search(r"\b(Generate|Window)\b", final), final
+
+
 def test_lineitem_projection_prunes(spark):
     df = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_quantity")
     cols = read_schema_columns(df)

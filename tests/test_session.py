@@ -55,9 +55,9 @@ def test_workers_use_stat_checked_zip_importers(spark):
 
 def test_second_session_maps_the_class_archive(tmp_path):
     """A local session's JVM dumps its classes at exit, and the next
-    session's JVM maps that archive.  Both run as their own processes,
-    with the temp dir and the driver java options set as the benchmark
-    sets them."""
+    session's JVM maps that archive; neither JVM outlives its process.
+    Both run as their own processes, with the temp dir and the driver
+    java options set as the benchmark sets them."""
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     env = dict(os.environ, TMPDIR=str(tmp), SWINGSTREAM_DRIVER_MEM="1g",
@@ -84,4 +84,7 @@ def test_second_session_maps_the_class_archive(tmp_path):
     published = sorted(n for n in os.listdir(cache)
                        if n.endswith((".jsa", ".part")))
     assert len(published) == 1 and published[0].endswith(".jsa"), published
-    assert session()["maps"] == [str(cache / published[0])]
+    second = session()
+    assert second["maps"] == [str(cache / published[0])]
+    # the non-dumping JVM has exited too when its session's process returns
+    assert not os.path.exists(f"/proc/{second['pid']}")

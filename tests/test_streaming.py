@@ -918,24 +918,34 @@ def test_stream_stream_lagged_join_parity(spark, tmp_path):
     pd.testing.assert_frame_equal(a[key], b[key])
 
 
-def test_dark_host_bounded_state_and_parity(spark, tmp_path):
+@pytest.mark.parametrize("batch_input,width", [
+    ("densified", PARAMS.window_width),
+    ("sparse", PARAMS.window_width),
+    ("sparse", 2),
+], ids=["densified", "sparse", "w2"])
+def test_dark_host_bounded_state_and_parity(spark, tmp_path, batch_input, width):
     """A host dark for 1000 buckets: no dead-span windows are scored,
     state/work stays bounded, and stream == batch on the same staged
-    features (the dead-span pin, both sides)."""
+    features (the dead-span pin, both sides).  The batch side reads them
+    through densify_buckets or as staged; at w = 2 a window holds 2 rows,
+    under the 3 either side scores, so both sides emit nothing."""
+    import dataclasses
+
     from swingstream.operators.features import densify_buckets
     from swingstream.pipeline import series_from_features, swing_edges
     from swingstream.streaming.pipeline import FEATURE_SCHEMA
     from swingstream.streaming.state import run_scoring_query
 
+    params = dataclasses.replace(PARAMS, window_width=width)
     rng = np.random.default_rng(3)
-    g = len(PARAMS.feature_names)
+    g = len(params.feature_names)
     rows = []
     real = {"dark.example.com": list(range(0, 20)) + list(range(1020, 1040)),
             "steady.example.com": list(range(0, 30))}
     for host, buckets in real.items():
         for b in buckets:
             rows.append(
-                (host, b, pd.Timestamp(b * PARAMS.delta_seconds, unit="s"),
+                (host, b, pd.Timestamp(b * params.delta_seconds, unit="s"),
                  [float(x) for x in rng.normal(size=g)])
             )
     pdf = pd.DataFrame(rows, columns=["group_key", "bucket_idx", "bucket_ts",
@@ -949,27 +959,29 @@ def test_dark_host_bounded_state_and_parity(spark, tmp_path):
                           n_files=1)
     edges_table = run_scoring_query(
         spark, feat_table.data_dir, str(tmp_path / "edges"),
-        str(tmp_path / "ck"), PARAMS, list(PARAMS.feature_names),
+        str(tmp_path / "ck"), params, list(params.feature_names),
     )
     stream_edges = edges_table.read(spark).toPandas()
     feats = feat_table.read(spark, FEATURE_SCHEMA)
-    batch_edges = swing_edges(
-        series_from_features(densify_buckets(feats, PARAMS)), PARAMS
-    ).toPandas()
+    if batch_input == "densified":
+        feats = densify_buckets(feats, params)
+    batch_edges = swing_edges(series_from_features(feats), params).toPandas()
     key = ["group_key", "win_start", "parent", "child", "lag"]
     a = stream_edges.sort_values(key).reset_index(drop=True)
     b = batch_edges.sort_values(key).reset_index(drop=True)
+    if width < 3:  # one replicate gives a window w rows
+        assert len(a) == len(b) == 0
+        return
     assert len(a) == len(b) and len(a) > 0
     pd.testing.assert_frame_equal(a[key + ["importance", "win_start_ts"]],
                                   b[key + ["importance", "win_start_ts"]])
     # every scored window's response span touches a real bucket, so the
     # 1000-bucket dead span contributes ZERO windows (dense fill would
     # have scored ~1000)
-    w = PARAMS.window_width
     dark = a[a["group_key"] == "dark.example.com"]
     assert len(dark) > 0
     for n in dark["win_start"].unique():
-        span = set(range(int(n), int(n) + w))
+        span = set(range(int(n), int(n) + width))
         assert span & set(real["dark.example.com"]), n
     assert dark["win_start"].nunique() < 60
 
